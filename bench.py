@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -196,8 +197,8 @@ def main() -> None:
     ]
     timings: dict[str, float] = {}
     for name in names:
-        vals = sorted(p[name] for p in passes if p[name] >= 0)
-        timings[name] = vals[len(vals) // 2] if vals else -1.0
+        vals = [p[name] for p in passes if p[name] >= 0]
+        timings[name] = statistics.median(vals) if vals else -1.0
     pass_totals = [
         round(sum(t for t in p.values() if t >= 0), 3) for p in passes
     ]
@@ -213,13 +214,13 @@ def main() -> None:
     # run-pair delta in round 6 (reports/bench/NOTES.md "Host noise
     # floor") — a ratio inside that envelope is host noise, not a
     # regression.
-    ratios = sorted(
+    ratios = [
         t / prior[name]
         for name, t in timings.items()
         if t > 0 and prior.get(name, 0) > 0
-    )
+    ]
     noise_vs_prev = (
-        round(ratios[len(ratios) // 2], 3) if ratios else None
+        round(statistics.median(ratios), 3) if ratios else None
     )
 
     # ann_ivf_from_index gates the full build+persist+serve round-trip,

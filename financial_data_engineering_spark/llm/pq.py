@@ -4,8 +4,9 @@ an actual 100 TB ANN corpus holds in memory.
 Scalar int8 quantization (llm/quantize.py) cuts float32 storage 4×; PQ
 cuts it a further 4-8×: the ``dim``-long vector splits into ``m``
 contiguous subvectors, each subspace trains its own ``k``-centroid
-codebook (seeded deterministic Lloyd — the IVF coarse quantizer's
-machinery, per-subspace), and a vector is stored as ``m`` single-byte
+codebook (``lloyd_train`` in llm/similarity.py, the seeded
+deterministic Lloyd trainer of the IVF coarse quantizer, with one
+quantizer per subspace), and a vector is stored as ``m`` single-byte
 codes (here 8 bytes/vector vs 256 float32 bytes — 32×). Queries score
 the compressed corpus with asymmetric distance computation (ADC): a per
 (query, subspace, code) lookup table of query-subvector · centroid dot
@@ -22,7 +23,8 @@ bit-for-bit — the same contracts llm/similarity.py pins):
   relabeled 0..k-1 — no RNG.
 - Assignment: argmin Euclidean distance ROUNDED TO 9 DECIMALS before the
   argmin (a last-ulp float difference can never flip a winner), ties →
-  lowest code id. Same rule at every training iteration and at encode.
+  lowest code id. One function (``_assign_codes``) applies it at every
+  training iteration and at encode.
 - Centroid update: per-component sums of round(x·10⁶) longs — order-
   independent integer partials — divided once, so aggregation order
   can't perturb the mean. Empty cells keep their previous centroid.
@@ -31,12 +33,14 @@ bit-for-bit — the same contracts llm/similarity.py pins):
   exact BIGINT sum of ``m`` integers — associativity-proof on both
   engines.
 
-Scale shape: training is map-only Arrow passes emitting ~(partitions ×
-m × k) partial rows (the corpus never moves); encode is one map-only
-pass; scoring is a broadcast LUT join against the exploded code table
-(map-side) whose groupBy collapses the m-way blow-up in the partial
-aggregate, so the one shuffle carries ≈ |queries|·|corpus| ADC rows;
-the rerank joins float vectors for |queries|·pool rows only.
+Scale shape: training is one map-only Arrow pass per iteration for
+all ``m`` subspaces (and, in IVF-PQ, the coarse quantizer too),
+emitting ~(partitions × m × k) partial rows (the corpus never moves);
+encode is one map-only pass; scoring is a broadcast LUT join against
+the exploded code table (map-side) whose groupBy collapses the m-way
+blow-up in the partial aggregate, so the one shuffle carries
+≈ |queries|·|corpus| ADC rows; the rerank joins float vectors for
+|queries|·pool rows only.
 """
 
 from __future__ import annotations
@@ -49,8 +53,13 @@ from pyspark.sql.window import Window
 from financial_data_engineering_spark.functions.vectors import l2_norm_fixed
 from financial_data_engineering_spark.llm.caching import persist_tracked
 from financial_data_engineering_spark.llm.similarity import (
-    KMEANS_SCALE,
+    Quantizer,
+    _assign_codes,
     _pair_cos,
+    coarse_quantizer,
+    ivf_assignments,
+    lloyd_train,
+    vec_matrix,
 )
 
 #: Subspace count / per-subspace codebook size / Lloyd iterations for the
@@ -61,74 +70,14 @@ PQ_K = 16
 PQ_ITERS = 2
 
 
-def _sub_slices(np, vec_series, dim: int, m: int):
-    """(batch × m × sub_dim) float64 view of a vector column."""
-    mat = np.stack([np.asarray(v, dtype="float64") for v in vec_series])
-    return mat.reshape(len(mat), m, dim // m)
-
-
-def _assign_codes(np, subs, books):
-    """(batch × m) argmin-code matrix: per subspace, Euclidean distance to
-    each codebook centroid rounded to 9 decimals, argmin with ties →
-    lowest code id (np.argmin keeps the first minimum, ids ascend)."""
-    codes = np.empty(subs.shape[:2], dtype="int64")
-    for mi, cmat in enumerate(books):
-        d = np.round(
-            np.sqrt(((subs[:, mi, None, :] - cmat[None, :, :]) ** 2).sum(-1)),
-            9,
-        )
-        codes[:, mi] = np.argmin(d, axis=1)
-    return codes
-
-
-def _pq_partials(
-    corpus: DataFrame,
-    books,
-    *,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int,
-) -> DataFrame:
-    """One PQ-Lloyd iteration over ALL subspaces fused into a single
-    map-only Arrow pass: per batch, assign every subvector to its nearest
-    codebook entry and emit one row per present (subspace, code) cell with
-    (count, per-component sums of round(x·10⁶) longs). Integer partials
-    sum order-independently on the driver — bit-identical to a global
-    aggregate (the _cluster_partials contract, per-subspace)."""
-    import numpy as np
-
-    bmats = [np.asarray(b, dtype="float64") for b in books]
-    schema = T.StructType(
-        [
-            T.StructField("m", T.LongType()),
-            T.StructField("code", T.LongType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("sums", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            subs = _sub_slices(np, pdf[vec_col], dim, m)
-            codes = _assign_codes(np, subs, bmats)
-            s = subs * KMEANS_SCALE
-            scaled = (np.floor(np.abs(s) + 0.5) * np.sign(s)).astype("int64")
-            out: dict[str, list] = {"m": [], "code": [], "cnt": [], "sums": []}
-            for mi in range(m):
-                for c in np.unique(codes[:, mi]):
-                    mask = codes[:, mi] == c
-                    out["m"].append(mi)
-                    out["code"].append(int(c))
-                    out["cnt"].append(int(mask.sum()))
-                    out["sums"].append(scaled[mask, mi, :].sum(axis=0).tolist())
-            yield pd.DataFrame(out)
-
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema=schema)
+def pq_quantizers(dim: int, m: int, k: int, n_iters: int) -> list[Quantizer]:
+    """The ``m`` PQ subspace quantizers: ``k`` codes each over contiguous
+    ``dim // m``-component slices, assigned by rounded-Euclidean argmin."""
+    sub = dim // m
+    return [
+        Quantizer(mi * sub, (mi + 1) * sub, _assign_codes, k, n_iters)
+        for mi in range(m)
+    ]
 
 
 def pq_codebooks(
@@ -142,240 +91,12 @@ def pq_codebooks(
     dim: int = 64,
 ) -> list[list[list[float]]]:
     """Train the ``m`` per-subspace codebooks (each ``k`` centroids of
-    ``dim // m`` components) with deterministic seeded Lloyd. Returns
+    ``dim // m`` components) with :func:`lloyd_train`. Returns
     ``books[mi][code] -> centroid`` — k·dim floats total, control-plane
-    sized by construction. Only ~(partitions × m × k) partial rows reach
-    the driver per iteration; the corpus itself never moves."""
-    sub = dim // m
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    if len(rows) < 1:
-        raise ValueError("pq_codebooks: corpus has no vectors")
-    books = [
-        [[float(x) for x in r[vec_col]][mi * sub : (mi + 1) * sub] for r in rows]
-        for mi in range(m)
-    ]
-    for _ in range(n_iters):
-        partials = _pq_partials(
-            corpus, books, id_col=id_col, vec_col=vec_col, dim=dim, m=m
-        ).collect()
-        cells: dict[tuple[int, int], tuple[int, list[int]]] = {}
-        for r in partials:
-            key = (int(r["m"]), int(r["code"]))
-            cnt, sums = cells.get(key, (0, [0] * sub))
-            cells[key] = (
-                cnt + int(r["cnt"]),
-                [a + int(b) for a, b in zip(sums, r["sums"])],
-            )
-        books = [
-            [
-                [
-                    s / (KMEANS_SCALE * cells[(mi, ci)][0])
-                    for s in cells[(mi, ci)][1]
-                ]
-                if (mi, ci) in cells
-                else old
-                for ci, old in enumerate(book)
-            ]
-            for mi, book in enumerate(books)
-        ]
-    return books
-
-
-def _fused_partials(
-    corpus: DataFrame,
-    cents,
-    books,
-    *,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int,
-) -> DataFrame:
-    """One iteration of BOTH trainings fused into a single map-only
-    Arrow pass: coarse-quantizer cluster partials (kind=0 — the
-    _cluster_partials math, llm/similarity.py) and per-subspace PQ code
-    partials (kind=1 — the _pq_partials math) computed from the same
-    batch, so the corpus is scanned and shipped through the Python
-    boundary ONCE per fused iteration instead of once per training.
-    Either side may be None (that training has finished its
-    iterations). Assignment and scaling arithmetic is byte-identical to
-    the standalone kernels, so the summed partials — and therefore the
-    trained centroids/codebooks — cannot differ."""
-    import numpy as np
-
-    from financial_data_engineering_spark.llm.similarity import (
-        _assign_cosine,
+    sized by construction."""
+    return lloyd_train(
+        corpus, pq_quantizers(dim, m, k, n_iters), id_col=id_col, vec_col=vec_col
     )
-
-    if cents is not None:
-        cids = np.array([cid for cid, _ in cents], dtype="int64")
-        cmat = np.stack([np.asarray(v, dtype="float64") for _, v in cents])
-        cnorm = np.linalg.norm(cmat, axis=1)
-        cnorm = np.where(cnorm == 0.0, 1.0, cnorm)
-    bmats = (
-        [np.asarray(b, dtype="float64") for b in books]
-        if books is not None
-        else None
-    )
-    schema = T.StructType(
-        [
-            T.StructField("kind", T.LongType()),
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.LongType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("sums", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack(
-                [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
-            )
-            s = mat * KMEANS_SCALE
-            scaled = (np.floor(np.abs(s) + 0.5) * np.sign(s)).astype("int64")
-            out: dict[str, list] = {
-                "kind": [], "a": [], "b": [], "cnt": [], "sums": []
-            }
-            if cents is not None:
-                cos = _assign_cosine(np, pdf[vec_col], cmat, cnorm)
-                order = np.lexsort(
-                    (np.broadcast_to(cids, cos.shape), -cos), axis=1
-                )
-                best = cids[order[:, 0]]
-                for c in np.unique(best):
-                    mask = best == c
-                    out["kind"].append(0)
-                    out["a"].append(int(c))
-                    out["b"].append(0)
-                    out["cnt"].append(int(mask.sum()))
-                    out["sums"].append(scaled[mask].sum(axis=0).tolist())
-            if bmats is not None:
-                subs = mat.reshape(len(mat), m, dim // m)
-                codes = _assign_codes(np, subs, bmats)
-                sub_scaled = scaled.reshape(len(mat), m, dim // m)
-                for mi in range(m):
-                    for c in np.unique(codes[:, mi]):
-                        mask = codes[:, mi] == c
-                        out["kind"].append(1)
-                        out["a"].append(mi)
-                        out["b"].append(int(c))
-                        out["cnt"].append(int(mask.sum()))
-                        out["sums"].append(
-                            sub_scaled[mask, mi, :].sum(axis=0).tolist()
-                        )
-            yield pd.DataFrame(out)
-
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema=schema)
-
-
-def train_coarse_and_books(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    coarse_iters: int = 2,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    n_iters: int = PQ_ITERS,
-    dim: int = 64,
-) -> tuple[list[tuple[int, list[float]]], list[list[list[float]]]]:
-    """Train the IVF coarse quantizer AND the PQ codebooks with HALF the
-    control-plane actions: one shared lowest-id init collect (the two
-    standalone trainers each ran their own TakeOrdered job over the same
-    prefix) and one fused partials pass per iteration
-    (:func:`_fused_partials`) instead of one per training. At bench
-    scale the IVF-PQ query is action-latency-bound (profiled r15: 17
-    jobs of 0.2-0.5 s each for a 2000-row corpus), and at 100 TB each
-    saved pass is a full corpus scan. Results are bit-identical to
-    ``kmeans_centroids(...)`` followed by ``pq_codebooks(...)`` — same
-    init rows (the shared collect's prefix), same assignment/update
-    arithmetic, integer partial sums summed in the same driver fold —
-    which the registered query's oracle (replaying both trainings in
-    SQL) gates every round."""
-    sub = dim // m
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(max(n_centroids, k))
-        .collect()
-    )
-    if not rows or len(rows) < 1:
-        raise ValueError("train_coarse_and_books: corpus has no vectors")
-    cents = [
-        (i, [float(x) for x in r[vec_col]])
-        for i, r in enumerate(rows[:n_centroids])
-    ]
-    books = [
-        [
-            [float(x) for x in r[vec_col]][mi * sub : (mi + 1) * sub]
-            for r in rows[:k]
-        ]
-        for mi in range(m)
-    ]
-    for it in range(max(coarse_iters, n_iters)):
-        do_coarse = it < coarse_iters
-        do_pq = it < n_iters
-        partials = _fused_partials(
-            corpus,
-            cents if do_coarse else None,
-            books if do_pq else None,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            m=m,
-        ).collect()
-        if do_coarse:
-            by_cluster: dict[int, tuple[int, list[int]]] = {}
-            for r in partials:
-                if r["kind"] != 0:
-                    continue
-                cnt, sums = by_cluster.get(int(r["a"]), (0, [0] * dim))
-                by_cluster[int(r["a"])] = (
-                    cnt + int(r["cnt"]),
-                    [x + int(y) for x, y in zip(sums, r["sums"])],
-                )
-            cents = [
-                (
-                    cid,
-                    [
-                        s / (KMEANS_SCALE * by_cluster[cid][0])
-                        for s in by_cluster[cid][1]
-                    ]
-                    if cid in by_cluster
-                    else old,
-                )
-                for cid, old in cents
-            ]
-        if do_pq:
-            cells: dict[tuple[int, int], tuple[int, list[int]]] = {}
-            for r in partials:
-                if r["kind"] != 1:
-                    continue
-                key = (int(r["a"]), int(r["b"]))
-                cnt, sums = cells.get(key, (0, [0] * sub))
-                cells[key] = (
-                    cnt + int(r["cnt"]),
-                    [x + int(y) for x, y in zip(sums, r["sums"])],
-                )
-            books = [
-                [
-                    [
-                        s / (KMEANS_SCALE * cells[(mi, ci)][0])
-                        for s in cells[(mi, ci)][1]
-                    ]
-                    if (mi, ci) in cells
-                    else old
-                    for ci, old in enumerate(book)
-                ]
-                for mi, book in enumerate(books)
-            ]
-    return cents, books
 
 
 def pq_code_rows(
@@ -394,6 +115,7 @@ def pq_code_rows(
 
     bmats = [np.asarray(b, dtype="float64") for b in books]
     m = len(bmats)
+    sub = dim // m
     id_field = next(f for f in corpus.schema.fields if f.name == id_col)
     schema = T.StructType(
         [
@@ -409,8 +131,13 @@ def pq_code_rows(
         for pdf in batches:
             if not len(pdf):
                 continue
-            subs = _sub_slices(np, pdf[vec_col], dim, m)
-            codes = _assign_codes(np, subs, bmats)
+            mat = vec_matrix(pdf[vec_col])
+            codes = np.column_stack(
+                [
+                    _assign_codes(np, mat[:, mi * sub : (mi + 1) * sub], cmat)
+                    for mi, cmat in enumerate(bmats)
+                ]
+            )
             n = len(pdf)
             yield pd.DataFrame(
                 {
@@ -622,26 +349,20 @@ def ivfpq_adc_rerank_topk(
     flat IVF the per-candidate read shrinks 32×. Every constituent recipe
     is already pinned deterministic (round-9 argmin/argmax, integer
     micro-unit LUT), so the oracle replays the whole composition."""
-    from financial_data_engineering_spark.llm.similarity import (
-        ivf_assignments,
-    )
-
     proj = persist_tracked(corpus.select(id_col, vec_col))
-    # Both trainings in one fused control-plane loop (shared init
-    # collect, one partials pass per iteration) — half the actions of
-    # kmeans_centroids + pq_codebooks run back to back, bit-identical
-    # results (see train_coarse_and_books).
-    cents, books = train_coarse_and_books(
+    # Coarse quantizer and codebooks train together: one init collect and
+    # one pass per iteration, half the actions of kmeans_centroids +
+    # pq_codebooks run back to back, with bit-identical results.
+    coarse, *books = lloyd_train(
         proj,
+        [
+            coarse_quantizer(dim, n_centroids, coarse_iters),
+            *pq_quantizers(dim, m, n_codes, n_iters),
+        ],
         id_col=id_col,
         vec_col=vec_col,
-        n_centroids=n_centroids,
-        coarse_iters=coarse_iters,
-        m=m,
-        k=n_codes,
-        n_iters=n_iters,
-        dim=dim,
     )
+    cents = list(enumerate(coarse))
     corpus_lists = ivf_assignments(
         proj, cents, id_col=id_col, vec_col=vec_col, dim=dim, nprobe=1
     ).select(F.col("id").alias("neighbor_id"), "cluster")

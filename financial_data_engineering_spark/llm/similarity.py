@@ -20,6 +20,8 @@ oracle can replay them exactly (no RNG, no model state to ship).
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +35,15 @@ from financial_data_engineering_spark.functions.vectors import (
     int_dot_fixed,
     l2_norm_fixed,
 )
+
+
+def vec_matrix(vecs):
+    """(n × dim) float64 matrix from n vectors (a pandas column of
+    arrays, or any iterable of sequences) — the one conversion every
+    numpy kernel over an embedding column uses."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype="float64") for v in vecs])
 
 
 def hyperplane(plane: int, dim: int) -> list[float]:
@@ -130,9 +141,7 @@ def _lsh_assign(
     Arrow-batched numpy GEMM against the plane matrix — same kernel choice
     as ivf_assignments and for the same reason (the unrolled expression
     form pays ~10 s of codegen compilation per lineage)."""
-    import numpy as np
-
-    pm = np.stack([np.asarray(pl, dtype="float64") for pl in planes])
+    pm = vec_matrix(planes)
 
     id_field = next(f for f in df.schema.fields if f.name == id_col)
     vec_field = next(f for f in df.schema.fields if f.name == vec_col)
@@ -150,7 +159,7 @@ def _lsh_assign(
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+            mat = vec_matrix(pdf[vec_col])
             bits = (mat @ pm.T) >= 0.0
             sigs = ["".join("1" if b else "0" for b in row) for row in bits]
             yield pd.DataFrame(
@@ -219,7 +228,7 @@ def _lsh_query_probes(
     and an SQL oracle can replay it exactly."""
     import numpy as np
 
-    pm = np.stack([np.asarray(pl, dtype="float64") for pl in planes])
+    pm = vec_matrix(planes)
     n_planes = pm.shape[0]
     n_probes = max(1, min(n_probes, n_planes + 1))
 
@@ -239,7 +248,7 @@ def _lsh_query_probes(
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+            mat = vec_matrix(pdf[vec_col])
             dots = mat @ pm.T
             bits = dots >= 0.0
             margins = np.round(np.abs(dots), 9)
@@ -381,12 +390,8 @@ def pairwise_cosine_gemm(
             )
         l_ids = left["id"].to_numpy()
         r_ids = right["id"].to_numpy()
-        l_mat = np.stack([np.asarray(v, dtype="float64") for v in left["v"]])
-        r_mat = (
-            l_mat
-            if ba == bb
-            else np.stack([np.asarray(v, dtype="float64") for v in right["v"]])
-        )
+        l_mat = vec_matrix(left["v"])
+        r_mat = l_mat if ba == bb else vec_matrix(right["v"])
         l_norms = np.linalg.norm(l_mat, axis=1)
         r_norms = l_norms if ba == bb else np.linalg.norm(r_mat, axis=1)
         l_safe = np.where(l_norms == 0.0, 1.0, l_norms)
@@ -442,9 +447,7 @@ def ivf_assignments(
     import numpy as np
 
     cids = np.array([cid for cid, _ in centroids], dtype="int64")
-    cmat = np.stack([np.asarray(v, dtype="float64") for _, v in centroids])
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cnorm = np.where(cnorm == 0.0, 1.0, cnorm)
+    cmat = vec_matrix(v for _, v in centroids)
 
     id_field = next(f for f in corpus.schema.fields if f.name == id_col)
     vec_field = next(f for f in corpus.schema.fields if f.name == vec_col)
@@ -463,7 +466,7 @@ def ivf_assignments(
         for pdf in batches:
             if not len(pdf):
                 continue
-            cos = _assign_cosine(np, pdf[vec_col], cmat, cnorm)
+            cos = _assign_cosine(np, vec_matrix(pdf[vec_col]), cmat)
             # top-nprobe per row: cos desc, centroid id asc on ties
             order = np.lexsort((np.broadcast_to(cids, cos.shape), -cos), axis=1)
             take = order[:, :nprobe]
@@ -482,11 +485,12 @@ def ivf_assignments(
     return corpus.select(id_col, vec_col).mapInPandas(gen, schema=schema)
 
 
-def _assign_cosine(np, vec_series, cmat, cnorm_safe):
+def _assign_cosine(np, mat, cmat):
     """(batch × centroids) cosine matrix for assignment: dot/(|v|·|c|) —
     the list_cosine_similarity association — rounded to 9 decimals so the
     argmax is stable across engines (zero-norm rows score 0)."""
-    mat = np.stack([np.asarray(v, dtype="float64") for v in vec_series])
+    cnorm = np.linalg.norm(cmat, axis=1)
+    cnorm_safe = np.where(cnorm == 0.0, 1.0, cnorm)
     vnorm = np.linalg.norm(mat, axis=1)
     vnorm_safe = np.where(vnorm == 0.0, 1.0, vnorm)
     cos = np.round(
@@ -496,35 +500,57 @@ def _assign_cosine(np, vec_series, cmat, cnorm_safe):
     return cos
 
 
+def _nearest_cosine(np, mat, cmat):
+    """IVF coarse-quantizer rule: argmax of :func:`_assign_cosine`, ties →
+    lowest centroid id."""
+    cos = _assign_cosine(np, mat, cmat)
+    ids = np.arange(len(cmat))
+    return np.lexsort((np.broadcast_to(ids, cos.shape), -cos), axis=1)[:, 0]
+
+
+def _assign_codes(np, mat, cmat):
+    """PQ codebook rule, shared by training and encoding: Euclidean
+    distance to each centroid rounded to 9 decimals, argmin with ties →
+    lowest code id (np.argmin keeps the first minimum, ids ascend)."""
+    d = np.round(
+        np.sqrt(((mat[:, None, :] - cmat[None, :, :]) ** 2).sum(-1)), 9
+    )
+    return np.argmin(d, axis=1)
+
+
 KMEANS_SCALE = 1_000_000
 
 
-def _cluster_partials(
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """One Lloyd-iteration pass fused into a single Arrow kernel: per
-    batch, assign every vector to its nearest centroid (same rounded
-    dot/(|v|·|c|) argmax as ivf_assignments) and emit ONE row per present
-    cluster holding (count, per-component sum of round(x·10^6) longs as an
-    array). Integer partial sums are order-independent, so summing the
-    partials on the driver is bit-identical to a global aggregate — and
-    this replaces the previous 65-buffer hash aggregate (a janino-compile
-    and shuffle constant paid twice per training) with a map-only pass
-    whose output is ~(partitions × clusters) tiny rows."""
-    import numpy as np
+class Quantizer(NamedTuple):
+    """One quantizer trained by :func:`lloyd_train`: ``k`` centroids over
+    the vector components ``[lo, hi)``, vectors assigned by ``assign``
+    (:func:`_nearest_cosine` or :func:`_assign_codes`), ``iters`` Lloyd
+    iterations."""
 
-    cids = np.array([cid for cid, _ in centroids], dtype="int64")
-    cmat = np.stack([np.asarray(v, dtype="float64") for _, v in centroids])
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cnorm = np.where(cnorm == 0.0, 1.0, cnorm)
+    lo: int
+    hi: int
+    assign: Callable
+    k: int
+    iters: int
+
+
+def coarse_quantizer(dim: int, n_centroids: int, n_iters: int) -> Quantizer:
+    """The IVF coarse quantizer: cosine assignment over the whole vector."""
+    return Quantizer(0, dim, _nearest_cosine, n_centroids, n_iters)
+
+
+def _lloyd_partials(corpus: DataFrame, live, id_col: str, vec_col: str) -> DataFrame:
+    """One Lloyd iteration of every ``live`` (q, lo, hi, assign, centroid
+    matrix) quantizer as a single map-only Arrow pass: per batch, scale
+    each vector to ``round(x·10⁶)`` longs once, assign its ``[lo, hi)``
+    slice per quantizer, and emit one (q, code, cnt, sums) row per
+    present cell."""
+    import numpy as np
 
     schema = T.StructType(
         [
-            T.StructField("cluster", T.LongType()),
+            T.StructField("q", T.LongType()),
+            T.StructField("code", T.LongType()),
             T.StructField("cnt", T.LongType()),
             T.StructField("sums", T.ArrayType(T.LongType())),
         ]
@@ -536,25 +562,84 @@ def _cluster_partials(
         for pdf in batches:
             if not len(pdf):
                 continue
-            cos = _assign_cosine(np, pdf[vec_col], cmat, cnorm)
-            order = np.lexsort((np.broadcast_to(cids, cos.shape), -cos), axis=1)
-            best = cids[order[:, 0]]
-            mat = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+            mat = vec_matrix(pdf[vec_col])
             s = mat * KMEANS_SCALE
             # round-half-away-from-zero, matching Spark/DuckDB round(x)
             scaled = (np.floor(np.abs(s) + 0.5) * np.sign(s)).astype("int64")
-            present = np.unique(best)
-            yield pd.DataFrame(
-                {
-                    "cluster": present,
-                    "cnt": [int((best == c).sum()) for c in present],
-                    "sums": [
-                        scaled[best == c].sum(axis=0).tolist() for c in present
-                    ],
-                }
-            )
+            out: dict[str, list] = {"q": [], "code": [], "cnt": [], "sums": []}
+            for qi, lo, hi, assign, cmat in live:
+                best = assign(np, mat[:, lo:hi], cmat)
+                for c in np.unique(best):
+                    mask = best == c
+                    out["q"].append(qi)
+                    out["code"].append(int(c))
+                    out["cnt"].append(int(mask.sum()))
+                    out["sums"].append(scaled[mask, lo:hi].sum(axis=0).tolist())
+            yield pd.DataFrame(out)
 
     return corpus.select(id_col, vec_col).mapInPandas(gen, schema=schema)
+
+
+def lloyd_train(
+    corpus: DataFrame,
+    quantizers: list[Quantizer],
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[list[float]]]:
+    """Deterministic seeded Lloyd k-means for any set of quantizers over
+    one corpus; returns ``centroids[q][code] -> [float]`` per quantizer.
+
+    Init is one collect of the ``max(k)`` lowest-id corpus vectors;
+    quantizer q starts from the first ``k`` of them, sliced to
+    ``[lo, hi)`` and relabeled 0..k-1 — no RNG. Each iteration is ONE
+    map-only Arrow pass for every quantizer still iterating: per batch,
+    each vector is scaled to ``round(x·10⁶)`` longs once, assigned by each
+    quantizer's rule on its slice, and one (q, code, cnt, sums) row is
+    emitted per present cell. Integer partial sums are order-independent,
+    so the driver fold is bit-identical to a global aggregate and a SQL
+    replica (queries/similarity_oracles.py) computes the same centroids
+    regardless of aggregation order; each centroid is divided once, and
+    empty cells keep their previous centroid. Only ~(partitions × cells)
+    rows reach the driver; the corpus never moves. Spark jobs:
+    ``1 + max(iters)``.
+
+    Callers doing several passes (training + final assignment) should pass
+    a persisted projection of (id_col, vec_col) so each iteration scans
+    the cache, not the source (see ivf_topk)."""
+    rows = (
+        corpus.select(id_col, vec_col)
+        .orderBy(id_col)
+        .limit(max(q.k for q in quantizers))
+        .collect()
+    )
+    if not rows:
+        raise ValueError("lloyd_train: corpus has no vectors")
+    init = [[float(x) for x in r[vec_col]] for r in rows]
+    cents = [[v[q.lo : q.hi] for v in init[: q.k]] for q in quantizers]
+    for it in range(max(q.iters for q in quantizers)):
+        live = [
+            (qi, q.lo, q.hi, q.assign, vec_matrix(cents[qi]))
+            for qi, q in enumerate(quantizers)
+            if it < q.iters
+        ]
+        partials = _lloyd_partials(corpus, live, id_col, vec_col).collect()
+        cells: dict[tuple[int, int], tuple[int, list[int]]] = {}
+        for r in partials:
+            key = (int(r["q"]), int(r["code"]))
+            cnt, sums = cells.get(key, (0, [0] * len(r["sums"])))
+            cells[key] = (
+                cnt + int(r["cnt"]),
+                [a + int(b) for a, b in zip(sums, r["sums"])],
+            )
+        for qi, *_ in live:
+            cents[qi] = [
+                [s / (KMEANS_SCALE * cells[(qi, c)][0]) for s in cells[(qi, c)][1]]
+                if (qi, c) in cells
+                else old
+                for c, old in enumerate(cents[qi])
+            ]
+    return cents
 
 
 def kmeans_centroids(
@@ -566,55 +651,16 @@ def kmeans_centroids(
     n_iters: int = 2,
     dim: int = 64,
 ) -> list[tuple[int, list[float]]]:
-    """Deterministic seeded Lloyd k-means for the IVF coarse quantizer.
-
-    Init is the ``n_centroids`` lowest-id corpus vectors (relabeled
-    0..n-1); each of the fixed ``n_iters`` iterations assigns every vector
-    to its nearest centroid by cosine (ties → lowest centroid id) and
-    recomputes each centroid as the exact cluster mean — both fused into
-    one map-only Arrow pass per iteration (:func:`_cluster_partials`).
-    Components are summed as ``round(x·10^6)`` longs — order-independent
-    integer sums — and divided once, so a SQL replica computes
-    bit-identical centroids regardless of aggregation order. Empty
-    clusters keep their previous centroid. Only ~(partitions × clusters)
-    partial-sum rows ever reach the driver — the control-plane collect any
-    iterative quantizer needs; the corpus itself never moves.
-
-    Callers doing several passes (training + final assignment) should pass
-    a persisted projection of (id_col, vec_col) so each iteration scans
-    the cache, not the source (see ivf_topk)."""
-    rows = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
+    """The IVF coarse quantizer alone: :func:`lloyd_train` with
+    ``n_centroids`` cosine-assigned centroids over the whole vector, as
+    ``(cid, centroid)`` pairs."""
+    (cents,) = lloyd_train(
+        corpus,
+        [coarse_quantizer(dim, n_centroids, n_iters)],
+        id_col=id_col,
+        vec_col=vec_col,
     )
-    if not rows:
-        raise ValueError("kmeans_centroids: corpus has no vectors")
-    cents = [
-        (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(rows)
-    ]
-    for _ in range(n_iters):
-        partials = _cluster_partials(
-            corpus, cents, id_col=id_col, vec_col=vec_col
-        ).collect()
-        by_cluster: dict[int, tuple[int, list[int]]] = {}
-        for r in partials:
-            cnt, sums = by_cluster.get(int(r["cluster"]), (0, [0] * dim))
-            by_cluster[int(r["cluster"])] = (
-                cnt + int(r["cnt"]),
-                [a + int(b) for a, b in zip(sums, r["sums"])],
-            )
-        cents = [
-            (
-                cid,
-                [
-                    s / (KMEANS_SCALE * by_cluster[cid][0])
-                    for s in by_cluster[cid][1]
-                ]
-                if cid in by_cluster
-                else old,
-            )
-            for cid, old in cents
-        ]
-    return cents
+    return list(enumerate(cents))
 
 
 def ivf_topk(

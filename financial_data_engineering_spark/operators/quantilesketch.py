@@ -145,6 +145,8 @@ def sketch_quantiles(summaries: DataFrame, qs: list[float]) -> DataFrame:
         .agg(F.coalesce(F.sum("weight"), F.lit(0)).alias("err_bound"))
         .withColumn("_k", F.lit("_"))
     )
+    # Unpartitioned on purpose: the summary holds at most k·levels rows per
+    # input partition, never the data itself.
     w = Window.orderBy("value", "weight").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

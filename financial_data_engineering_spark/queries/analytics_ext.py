@@ -281,6 +281,8 @@ def nation_revenue_running_share(
             )
         )
     )
+    # Both windows are unpartitioned on purpose: nat_rev holds one row per
+    # nation (25), whatever the scale factor.
     w_cum = Window.orderBy(
         F.col("revenue_e2").desc(), "n_name"
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)

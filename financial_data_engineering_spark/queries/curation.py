@@ -936,6 +936,7 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = scored.orderBy(F.desc("score_e9"), F.asc("doc_id")).limit(
         BM25_TOP_K
     )
+    # Unpartitioned on purpose: it ranks the BM25_TOP_K rows the limit kept.
     w = Window.orderBy(F.desc("score_e9"), F.asc("doc_id"))
     return top.select(
         F.row_number().over(w).cast("bigint").alias("rank"),

@@ -804,9 +804,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        mat = np.stack(
-            [np.asarray(v, dtype="float64") for v in pdf["emb"].iloc[order]]
-        )
+        mat = sim.vec_matrix(pdf["emb"].iloc[order])
         norms = np.linalg.norm(mat, axis=1)
         safe = np.where(norms == 0.0, 1.0, norms)
         out_b = []

@@ -448,6 +448,7 @@ def part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = scored.orderBy(
         F.desc("lift_e6"), F.asc("ante"), F.asc("cons")
     ).limit(AR_TOP_K)
+    # Unpartitioned on purpose: it ranks the AR_TOP_K rows the limit kept.
     w = Window.orderBy(F.desc("lift_e6"), F.asc("ante"), F.asc("cons"))
     return top.select(
         F.row_number().over(w).cast("bigint").alias("rank"),

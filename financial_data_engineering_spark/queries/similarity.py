@@ -7,7 +7,9 @@ generation, and ranking are all pinned by the hash comparison.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +36,10 @@ from financial_data_engineering_spark.queries.similarity_oracles import (
     IVF_N_CENTROIDS,
     IVF_NPROBE,
 )
+
+#: Index directories built by ann_ivf_from_index in this process, each
+#: registered once for removal when the driver exits.
+_INDEX_DIRS: set[str] = set()
 
 # The fixed query set: the five lowest vec_ids play "incoming queries"
 # against the whole corpus.
@@ -150,6 +156,12 @@ def ann_ivf_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.applicationId,
         ),
     )
+    # The returned frame reads the index lazily, so the directory must
+    # outlive this call: repeated calls overwrite it, and it is removed
+    # when the driver exits.
+    if path not in _INDEX_DIRS:
+        _INDEX_DIRS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
     build_ivf_index(
         emb, path, n_centroids=IVF_N_CENTROIDS, n_iters=_N_ITERS, dim=EMB_DIM
     )

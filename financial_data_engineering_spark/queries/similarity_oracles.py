@@ -242,7 +242,8 @@ _KM_SCALE = 1_000_000
 
 
 def kmeans_ctes(n_centroids: int, n_iters: int, dim: int) -> str:
-    """DuckDB CTE chain replaying llm.similarity.kmeans_centroids exactly:
+    """DuckDB CTE chain replaying llm.similarity.lloyd_train's IVF coarse
+    quantizer (kmeans_centroids) exactly:
     init = lowest-id vectors relabeled 0..n-1; per iteration, argmax-cosine
     assignment (cosine rounded to 9 decimals before the argmax so a
     last-ulp difference can't flip a winner; ties → lowest cid) then exact
@@ -291,7 +292,8 @@ cent{it + 1} AS (
 
 
 def pq_ctes(m: int, k: int, n_iters: int, dim: int) -> str:
-    """DuckDB CTE chain replaying llm.pq training + encoding exactly:
+    """DuckDB CTE chain replaying llm.pq training (lloyd_train's PQ
+    subspace quantizers) + encoding exactly:
     per-subspace init = the k lowest-id vectors' subvectors relabeled
     0..k-1; per iteration, argmin assignment on Euclidean distance rounded
     to 9 decimals (ties → lowest code) then exact scaled-integer means —

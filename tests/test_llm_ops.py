@@ -655,6 +655,40 @@ def test_ivf_index_roundtrip_matches_direct(spark, tmp_path):
     assert re.search(r"PartitionFilters: \[cluster#\d+ IN \(0,1\)\]", txt)
 
 
+def test_ivf_from_index_dir_removed_at_exit_once(spark, monkeypatch):
+    """ann_ivf_from_index keeps one index directory per application and
+    registers its removal at driver exit exactly once, however often the
+    query runs. Build and serve are stubbed: only the path bookkeeping
+    is under test."""
+    import atexit
+    import shutil
+
+    from financial_data_engineering_spark.llm import index
+    from financial_data_engineering_spark.queries import similarity as qsim
+    from tests.conftest import SF_SMALL
+
+    built, registered = [], []
+    monkeypatch.setattr(qsim, "_INDEX_DIRS", set())
+    monkeypatch.setattr(
+        atexit, "register", lambda *a, **kw: registered.append((a, kw))
+    )
+    monkeypatch.setattr(
+        index, "build_ivf_index", lambda emb, path, **kw: built.append(path)
+    )
+    monkeypatch.setattr(
+        index,
+        "ivf_topk_from_index",
+        lambda spark, queries, path, **kw: spark.createDataFrame(
+            [], "query_id long, rank long"
+        ),
+    )
+    qsim.ann_ivf_from_index(spark, SF_SMALL)
+    qsim.ann_ivf_from_index(spark, SF_SMALL)
+    assert built[0] == built[1]
+    assert spark.sparkContext.applicationId in built[0]
+    assert registered == [((shutil.rmtree, built[0]), {"ignore_errors": True})]
+
+
 # -- Product quantization (llm/pq.py) ----------------------------------------
 
 
@@ -849,13 +883,16 @@ def test_connected_components_random_graph_matches_dsu_reference(spark):
 
 
 def test_fused_training_matches_standalone(spark):
-    """train_coarse_and_books (the r15 fused control-plane loop behind
-    ivfpq_adc_rerank_topk) must return BIT-identical centroids and
-    codebooks to kmeans_centroids + pq_codebooks run standalone — the
-    fusion only co-schedules the passes, never changes the arithmetic."""
+    """lloyd_train with the coarse quantizer and the PQ quantizers together
+    (the joint training behind ivfpq_adc_rerank_topk) must return
+    BIT-identical centroids and codebooks to kmeans_centroids and
+    pq_codebooks run alone — joint training only co-schedules the passes,
+    never changes the arithmetic. The second case stops the coarse
+    quantizer before the codebooks, so quantizers that finish early drop
+    out of the shared pass without disturbing the rest."""
     from financial_data_engineering_spark.llm.pq import (
         pq_codebooks,
-        train_coarse_and_books,
+        pq_quantizers,
     )
 
     emb = (
@@ -868,12 +905,17 @@ def test_fused_training_matches_standalone(spark):
             ).alias("embedding"),
         )
     )
-    cents_ref = sim.kmeans_centroids(
-        emb, n_centroids=4, n_iters=2, dim=16
-    )
-    books_ref = pq_codebooks(emb, m=4, k=6, n_iters=2, dim=16)
-    cents, books = train_coarse_and_books(
-        emb, n_centroids=4, coarse_iters=2, m=4, k=6, n_iters=2, dim=16
-    )
-    assert cents == cents_ref
-    assert books == books_ref
+    for coarse_iters, n_iters in ((2, 2), (1, 3)):
+        cents_ref = sim.kmeans_centroids(
+            emb, n_centroids=4, n_iters=coarse_iters, dim=16
+        )
+        books_ref = pq_codebooks(emb, m=4, k=6, n_iters=n_iters, dim=16)
+        cents, *books = sim.lloyd_train(
+            emb,
+            [
+                sim.coarse_quantizer(16, 4, coarse_iters),
+                *pq_quantizers(16, 4, 6, n_iters),
+            ],
+        )
+        assert list(enumerate(cents)) == cents_ref
+        assert books == books_ref

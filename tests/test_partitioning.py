@@ -236,6 +236,7 @@ def test_materialize_counted_cuts_lineage_and_counts(spark):
     # already-materialized input: no re-copy (materialize()'s skip), and
     # the count is still exact
     again, n2 = materialize_counted(out)
+    assert again is out
     assert n2 == 34
 
 

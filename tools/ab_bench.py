@@ -49,7 +49,7 @@ def _run_leg(repo_dir: str, queries: str, sf_dir: str, runs: int = 1) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_BENCH_ONLY"] = queries
     env["SPARK_GRAFT_BENCH_RUNS"] = str(runs)
-    env.setdefault("SPARK_GRAFT_SF_DIR", sf_dir)
+    env["SPARK_GRAFT_SF_DIR"] = sf_dir
     base = os.path.basename(sf_dir.rstrip("/"))
     out_path = os.path.join(repo_dir, "reports", "bench", f"restricted_{base}.json")
     if os.path.exists(out_path):
@@ -126,13 +126,13 @@ def main() -> None:
     medians: dict[str, dict[str, float]] = {"base": {}, "target": {}}
     for side in ("base", "target"):
         for n in names:
-            vals = sorted(
+            vals = [
                 leg["queries"][n]
                 for leg in legs
                 if leg["side"] == side and leg["queries"].get(n, -1) >= 0
-            )
+            ]
             if vals:
-                medians[side][n] = vals[len(vals) // 2]
+                medians[side][n] = statistics.median(vals)
     speedup = {
         n: round(medians["base"][n] / medians["target"][n], 3)
         for n in names
