@@ -10,14 +10,18 @@ and queries arrive continuously. This module splits the lifecycle:
   — PARTITIONED BY CLUSTER, with each vector's L2 norm precomputed.
 - :func:`ivf_topk_from_index` loads the k centroids (control-plane),
   assigns the (small, broadcastable) query set to its ``nprobe`` lists,
-  and reads ONLY the probed cluster partitions — the ``cluster IN (...)``
-  filter prunes at the partition-directory level, so serving cost scales
-  with nprobe/n_centroids of the index, not its full size. The scoring
-  path and tie-breaks are byte-identical to ``ivf_topk``'s (same
-  ``_pair_cos``, same rank window), which the round-trip test pins.
+  and reads ONLY the probed cluster partitions: the broadcast probes
+  drive dynamic partition pruning of ``lists/`` on ``cluster``, so
+  serving cost scales with nprobe/n_centroids of the index, not its
+  full size. The scoring path and tie-breaks are byte-identical to
+  ``ivf_topk``'s (same ``_pair_cos``, same rank window), which the
+  round-trip test pins.
 
-The probed-cluster collect is ≤ |queries|·nprobe ints — control plane by
-the same contract that lets the query set broadcast.
+Serving submits no Spark job before the caller's action: the centroids
+are read with pyarrow (mirroring the pyarrow write), ``lists/`` is read
+with a declared schema (no inference job), and the pruning set comes
+from the probes' broadcast exchange that the scoring join reuses,
+instead of a collect of the probed clusters.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from financial_data_engineering_spark.functions.vectors import l2_norm_fixed
@@ -62,8 +67,7 @@ def build_ivf_index(
     # training) — write them with pyarrow directly instead of a Spark
     # job: a createDataFrame-backed local-relation write measures a flat
     # ~5 s per call on this Spark build (vs 8 rows of actual work), and
-    # a driver-side parquet file reads back through spark.read.parquet
-    # identically.
+    # serving reads the file back with pyarrow the same way.
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -116,26 +120,35 @@ def ivf_topk_from_index(
     dim: int = 64,
 ) -> DataFrame:
     """Serve approximate cosine top-k from a persisted IVF index,
-    touching only the probed cluster partitions."""
-    centroids = [
-        (int(r["cluster"]), list(r["centroid"]))
-        for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
-    ]
+    touching only the probed cluster partitions. ``queries`` must carry
+    the corpus's id and vector types: they declare the schema under
+    which ``lists/`` is read."""
+    import pyarrow.parquet as pq
+
+    cent = pq.read_table(os.path.join(path, "centroids")).to_pydict()
+    centroids = list(zip(cent["cluster"], cent["centroid"]))
+    # ``probe_rank < nprobe`` holds for every assignment row. It is there
+    # for the optimizer: dynamic partition pruning of ``lists/`` is only
+    # planned when the broadcast side carries a predicate it rates
+    # selective, and without one a query set that is not itself a
+    # filtered frame (say, rows built on the driver) scans every list.
     probes = ivf_assignments(
         queries, centroids, id_col=id_col, vec_col=vec_col, dim=dim, nprobe=nprobe
-    ).select(
+    ).filter(F.col("probe_rank") < nprobe).select(
         F.col("id").alias("query_id"),
         F.col("v").alias("qv"),
         "cluster",
         l2_norm_fixed("v", dim).alias("qn"),
     )
-    probes = persist_tracked(probes)
-    probed = sorted(
-        r["cluster"] for r in probes.select("cluster").distinct().collect()
+    lists_schema = T.StructType(
+        [
+            T.StructField("neighbor_id", queries.schema[id_col].dataType),
+            T.StructField("cv", queries.schema[vec_col].dataType),
+            T.StructField("cn", T.DoubleType()),
+            T.StructField("cluster", T.LongType()),
+        ]
     )
-    lists = spark.read.parquet(os.path.join(path, "lists")).filter(
-        F.col("cluster").isin(probed)
-    )
+    lists = spark.read.schema(lists_schema).parquet(os.path.join(path, "lists"))
     scored = (
         F.broadcast(probes)
         .join(lists, ["cluster"])

@@ -165,16 +165,25 @@ def _adc_lut(
 
     The dot runs as a JVM-side zip_with/aggregate fold (left-to-right,
     DuckDB list_dot_product's association); interpreted evaluation is
-    irrelevant at this cardinality and keeps the expression dim-generic."""
+    irrelevant at this cardinality and keeps the expression dim-generic.
+
+    The m·k codebook rows are handed over as a pandas frame: Arrow turns
+    it into a local relation on the driver, where a list of tuples
+    becomes a Python RDD whose broadcast runs a job of Python workers
+    just to unpickle the rows."""
+    import pandas as pd
+
     m = len(books)
     sub = dim // m
     spark = queries.sparkSession
     cent = spark.createDataFrame(
-        [
-            (mi, ci, [float(x) for x in cv])
-            for mi, book in enumerate(books)
-            for ci, cv in enumerate(book)
-        ],
+        pd.DataFrame(
+            {
+                "m": [mi for mi, book in enumerate(books) for _ in book],
+                "code": [ci for book in books for ci in range(len(book))],
+                "cv": [[float(x) for x in cv] for book in books for cv in book],
+            }
+        ),
         schema="m long, code long, cv array<double>",
     )
     qsub = queries.select(

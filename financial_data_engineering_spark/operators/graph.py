@@ -161,8 +161,8 @@ def pagerank_integer(
     (co-purchase weights are basket counts, far below).
     """
     # materialize_counted: the lineage cut and the row count each
-    # operator needs come from ONE job (lazy checkpoint materialized by
-    # the counting action) — the r14 driver's scaling block showed this
+    # operator needs come from ONE job (the count is observed on the
+    # materializing job) — the r14 driver's scaling block showed this
     # family is per-round-job-overhead-bound at bench scale, so every
     # fused count is a scheduler round-trip saved.
     edges_ck, e_count = materialize_counted(edges.select("src", "dst", "w"))
@@ -396,6 +396,20 @@ def label_propagation(
     return labels.select("node", F.col("lbl").alias(label_alias))
 
 
+def _semi_both_ends(e: DataFrame, keep: DataFrame) -> DataFrame:
+    """Edges of ``e`` whose src AND dst are both in ``keep`` (one ``src``
+    column): two LEFT SEMI joins against aliases of the SAME ``keep``
+    frame. Both build sides then share one canonical plan, so a
+    broadcast survivor list ships once per round and the second semi
+    reuses that exchange. A renamed copy (``withColumnRenamed("src",
+    "dst")``) would be a different plan, broadcast a second time."""
+    return (
+        e.alias("e")
+        .join(keep.alias("ka"), F.col("e.src") == F.col("ka.src"), "left_semi")
+        .join(keep.alias("kb"), F.col("e.dst") == F.col("kb.src"), "left_semi")
+    )
+
+
 def kcore_bounded(
     edges: DataFrame,
     *,
@@ -430,14 +444,18 @@ def kcore_bounded(
     e = materialize(edges.select("src", "dst"))
     for _ in range(rounds):
         # survivor list materialized (tiny: one row per surviving node)
-        # so (a) its count is measured for the broadcast decision — in
+        # so (a) its count is measured for the broadcast decision — by
         # the SAME job that materializes it (materialize_counted) — and
         # (b) both semi joins consume the same blocks instead of each
         # re-running the degree aggregate. Broadcast semis run map-side
         # over the edge blocks — no per-round |E| shuffle (the
         # checkpointed edge frame has no stats, so the unhinted plan
         # sort-merged BOTH semi joins, shuffling e by src AND by dst
-        # every round). A survivor list too big to broadcast falls back
+        # every round). Both semis join aliases of the one survivor
+        # frame (_semi_both_ends), so the list is broadcast ONCE and the
+        # exchange reused: four jobs per round (degree aggregate's
+        # shuffle map and materialize, one broadcast, the edge
+        # materialize). A survivor list too big to broadcast falls back
         # to exactly that sort-merge shape.
         keep, keep_count = materialize_counted(
             e.groupBy("src")
@@ -446,11 +464,7 @@ def kcore_bounded(
             .select("src")
         )
         k_b = broadcast_if_small(keep, keep_count, row_bytes=8)
-        e = materialize(
-            e.join(k_b, "src", "left_semi").join(
-                k_b.withColumnRenamed("src", "dst"), "dst", "left_semi"
-            )
-        )
+        e = materialize(_semi_both_ends(e, k_b))
     return e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias(degree_alias)
     )
@@ -493,11 +507,12 @@ def kcore_exact(
         if converged:
             break
         rounds += 1
-        # same fused materialize+count broadcast as kcore_bounded (see
-        # its in-loop comment): map-side semis when the survivor list
-        # fits, unchanged sort-merge shape when it doesn't. The
-        # convergence count rides new_e's materializing job too — two
-        # jobs per peeling round total, down from four.
+        # same observed-count materialize and single survivor broadcast
+        # as kcore_bounded (see its in-loop comment): map-side semis when
+        # the survivor list fits, unchanged sort-merge shape when it
+        # doesn't. The convergence count is observed on new_e's
+        # materializing job too, so a peeling round costs the same four
+        # jobs as a bounded round.
         keep, keep_count = materialize_counted(
             e.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
@@ -505,11 +520,7 @@ def kcore_exact(
             .select("src")
         )
         k_b = broadcast_if_small(keep, keep_count, row_bytes=8)
-        new_e, new_count = materialize_counted(
-            e.join(k_b, "src", "left_semi").join(
-                k_b.withColumnRenamed("src", "dst"), "dst", "left_semi"
-            )
-        )
+        new_e, new_count = materialize_counted(_semi_both_ends(e, k_b))
         # Monotone shrink: the new set is a filter of the old, so an
         # unchanged count IS the fixpoint (every node already ≥ k).
         converged = new_count == e_count

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -207,19 +207,24 @@ def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
     """Materialize ``df`` AND return its row count from ONE Spark job.
 
     Every iterative operator needs both the lineage cut and a row count
-    (broadcast decisions, convergence tests, loop sizing), and paying
-    ``materialize(df)`` + ``df.count()`` separately costs two jobs per
-    round. The r14 driver's scaling block showed the graph family is
-    job-overhead-bound at bench scale (FASTER at 8 cores than 32), so
-    per-round fixed jobs are exactly what the bill is made of. A LAZY
-    checkpoint followed by ``count()`` materializes the blocks DURING
-    the counting job, so the pair costs one job; at cluster scale the
-    saving is one scheduler round-trip per round, never a correctness
-    difference (the count is read from the same materialized frame
-    either way).
+    (broadcast decisions, convergence tests, loop sizing). The graph
+    family is job-overhead-bound at bench scale (FASTER at 8 cores than
+    32), so per-round fixed jobs are exactly what the bill is made of.
+    The count is OBSERVED on the materializing job itself: an
+    ``Observation`` counts rows as the eager ``materialize`` writes its
+    blocks, and ``Observation.get`` reads the result once that job ends.
+    A ``count()`` after a lazy checkpoint is an aggregate instead, and
+    under AQE its single-partition exchange makes it two jobs: the map
+    side, which writes the blocks, then the final count.
+
+    An already-materialized input is returned as is (``materialize``'s
+    skip) and counted directly: there is no materializing job to observe.
     """
-    out = materialize(df, eager=False)
-    return out, out.count()
+    if _already_materialized(df):
+        return df, df.count()
+    obs = Observation()
+    out = materialize(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return out, obs.get["n"]
 
 
 def _parse_bytes(raw: str) -> int:

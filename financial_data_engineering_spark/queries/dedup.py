@@ -800,7 +800,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile(key, pdf):
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]

@@ -132,9 +132,10 @@ def ann_ivf_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index lifecycle round-trip: build the persisted index (k-means
     + cluster-partitioned inverted lists, llm/index.py) then serve the
     same query set FROM the index. The serve path reads only the probed
-    cluster partitions — ``cluster IN (...)`` prunes at the partition
-    directory — and its scoring/tie-break path is byte-identical to
-    ``ann_ivf_cosine``'s, so IVF_ORACLE is its oracle verbatim. The build
+    cluster partitions — the broadcast probes prune the partition
+    directories at run time — and its scoring/tie-break path is
+    byte-identical to ``ann_ivf_cosine``'s, so IVF_ORACLE is its oracle
+    verbatim. The build
     cost is charged to this query on purpose: the production shape is
     build-once/serve-many, and the gate proves the round-trip preserves
     every rank bit."""

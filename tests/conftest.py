@@ -5,6 +5,10 @@ Spark DataFrames.
 
 from __future__ import annotations
 
+import contextlib
+import types
+import uuid
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -18,6 +22,27 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 def spark() -> SparkSession:
     session = get_spark("tests", shuffle_partitions=8)
     yield session
+
+
+@contextlib.contextmanager
+def count_jobs(spark):
+    """Count the Spark jobs submitted inside the ``with`` block. The block
+    runs under a fresh job group; on exit the listener bus is drained
+    (the status store learns of jobs asynchronously) and the group's job
+    ids are counted. Yields a namespace whose ``n`` is that count after
+    the block.
+    """
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    counted = types.SimpleNamespace(n=None)
+    try:
+        yield counted
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counted.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture()

@@ -432,6 +432,29 @@ def test_kcore_random_graph_matches_reference(spark):
         _run_kcore(spark, undirected, k=k)
 
 
+def test_kcore_bounded_job_ceiling(spark):
+    """A peeling round submits at most four Spark jobs: the degree
+    aggregate's shuffle map stage, its materialize (the survivor count is
+    observed on that job), ONE survivor broadcast that both semi joins
+    share, and the edge materialize. A second broadcast, or a separate
+    count after a materialize, breaks the ceiling."""
+    from financial_data_engineering_spark.operators.graph import kcore_bounded
+    from tests.conftest import count_jobs
+
+    rng = random.Random(5)
+    undirected = {
+        (min(a, b), max(a, b))
+        for a, b in ((rng.randrange(40), rng.randrange(40)) for _ in range(200))
+        if a != b
+    }
+    sym = [(a, b) for a, b in undirected] + [(b, a) for a, b in undirected]
+    edf = spark.createDataFrame(sym, "src long, dst long")
+    for rounds in (1, 3):
+        with count_jobs(spark) as jobs:
+            kcore_bounded(edf, k=6, rounds=rounds)
+        assert jobs.n <= 4 * rounds + 1, (rounds, jobs.n)
+
+
 def test_kcore_query_docstring_constants_in_sync():
     """queries/graph.py inlines KCORE_ROUNDS/KCORE_K as literals in the
     query docstring (a plain string cannot interpolate them); this pin

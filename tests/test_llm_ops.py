@@ -614,26 +614,54 @@ def test_kmv_intersection_exact_when_sketch_not_full(spark):
     assert row["jaccard_e4"] == 2500  # 10/40
 
 
+def _executed_scans(df, location_substr: str) -> list[tuple[str, int]]:
+    """(partition filters, "number of partitions read") of every executed
+    file scan whose root path contains ``location_substr``, walking the
+    final adaptive plan through its query stages."""
+    found = []
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if cls == "FileSourceScanExec" and location_substr in str(
+            node.relation().location().rootPaths()
+        ):
+            read = node.metrics().get("numPartitions").get().value()
+            found.append((str(node.partitionFilters()), int(read)))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
 def test_ivf_index_roundtrip_matches_direct(spark, tmp_path):
     """Persisted-index serving must return exactly what the one-shot
-    ivf_topk computes (same centroid seed, scoring, and tie-breaks), and
-    the probed read must touch fewer list partitions than the index has."""
+    ivf_topk computes (same centroid seed, scoring, and tie-breaks),
+    submit no Spark job before the caller's action, and read fewer list
+    partitions than the index has."""
     from financial_data_engineering_spark.llm.index import (
         build_ivf_index,
         ivf_topk_from_index,
     )
     from financial_data_engineering_spark.llm.similarity import ivf_topk
     from financial_data_engineering_spark.tables import load
-    from tests.conftest import SF_SMALL
+    from tests.conftest import SF_SMALL, count_jobs
 
     emb = load(spark, "embeddings", SF_SMALL)
     queries = emb.filter(F.col("vec_id") < 2)
     idx = str(tmp_path / "ivf_index")
     build_ivf_index(emb, idx, n_centroids=8, n_iters=2, dim=64)
 
-    served = ivf_topk_from_index(
-        spark, queries, idx, k=5, nprobe=2, dim=64
-    )
+    with count_jobs(spark) as jobs:
+        served = ivf_topk_from_index(
+            spark, queries, idx, k=5, nprobe=2, dim=64
+        )
+    assert jobs.n == 0
     direct = ivf_topk(
         queries, emb, k=5, n_centroids=8, nprobe=2, dim=64, n_iters=2
     )
@@ -642,17 +670,23 @@ def test_ivf_index_roundtrip_matches_direct(spark, tmp_path):
     want = sorted(tuple(r[c] for c in cols) for r in direct.collect())
     assert got == want
 
-    # partition pruning: the cluster IN (...) filter reaches the scan as
-    # a PartitionFilter (directory-level pruning — inputFiles() reports
-    # the unpruned relation, so assert on the physical plan)
-    import re
-
-    from financial_data_engineering_spark import plans
-
-    full = spark.read.parquet(f"{idx}/lists")
-    pruned = full.filter(F.col("cluster").isin([0, 1]))
-    txt = plans.plan_text(pruned)
-    assert re.search(r"PartitionFilters: \[cluster#\d+ IN \(0,1\)\]", txt)
+    # partition pruning of the SERVED frame: the broadcast probes prune
+    # the lists scan by cluster at run time (dynamic partition pruning),
+    # so the executed scan reads fewer cluster directories than exist
+    [(filters, read)] = _executed_scans(served, "ivf_index/lists")
+    assert "dynamicpruningexpression(cluster#" in filters, filters
+    assert 0 < read < 8
+    # the same holds for a query set built on the driver, which carries
+    # no filter of its own for the pruning rule to see
+    local_queries = spark.createDataFrame(queries.collect(), queries.schema)
+    served_local = ivf_topk_from_index(
+        spark, local_queries, idx, k=5, nprobe=2, dim=64
+    )
+    assert sorted(
+        tuple(r[c] for c in cols) for r in served_local.collect()
+    ) == want
+    [(_, read_local)] = _executed_scans(served_local, "ivf_index/lists")
+    assert 0 < read_local < 8
 
 
 def test_ivf_from_index_dir_removed_at_exit_once(spark, monkeypatch):

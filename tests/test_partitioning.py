@@ -12,6 +12,7 @@ guard keeps bare ``localCheckpoint`` from creeping back in.
 from __future__ import annotations
 
 import pathlib
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +23,7 @@ from financial_data_engineering_spark.partitioning import (
     materialize_counted,
     remove_scratch_dir,
 )
+from tests.conftest import count_jobs
 
 SRC = pathlib.Path(__file__).resolve().parents[1] / (
     "financial_data_engineering_spark"
@@ -58,6 +60,75 @@ def test_materialize_reliable_without_ckpt_dir_uses_replicated_persist(
         out.unpersist()
     finally:
         spark.conf.set("spark.fdes.materialize.mode", "auto")
+
+
+def _materialize_counted_within(df, seconds=120):
+    """materialize_counted on a daemon thread: a count observed on a job
+    that never ran would block ``Observation.get`` forever, and this
+    turns that hang into a failure."""
+    box = {}
+
+    def run():
+        try:
+            box["result"] = materialize_counted(df)
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            box["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"materialize_counted still blocked after {seconds} s"
+    if "error" in box:
+        raise box["error"]
+    return box["result"]
+
+
+@pytest.mark.parametrize(
+    "mode", ["local", "reliable_persist", "reliable_checkpoint"]
+)
+def test_materialize_counted_exact_in_every_mode(spark, tmp_path, mode):
+    """The count observed on the materializing job is exact, empty frames
+    included, and the returned frame is re-consumable in all three
+    materialize modes: local checkpoint, the reliable mode's replicated
+    persist (no checkpoint dir) and its reliable checkpoint."""
+    sc = spark.sparkContext
+    if mode == "reliable_persist" and sc.getCheckpointDir():
+        pytest.skip("checkpoint dir already set by an earlier test")
+    if mode == "reliable_checkpoint":
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(
+        "spark.fdes.materialize.mode", "local" if mode == "local" else "reliable"
+    )
+    try:
+        df = spark.range(200).filter(F.col("id") % 7 == 0)
+        out, n = _materialize_counted_within(df)
+        assert n == 29
+        assert out.count() == 29
+        assert _rows(out) == _rows(df)
+        empty, n0 = _materialize_counted_within(df.filter(F.col("id") < 0))
+        assert n0 == 0
+        assert empty.count() == 0
+        if mode == "reliable_persist":
+            assert out.storageLevel.replication == 2
+            out.unpersist()
+            empty.unpersist()
+    finally:
+        spark.conf.unset("spark.fdes.materialize.mode")
+
+
+def test_materialize_counted_is_one_job(spark):
+    """In local mode the lineage cut and the count cost ONE Spark job for
+    a map-only frame: the count is observed on the localCheckpoint job,
+    with no count aggregate after it."""
+    df = spark.range(1000).filter(F.col("id") % 3 == 0)
+    spark.conf.set("spark.fdes.materialize.mode", "local")
+    try:
+        with count_jobs(spark) as jobs:
+            out, n = materialize_counted(df)
+    finally:
+        spark.conf.unset("spark.fdes.materialize.mode")
+    assert n == 334
+    assert jobs.n == 1
 
 
 def test_materialize_reliable_with_ckpt_dir_checkpoints(spark, tmp_path):

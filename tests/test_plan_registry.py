@@ -38,7 +38,9 @@ from tests.conftest import SF_MEDIUM, SF_SMALL
 SHUFFLE_BUDGET = {
     "ann_ivf_cosine": 3,
     # serve-from-index plan: dedup + rank window + presentation sort; the
-    # index build's own jobs run at build time, outside this plan
+    # index build's own jobs run at build time, outside this plan, and
+    # the lists scan is pruned by the broadcast probes (dynamic
+    # partition pruning reuses that exchange, so it adds no shuffle)
     "ann_ivf_from_index": 3,
     "ann_lsh_cosine": 2,
     "ann_lsh_multiprobe": 2,
