@@ -10,6 +10,15 @@ than memory against a 1MB-capped spill dir raises
 OutOfMemoryException ("failed to offload data block") — rather than
 monkeypatching, so the test breaks if DuckDB changes the error
 taxonomy the retry keys on.
+
+Whether that sort exhausts the cap depends on DuckDB's per-thread share
+of the memory limit, and ``threads`` defaults to the host's core count.
+Under DuckDB 1.0.0 only standard 256 KiB blocks count against
+``max_temp_directory_size``; at 16 threads or fewer the 64MB sort
+spills larger buffers (1.5-2.4 MB each) that the cap does not count,
+so it finishes with hundreds of MB on disk and never raises. The
+forced-spill tests therefore pin ``threads=32``, the setting on the
+host where they were written, on every connection the runner opens.
 """
 
 from __future__ import annotations
@@ -27,8 +36,26 @@ _SPILL_SQL = (
     " (SELECT * FROM range(20000000) ORDER BY hash(range))"
 )
 
+#: DuckDB ``threads`` at which _SPILL_SQL exhausts a 1MB spill cap
+#: under a 64MB memory limit (24 and above raise; 16 and below finish).
+_SPILL_THREADS = 32
 
-def test_forced_spill_exhaustion_retries_and_succeeds():
+
+@pytest.fixture
+def spill_threads(monkeypatch):
+    """Pin ``threads`` on every connection an OracleRunner opens, base
+    and escalated, so the forced spill fails the same way on any host."""
+    connect = OracleRunner._connect
+
+    def _connect(self, mem, temp_size):
+        con = connect(self, mem, temp_size)
+        con.execute(f"SET threads={_SPILL_THREADS}")
+        return con
+
+    monkeypatch.setattr(OracleRunner, "_connect", _connect)
+
+
+def test_forced_spill_exhaustion_retries_and_succeeds(spill_threads):
     runner = OracleRunner(
         SF_SMALL, mem="64MB", temp="1MB", retry_mem="4GB", retry_temp="10GB"
     )
@@ -40,7 +67,7 @@ def test_forced_spill_exhaustion_retries_and_succeeds():
     assert rows2 == [(20000000,)] and not retried2
 
 
-def test_retry_preserves_table_views():
+def test_retry_preserves_table_views(spill_threads):
     """The fresh escalated connection must re-register the sf views —
     an oracle that failed mid-gate resumes against the same tables."""
     runner = OracleRunner(
@@ -67,7 +94,7 @@ def test_dead_connection_rebuilds_transparently():
     assert rows2[0][0] > 0
 
 
-def test_failed_escalation_restores_usable_connection(monkeypatch):
+def test_failed_escalation_restores_usable_connection(spill_threads):
     """When the escalated retry itself fails, the query fails but the
     NEXT query still runs (a fresh base connection was restored)."""
     runner = OracleRunner(

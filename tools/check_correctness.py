@@ -190,7 +190,9 @@ class OracleRunner:
     connection — not a SET on the old one — because a Fatal error
     invalidates the database object. Escalated caps persist for the
     remaining queries of the session: caps only ever go up, and a later
-    query that needed the old behavior just spills less.
+    query that needed the old behavior just spills less. Under DuckDB
+    1.0.0 the ``retry_temp`` cap bounds only standard 256 KiB blocks:
+    spill buffers larger than that are not counted against it.
     """
 
     def __init__(
@@ -210,7 +212,8 @@ class OracleRunner:
         )
         # ``temp`` caps the BASE connection's spill dir — unset in the
         # gate (unlimited); the forced-spill test uses it to provoke
-        # the exhaustion class deterministically.
+        # the exhaustion class, which DuckDB raises only at a small
+        # per-thread memory share (many threads under a low mem cap).
         _reap_stale_spill_dirs()
         self._base_mem = mem or os.environ.get("FDES_DUCKDB_MEM", "32GB")
         self._base_temp = temp
