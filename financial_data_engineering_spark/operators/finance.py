@@ -16,9 +16,9 @@ Scale shape:
   the (total-order key, price) pair through map-side partial
   aggregation, so a 100 TB tick table rolls up with a single shuffle of
   |bars| rows and no window or self-join. The per-bar state is O(1),
-  and the merge is associative+commutative — the same property the
-  streaming twin (streaming/stateful.py ``running_ohlc``) relies on for
-  exact batch parity under ANY arrival order.
+  and the merge is associative+commutative, so the streaming twin
+  (streaming/stateful.py ``running_ohlc``) IS this aggregate run over
+  the stream — exact batch parity under ANY arrival order.
 - ``ewma_band_merge`` is the per-step lambda of a left fold: EWMA is a
   sequential recurrence BY DEFINITION (each output depends on the
   previous), so the scale axis is across keys — thousands of symbols
@@ -50,6 +50,12 @@ EWMA_ALPHA_DEN = 8
 #: Band half-width in mean-absolute-deviation units: breach when the
 #: tick lands strictly outside prev_ewma +/- BAND_K * prev_dev.
 BAND_K = 2
+
+#: Rolling-band window: statistics over the ROLL_N ticks strictly before
+#: the current one; a tick is evaluated only once ROLL_MIN past ticks
+#: exist (early-history ticks have no meaningful band).
+ROLL_N = 20
+ROLL_MIN = 5
 
 
 def ohlc_bars(

@@ -93,6 +93,22 @@ def hll_hashes(
     )
 
 
+def hll_bucket_rho(
+    hashed: DataFrame, group_col: str | None = None
+) -> DataFrame:
+    """``(grp?, bucket, rho)`` of each hash ``h``: the register layout
+    that the batch register table and the streaming twin
+    (streaming/stateful.py ``running_hll_registers``) both fold with
+    ``max(rho)`` per bucket."""
+    keys = [group_col] if group_col else []
+    rho = RHO_SQL.format(bitlen=f"conv(CAST(h % {HLL_W_MOD} AS STRING), 10, 2)")
+    return hashed.select(
+        *keys,
+        F.expr(f"h div {HLL_W_MOD}").alias("bucket"),
+        F.expr(rho).cast("long").alias("rho"),
+    )
+
+
 def hll_registers_from_hashes(
     hashed: DataFrame, group_col: str | None = None
 ) -> DataFrame:
@@ -101,13 +117,8 @@ def hll_registers_from_hashes(
     rides the same single pass instead of re-scanning the fact: the
     estimate fold just sums it. Bounded at m rows per group."""
     keys = [group_col] if group_col else []
-    rho = RHO_SQL.format(bitlen=f"conv(CAST(h % {HLL_W_MOD} AS STRING), 10, 2)")
     return (
-        hashed.select(
-            *keys,
-            F.expr(f"h div {HLL_W_MOD}").alias("bucket"),
-            F.expr(rho).cast("long").alias("rho"),
-        )
+        hll_bucket_rho(hashed, group_col)
         .groupBy(*keys, "bucket")
         .agg(F.max("rho").alias("reg"), F.count(F.lit(1)).alias("cnt"))
     )

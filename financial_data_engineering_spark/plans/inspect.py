@@ -29,13 +29,33 @@ def _formatted(df: DataFrame) -> str:
 
 
 def plan_text(df: DataFrame) -> str:
-    """The formatted physical plan. For a frame that has already executed
-    under AQE, the formatted output contains BOTH the final plan and an
-    "Initial Plan" section — keep only the former, or every node (and
-    every Exchange) counts twice."""
+    """The formatted physical plan, final plans only. An adaptive plan
+    that has executed (the frame itself, or a cached relation inside it)
+    prints its final plan, then an "Initial Plan" tree, and the numbered
+    node details of BOTH — so every initial-only node (and Exchange)
+    would count twice. Spark numbers an adaptive plan's final-plan nodes
+    first, ending at the final root, then its initial-only nodes, then
+    the AdaptiveSparkPlan node itself; the ids strictly between the
+    final root and that node are the initial-only ones, and their tree
+    lines and detail blocks are dropped."""
     text = _formatted(df)
-    marker = text.find("== Initial Plan ==")
-    return text if marker == -1 else text[:marker]
+    initial_only = set()
+    for asp, root in re.findall(
+        r"AdaptiveSparkPlan \((\d+)\)\n[ :+-]*== Final Plan ==\n[^(\n]*\((\d+)\)",
+        text,
+    ):
+        initial_only.update(str(i) for i in range(int(root) + 1, int(asp)))
+    # a line belongs to its detail block (header to blank line) or, in a
+    # tree, to the first node id it names
+    kept, block = [], None
+    for line in text.split("\n"):
+        head = re.match(r"\((\d+)\) ", line)
+        if head or not line.strip():
+            block = head[1] if head else None
+        node = block or (re.findall(r"\((\d+)\)", line) or [None])[0]
+        if node not in initial_only and "== Initial Plan ==" not in line:
+            kept.append(line)
+    return "\n".join(kept)
 
 
 @dataclass

@@ -39,6 +39,8 @@ from pyspark.sql.window import Window
 
 from financial_data_engineering_spark.operators.finance import (
     BAND_K,
+    ROLL_MIN,
+    ROLL_N,
     ewma_band_fold,
     ohlc_bars,
 )
@@ -50,12 +52,6 @@ from financial_data_engineering_spark.partitioning import (
 )
 from financial_data_engineering_spark.queries.registry import register
 from financial_data_engineering_spark.tables import load
-
-#: Rolling-band window: statistics over the ROLL_N ticks strictly before
-#: the current one; a tick is evaluated only once ROLL_MIN past ticks
-#: exist (early-history ticks have no meaningful band).
-ROLL_N = 20
-ROLL_MIN = 5
 
 #: EWMA segmented-replay bound: no key's tick history is ever collected
 #: into an array longer than this. 2^16 five-long-field structs is
@@ -119,9 +115,9 @@ def _li_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ev_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(user_id, o=struct(us, eid), px) view of events."""
-    ev = load(spark, "events", sf_dir)
+def events_seq(ev: DataFrame) -> DataFrame:
+    """(user_id, o=struct(us, eid), px) view of an events frame, batch
+    or streaming."""
     return ev.select(
         "user_id",
         F.struct(
@@ -130,6 +126,26 @@ def _ev_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("o"),
         F.round(F.col("value") * 100).cast("long").alias("px"),
     )
+
+
+def _ev_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events_seq`` of the events table."""
+    return events_seq(load(spark, "events", sf_dir))
+
+
+def events_ohlc(ev: DataFrame) -> DataFrame:
+    """Lifetime OHLC bar of each user's e2 values over an events frame:
+    ONE grouped aggregate, ``ohlc_bars`` keyed by the (us, eid) struct,
+    with ``sum_e2`` riding the same aggregate. The batch query and the
+    streaming twin (streaming/stateful.py ``running_ohlc``) both run
+    exactly this."""
+    return ohlc_bars(
+        events_seq(ev),
+        ["user_id"],
+        "o",
+        "px",
+        extra_aggs=[F.sum("px").alias("sum_e2")],
+    ).withColumnRenamed("n_trades", "n_events")
 
 
 _EWMA_REDUCE_SQL = """
@@ -335,25 +351,15 @@ def part_brand_ohlc_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def user_value_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lifetime OHLC of each user's event values — the batch twin of
-    streaming/stateful.py running_ohlc, which must reproduce these rows
-    exactly from ANY arrival order (the OHLC state merge is associative
-    and commutative, a stronger guarantee than the TWAP twin's ordered
-    replay). ONE grouped aggregate over (ts, event_id)-struct-keyed
-    values — sum_e2 rides the same agg via extra_aggs, never a second
-    scan+join; values may be negative (the order key is the timestamp
-    triple, not the value)."""
-    return (
-        ohlc_bars(
-            _ev_seq(spark, sf_dir),
-            ["user_id"],
-            "o",
-            "px",
-            extra_aggs=[F.sum("px").alias("sum_e2")],
-        )
-        .withColumnRenamed("n_trades", "n_events")
-        .orderBy("user_id")
-    )
+    """Lifetime OHLC of each user's event values — ``events_ohlc`` over
+    the events table. Its streaming twin, streaming/stateful.py
+    running_ohlc, IS ``events_ohlc`` over the stream: the same single
+    aggregate, whose merge is associative and commutative, so the
+    stream reproduces these rows exactly from ANY arrival order (a
+    stronger guarantee than the TWAP twin's ordered replay). Values may
+    be negative (the order key is the (ts, event_id) struct, not the
+    value)."""
+    return events_ohlc(load(spark, "events", sf_dir)).orderBy("user_id")
 
 
 @register(
@@ -810,9 +816,9 @@ def user_value_rolling_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user rolling value-band breach counter — the events-table
     sibling of part_brand_rolling_band (identical all-int64 squared
     inequality), and the batch twin of streaming/stateful.py
-    running_rolling_band, whose state is the last ROLL_N (ts, id, px)
-    observations per user — the window IS the state, so streaming this
-    metric needs exactly 20 tuples per key. One user-partitioned window
+    running_rolling_band, whose state is the last ROLL_N px values per
+    user — the window IS the state, so streaming this metric needs
+    exactly 20 values per key. One user-partitioned window
     shuffle reused by the rollup, plus the presentation sort."""
     seq = _ev_seq(spark, sf_dir)
     w = (

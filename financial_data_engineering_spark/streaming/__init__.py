@@ -1,5 +1,10 @@
 """Structured Streaming extensions: windowed aggregations, sessionization,
-and watermark-bounded dedup over the events stream."""
+and watermark-bounded dedup over the events stream (events.py), stream
+screens over the document corpus (documents.py), and the stateful twins
+of batch queries (stateful.py): order-free folds run as native streaming
+aggregates, order-dependent folds as one shared (ts, event_id)-ordered
+replay under applyInPandasWithState, and the shard-keyed sketches as
+per-shard Python summaries."""
 
 from financial_data_engineering_spark.streaming.documents import (
     contamination_screen,

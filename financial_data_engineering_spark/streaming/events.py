@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from financial_data_engineering_spark.schemas import SCHEMAS
 
@@ -190,10 +191,12 @@ def funnel_pairs(
 
 def run_to_memory_sink(
     stream: DataFrame, table_name: str, output_mode: str = "complete"
-) -> None:
+) -> StreamingQuery:
     """Drain a (bounded) stream into an in-memory sink table and block
     until every available input file is processed — the test/dev harness
-    path. Production sinks swap this for :func:`run_to_parquet_sink`."""
+    path. Production sinks swap this for :func:`run_to_parquet_sink`.
+    Returns the finished query, whose ``lastProgress`` reports the last
+    micro-batch's state-store size per stateful operator."""
     query = (
         stream.writeStream.format("memory")
         .queryName(table_name)
@@ -202,6 +205,7 @@ def run_to_memory_sink(
         .start()
     )
     query.awaitTermination()
+    return query
 
 
 def run_to_parquet_sink(

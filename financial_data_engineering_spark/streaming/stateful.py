@@ -1,163 +1,210 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
+"""Stateful streaming twins: per-key state carried across micro-batches
 (SURVEY.md §2.L — the reference has no streaming; this is the designed
-extension for per-key state that windowed aggregates can't express).
+extension for state that windowed aggregates can't express).
 
-``running_user_stats`` maintains per-user lifetime counters (event count,
-value sum, max single value, last-seen timestamp) across micro-batches and
-emits the updated row for every user touched in a batch — the
-feature-store/CDC shape: downstream consumers always see the latest
-per-key aggregate without recomputing history.
+Each twin is the streaming version of a batch query or operator, and
+its latest emission per key reproduces the batch rows (parity-tested in
+tests/test_streaming.py). The twins come in three kinds:
 
-Scale: state is partitioned by user_id across the cluster's state store
+- **Native aggregates** for the order-free folds: ``running_user_stats``
+  (count, sum, max), ``running_ohlc`` and ``running_hll_registers``.
+  Their merges are associative and commutative (count, sum, min, max,
+  min_by/max_by over a total order), so Spark's own streaming
+  aggregation keeps them: partial aggregation before the shuffle ships
+  one row per key and micro-batch, the buffers live in the state store,
+  no Python worker starts, and the result cannot depend on arrival
+  order. Each reuses its batch twin's operator — ``running_ohlc`` IS
+  ``queries.finance.events_ohlc``, the aggregate ``user_value_ohlc``
+  runs.
+- **Ordered replays** for the order-dependent folds: transitions, TWAP,
+  EWMA band, drawdown, underwater runs, monthly bars, rolling band, CDC
+  snapshot and SCD2 history. Each is a recurrence over a key's events
+  in (ts, event_id) order, which no aggregate expresses, so it runs as
+  an ``applyInPandasWithState`` fold built by ``_ordered_replay``: the
+  twin supplies only its per-event ``step`` and its ``emit``. Ordering
+  contract, shared by all nine: events must arrive in non-decreasing
+  (ts, event_id) order per key ACROSS micro-batches (within a batch the
+  slice is sorted); an event at or below the key's (last_us, last_id)
+  high-water mark — the first two fields of every ordered state — is
+  DROPPED, never replayed backwards, which also makes redelivery
+  idempotent. This is the contract of a watermark with dropped lates,
+  enforced per key.
+- **Shard-keyed sketches** (heavy hitters, quantile sketch, KMV): items
+  hash across ``n_shards`` state keys, and each shard folds its slice
+  into the batch operator's own bounded Python summary.
+
+Scale: state is partitioned by key across the cluster's state store
 (RocksDB provider on a real deployment); each micro-batch shuffles only
-that batch's events to their key's partition. The Arrow batch boundary
-means Python sees one (key, batch-slice) pandas frame per key per batch.
+its own rows to their key's partition. State is O(1) per key, or
+O(k) per shard, except SCD2's version chain, which is short by the
+dimension contract on ``SCD2_STATE``.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from types import SimpleNamespace
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = (
-    "user_id long, n_events long, total_value double, max_value double, "
-    "last_ts timestamp"
+from financial_data_engineering_spark.operators.finance import (
+    BAND_K,
+    EWMA_ALPHA_DEN,
+    EWMA_ALPHA_NUM,
+    ROLL_MIN,
+    ROLL_N,
 )
 
-STATE_SCHEMA = "n long, total double, mx double, last long"
 
-
-def _update_user(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: fold this batch's slice into the persisted
-    (count, sum, max, last_seen_micros) tuple and emit the new totals."""
-    n, total, mx, last = state.get if state.exists else (0, 0.0, None, None)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        batch_max = float(pdf["value"].max()) if len(pdf) else None
-        if batch_max is not None:
-            mx = batch_max if mx is None else max(mx, batch_max)
-        batch_last = pdf["ts"].max()
-        if pd.notna(batch_last):
-            micros = int(batch_last.value // 1000)
-            last = micros if last is None else max(last, micros)
-    state.update((n, total, mx, last))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "total_value": [round(total, 2)],
-            "max_value": [mx],
-            "last_ts": [pd.Timestamp(last, unit="us") if last is not None else None],
-        }
+def _stateful(
+    frame: DataFrame,
+    key: str,
+    fold: Callable,
+    output: str,
+    state: str,
+    mode: str = "update",
+) -> DataFrame:
+    """``frame`` grouped by ``key`` through ``fold`` under
+    ``applyInPandasWithState``. State never expires (lifetime state —
+    swap in ``GroupStateTimeout.EventTimeTimeout`` plus a watermark to
+    bound state for keys that go quiet)."""
+    return frame.groupBy(key).applyInPandasWithState(
+        fold,
+        outputStructType=output,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def _ordered_replay(
+    state_schema: str,
+    init: tuple,
+    step: Callable[[SimpleNamespace, int, Any], Any],
+    emit: Callable[[Any, SimpleNamespace, list], pd.DataFrame],
+) -> Callable:
+    """The fold of an ordered twin. Restores the key's state (or
+    ``init``) as a namespace named by ``state_schema``'s fields, whose
+    first two are the (last_us, last_id) high-water mark; replays the
+    batch slice in (ts, event_id) order, dropping every event at or
+    below the mark; calls ``step(s, us, event)`` per surviving event and
+    collects what it returns (if not None); advances the mark; persists
+    the state; and yields ``emit(key, s, collected)``. An empty batch
+    iterator (key timeouts deliver one) leaves the state untouched.
+    Steps replace list fields rather than mutate them, so an ``init``
+    list is never shared between keys."""
+    names = [field.split()[0] for field in state_schema.split(",")]
+
+    def fold(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        s = SimpleNamespace(
+            **dict(zip(names, state.get if state.exists else init))
+        )
+        out = []
+        frames = [pdf for pdf in pdfs if len(pdf)]
+        if frames:
+            batch = pd.concat(frames, ignore_index=True).sort_values(
+                ["ts", "event_id"], kind="mergesort"
+            )
+            for ev in batch.itertuples(index=False):
+                us, ident = int(ev.ts.value // 1000), int(ev.event_id)
+                if s.last_us is not None and (us, ident) <= (
+                    s.last_us,
+                    s.last_id,
+                ):
+                    continue  # late vs state: drop, never replay backwards
+                row = step(s, us, ev)
+                if row is not None:
+                    out.append(row)
+                s.last_us, s.last_id = us, ident
+            state.update(tuple(getattr(s, n) for n in names))
+        yield emit(key[0], s, out)
+
+    return fold
+
+
+def _px_events(events: DataFrame) -> DataFrame:
+    """(user_id, ts, event_id, px): px is the e2-scaled value, the batch
+    twins' integer price column."""
+    return events.select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.round(F.col("value") * 100).cast("long").alias("px"),
+    )
+
+
+# -- native aggregates: the order-free twins ----------------------------------
 
 
 def running_user_stats(events: DataFrame) -> DataFrame:
-    """Per-user lifetime stats, updated each micro-batch. Use with
-    ``outputMode("update")``; state never expires (lifetime counters —
-    swap in ``GroupStateTimeout.EventTimeTimeout`` plus a watermark to
-    bound state for keys that go quiet)."""
+    """Per-user lifetime stats (event count, value sum rounded to cents,
+    max single value, last-seen timestamp), updated each micro-batch —
+    the feature-store/CDC shape: downstream consumers always see the
+    latest per-key aggregate without recomputing history. A native
+    streaming aggregate, so arrival order cannot matter. Use with
+    ``outputMode("update")``; the state is one aggregation buffer per
+    user and never expires."""
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+        F.max("value").alias("max_value"),
+        F.max("ts").alias("last_ts"),
+    )
+
+
+def running_ohlc(events: DataFrame) -> DataFrame:
+    """Per-user running OHLC of event values — the streaming twin of
+    ``user_value_ohlc`` (queries/finance.py), and the same aggregate:
+    ``events_ohlc`` (``operators.finance.ohlc_bars`` keyed by the
+    (unix_micros(ts), event_id) struct, plus ``sum_e2``) applied to the
+    stream. Each micro-batch merges its partial bars into the per-user
+    buffer and re-emits the lifetime bar (update mode). The merge is
+    associative and commutative, so equal inputs give EQUAL outputs
+    under ANY arrival order — a strictly stronger parity guarantee than
+    the ordered twins', parity-tested with an arbitrary
+    (non-chronological) batch split. State per user is one OHLC
+    aggregation buffer."""
+    from financial_data_engineering_spark.queries.finance import events_ohlc
+
+    return events_ohlc(events)
+
+
+def running_hll_registers(items: DataFrame, item_col: str) -> DataFrame:
+    """Streaming HyperLogLog — the stateful twin of
+    ``operators.hll.hll_registers``. Keys hash and bucket with the SAME
+    pinned expressions as the batch operator (``hll_bucket_rho``:
+    bucket = top p bits, rho from the base-2 string length), then a
+    native ``max(rho)`` per bucket: the state is one register per bucket
+    — m integers total, the textbook O(m) streaming sketch — and
+    registers only grow, so the latest snapshot per bucket is just
+    ``max(reg)`` over the update stream. Feeding the final snapshot to
+    ``hll_estimate_from_registers`` reproduces the batch estimate
+    BIT-IDENTICALLY over the same key set (max is order-free). The keys
+    are not de-duplicated first: a ``distinct`` would make the state
+    hold every distinct key. For the same reason the exact-count audit
+    column — the batch operator's ``cnt`` needs the distinct keys
+    themselves — is not carried; the twin emits registers only."""
+    from financial_data_engineering_spark.operators.hll import hll_bucket_rho
+    from financial_data_engineering_spark.operators.sketch import kmv_hash
+
+    hashed = items.filter(F.col(item_col).isNotNull()).select(
+        kmv_hash(F.col(item_col)).alias("h")
+    )
     return (
-        events.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        hll_bucket_rho(hashed)
+        .groupBy(F.col("bucket").cast("int").alias("bucket"))
+        .agg(F.max("rho").alias("reg"))
     )
 
 
-TRANSITION_OUTPUT = (
-    "user_id long, prev_type string, next_type string, ts timestamp"
-)
-
-#: last event seen per user: event-time micros + id tiebreak (the
-#: cross-batch late-arrival guard) + type.
-TRANSITION_STATE = "last_micros long, last_id long, last_type string"
-
-
-def _emit_transitions(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: order this batch's slice by (ts, event_id),
-    DROP any event at or before the persisted last (ts, id) — a late
-    cross-batch arrival would otherwise fabricate an out-of-order
-    transition — then chain the rest after the last event, emit one row
-    per adjacent pair, and persist the new last event. Tolerates an
-    empty batch iterator (key timeouts deliver one)."""
-    last_micros, last_id, last_type = (
-        state.get if state.exists else (None, None, None)
-    )
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    out_prev, out_next, out_ts = [], [], []
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, etype in zip(
-            batch["ts"], batch["event_id"], batch["event_type"]
-        ):
-            micros, ident = int(ts.value // 1000), int(eid)
-            if last_type is not None and (micros, ident) <= (
-                last_micros,
-                last_id,
-            ):
-                continue  # late vs state: drop, never emit backwards
-            if last_type is not None:
-                out_prev.append(last_type)
-                out_next.append(etype)
-                out_ts.append(ts)
-            last_micros, last_id, last_type = micros, ident, etype
-        if last_type is not None:
-            state.update((last_micros, last_id, last_type))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]] * len(out_prev),
-            "prev_type": out_prev,
-            "next_type": out_next,
-            "ts": out_ts,
-        }
-    )
-
-
-def event_transitions(events: DataFrame) -> DataFrame:
-    """Per-user event-type transitions as they happen — the streaming twin
-    of ``event_transition_counts`` (queries/analytics_ext.py): each emitted
-    row is one (prev_type → next_type) step in a user's sequence; counting
-    them grouped by the pair reproduces the batch query exactly when
-    events arrive in per-user event-time order (the micro-batch slice is
-    sorted, and state carries the last event across batches).
-
-    Out-of-order arrival ACROSS batches is handled by the state's
-    (ts, id) guard: an event at or before the per-user high-water mark is
-    DROPPED, never emitted as a backwards transition — the same contract
-    as a watermark with dropped lates, enforced per key. State per user
-    is one (ts, id, type) triple — O(|users|), the minimum any sequence
-    detector can hold."""
-    return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _emit_transitions,
-            outputStructType=TRANSITION_OUTPUT,
-            stateStructType=TRANSITION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+# -- shard-keyed sketches -----------------------------------------------------
 
 
 MG_OUTPUT = "shard int, item string, cnt long, seen long"
@@ -244,8 +291,6 @@ def running_heavy_hitters(
         raise ValueError(f"k must be >= 1, got {k}")
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    from pyspark.sql import functions as F
-
     rows = (
         items.select(F.col(item_col).cast("string").alias("item"))
         .filter(F.col("item").isNotNull())
@@ -253,12 +298,8 @@ def running_heavy_hitters(
             "shard", F.pmod(F.xxhash64("item"), F.lit(n_shards)).cast("int")
         )
     )
-    return rows.groupBy("shard").applyInPandasWithState(
-        _fold_heavy_hitters(k),
-        outputStructType=MG_OUTPUT,
-        stateStructType=MG_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        rows, "shard", _fold_heavy_hitters(k), MG_OUTPUT, MG_STATE
     )
 
 
@@ -343,8 +384,6 @@ def running_quantile_sketch(
     to their shard."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    from pyspark.sql import functions as F
-
     rows = (
         values.select(F.col(value_col).cast("double").alias("value"))
         .filter(F.col("value").isNotNull())
@@ -353,12 +392,8 @@ def running_quantile_sketch(
             F.pmod(F.xxhash64(F.col("value")), F.lit(n_shards)).cast("int"),
         )
     )
-    return rows.groupBy("shard").applyInPandasWithState(
-        _fold_quantile_sketch(k),
-        outputStructType=QSK_OUTPUT,
-        stateStructType=QSK_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        rows, "shard", _fold_quantile_sketch(k), QSK_OUTPUT, QSK_STATE
     )
 
 
@@ -426,8 +461,6 @@ def running_kmv_distinct(
         raise ValueError(f"k must be >= 1, got {k}")
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    from pyspark.sql import functions as F
-
     from financial_data_engineering_spark.operators.sketch import kmv_hash
 
     rows = (
@@ -437,77 +470,66 @@ def running_kmv_distinct(
             "shard", F.pmod(F.col("h"), F.lit(n_shards)).cast("int")
         )
     )
-    return rows.groupBy("shard").applyInPandasWithState(
-        _fold_kmv(k),
-        outputStructType=KMV_OUTPUT,
-        stateStructType=KMV_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(rows, "shard", _fold_kmv(k), KMV_OUTPUT, KMV_STATE)
+
+
+
+# -- ordered replays: the order-dependent twins -------------------------------
+
+
+TRANSITION_OUTPUT = (
+    "user_id long, prev_type string, next_type string, ts timestamp"
+)
+
+#: last event seen per user: the (ts, id) high-water mark + its type.
+TRANSITION_STATE = "last_us long, last_id long, last_type string"
+
+
+def _step_transition(s: SimpleNamespace, us: int, ev: Any):
+    """Chain the event after the user's last one: one (prev, next, ts)
+    row per adjacent pair."""
+    prev, s.last_type = s.last_type, ev.event_type
+    if prev is not None:
+        return prev, ev.event_type, ev.ts
+    return None
+
+
+def _emit_transition_rows(user: Any, s: SimpleNamespace, out: list):
+    return pd.DataFrame(
+        [(user, *row) for row in out],
+        columns=["user_id", "prev_type", "next_type", "ts"],
     )
 
 
-HLL_OUTPUT = "bucket int, reg long"
-
-#: per-bucket HLL state: ONE integer — the running max rho. The sketch's
-#: whole state is m such integers; no per-key growth anywhere.
-HLL_STATE = "reg long"
-
-
-def _fold_hll(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: fold this batch's rho slice into the bucket's
-    register with ``max`` — associative, commutative, idempotent, so
-    replayed duplicates and any micro-batch order produce the identical
-    register (exact equality with the batch sketch, pinned by test)."""
-    reg = state.get[0] if state.exists else 0
-    for pdf in pdfs:
-        if len(pdf):
-            reg = max(reg, int(pdf["rho"].max()))
-    state.update((int(reg),))
-    yield pd.DataFrame({"bucket": [int(key[0])], "reg": [reg]})
+_emit_transitions = _ordered_replay(
+    TRANSITION_STATE,
+    (None, None, None),
+    _step_transition,
+    _emit_transition_rows,
+)
 
 
-def running_hll_registers(items: DataFrame, item_col: str) -> DataFrame:
-    """Streaming HyperLogLog — the stateful twin of
-    ``operators.hll.hll_registers``. Keys hash and bucket with the SAME
-    pinned expressions as the batch operator (bucket = top p bits, rho
-    from the base-2 string length), then group BY BUCKET: the state is
-    one register integer per bucket — m integers total, the textbook
-    O(m) streaming sketch — and registers only grow, so the latest
-    snapshot per bucket is just ``max(reg)`` over the update stream.
-    Feeding the final snapshot to ``hll_estimate_from_registers``
-    reproduces the batch estimate BIT-IDENTICALLY over the same key set
-    (max is order-free). The exact-count audit column is the one thing
-    bounded state cannot carry — the batch operator's ``cnt`` needs the
-    distinct keys themselves — so the twin emits registers only."""
-    from pyspark.sql import functions as F
+def event_transitions(events: DataFrame) -> DataFrame:
+    """Per-user event-type transitions as they happen — the streaming twin
+    of ``event_transition_counts`` (queries/analytics_ext.py): each emitted
+    row is one (prev_type → next_type) step in a user's sequence; counting
+    them grouped by the pair reproduces the batch query exactly when
+    events arrive in per-user event-time order (the micro-batch slice is
+    sorted, and state carries the last event across batches).
 
-    from financial_data_engineering_spark.operators.hll import (
-        HLL_W_MOD,
-        RHO_SQL,
-    )
-    from financial_data_engineering_spark.operators.sketch import kmv_hash
-
-    rho = RHO_SQL.format(
-        bitlen=f"conv(CAST(h % {HLL_W_MOD} AS STRING), 10, 2)"
-    )
-    rows = (
-        items.filter(F.col(item_col).isNotNull())
-        .select(kmv_hash(F.col(item_col)).alias("h"))
-        .select(
-            F.expr(f"h div {HLL_W_MOD}").cast("int").alias("bucket"),
-            F.expr(rho).cast("long").alias("rho"),
-        )
-    )
-    return rows.groupBy("bucket").applyInPandasWithState(
-        _fold_hll,
-        outputStructType=HLL_OUTPUT,
-        stateStructType=HLL_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    Out-of-order arrival ACROSS batches is handled by the state's
+    (ts, id) guard: an event at or before the per-user high-water mark is
+    DROPPED, never emitted as a backwards transition — the same contract
+    as a watermark with dropped lates, enforced per key. State per user
+    is one (ts, id, type) triple — O(|users|), the minimum any sequence
+    detector can hold."""
+    return _stateful(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        "user_id",
+        _emit_transitions,
+        TRANSITION_OUTPUT,
+        TRANSITION_STATE,
+        mode="append",
     )
 
 
@@ -515,60 +537,44 @@ TWAP_OUTPUT = (
     "user_id long, n_segments long, span_us long, twap_e2 long"
 )
 
-#: per-user TWAP state: the last observation (event-time micros + id
-#: tiebreak + e2 value) and the closed-segment accumulators (count,
-#: total duration, value-time area in e2-microseconds).
+#: per-user TWAP state: the (ts, id) high-water mark, the last e2 value,
+#: and the closed-segment accumulators (count, total duration, value-time
+#: area in e2-microseconds).
 TWAP_STATE = (
-    "last_micros long, last_id long, last_v_e2 long, "
+    "last_us long, last_id long, last_px long, "
     "n_segments long, span_us long, area_e2us long"
 )
 
 
-def _fold_twap(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: order this batch's slice by (ts, event_id),
-    drop late arrivals at or before the persisted last observation (the
-    event_transitions guard — a late event would otherwise fabricate a
-    negative-duration segment), close one segment per adjacent pair with
-    exact integer microsecond x e2-value area, and emit the user's
-    running TWAP. Zero-duration segments (same-timestamp events) close
-    with zero weight, matching the batch query's dur > 0 filter."""
-    last_micros, last_id, last_v, n_seg, span, area = (
-        state.get if state.exists else (None, None, None, 0, 0, 0)
-    )
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, v_e2 in zip(
-            batch["ts"], batch["event_id"], batch["v_e2"]
-        ):
-            micros, ident = int(ts.value // 1000), int(eid)
-            if last_micros is not None and (micros, ident) <= (
-                last_micros,
-                last_id,
-            ):
-                continue  # late vs state: drop, never go backwards
-            if last_micros is not None and micros > last_micros:
-                dur = micros - last_micros
-                n_seg += 1
-                span += dur
-                area += int(last_v) * dur
-            last_micros, last_id, last_v = micros, ident, int(v_e2)
-        state.update((last_micros, last_id, last_v, n_seg, span, area))
-    twap = (2 * area + span) // (2 * span) if span > 0 else None
-    yield pd.DataFrame(
+def _step_twap(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """Close the segment from the last observation to this one with
+    exact integer microsecond x e2-value area. Zero-duration segments
+    (same-timestamp events) close with zero weight, matching the batch
+    query's dur > 0 filter."""
+    if s.last_us is not None and us > s.last_us:
+        dur = us - s.last_us
+        s.n_segments += 1
+        s.span_us += dur
+        s.area_e2us += s.last_px * dur
+    s.last_px = int(ev.px)
+
+
+def _emit_twap(user: Any, s: SimpleNamespace, out: list) -> pd.DataFrame:
+    span = s.span_us
+    twap = (2 * s.area_e2us + span) // (2 * span) if span else None
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
-            "n_segments": [n_seg],
+            "user_id": [user],
+            "n_segments": [s.n_segments],
             "span_us": [span],
             "twap_e2": [twap],
         }
     )
+
+
+_fold_twap = _ordered_replay(
+    TWAP_STATE, (None, None, None, 0, 0, 0), _step_twap, _emit_twap
+)
 
 
 def running_twap(events: DataFrame) -> DataFrame:
@@ -581,118 +587,10 @@ def running_twap(events: DataFrame) -> DataFrame:
     division — equal inputs in event-time order give EQUAL outputs
     (parity-tested). State per user is one observation + three
     accumulators; out-of-order arrivals across batches drop at the
-    (ts, id) guard, the same contract as event_transitions."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("v_e2"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fold_twap,
-            outputStructType=TWAP_OUTPUT,
-            stateStructType=TWAP_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-OHLC_OUTPUT = (
-    "user_id long, open_e2 long, high_e2 long, low_e2 long, "
-    "close_e2 long, n_events long, sum_e2 long"
-)
-
-#: per-user OHLC state: the (event-time micros, id) keys of the first
-#: and last observations with their e2 values, plus extremes/count/sum.
-#: Every field's merge is associative AND commutative (argmin/argmax by
-#: a total order, min, max, +), so the final state is identical for ANY
-#: arrival order — late data included, with no drop guard needed.
-OHLC_STATE = (
-    "first_micros long, first_id long, open_e2 long, "
-    "high_e2 long, low_e2 long, "
-    "last_micros long, last_id long, close_e2 long, "
-    "n_events long, sum_e2 long"
-)
-
-
-def _fold_ohlc(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: merge each observation into the OHLC state by
-    pure (argmin, argmax, min, max, sum, count) updates — the same
-    integer arithmetic as the batch twin's single grouped aggregate,
-    and order-independent by construction: unlike _fold_twap there is
-    no late-arrival drop, because every update commutes."""
-    if state.exists:
-        (f_us, f_id, opn, hi, lo, l_us, l_id, cls, n, tot) = state.get
-    else:
-        f_us = f_id = opn = hi = lo = l_us = l_id = cls = None
-        n, tot = 0, 0
-    for pdf in pdfs:
-        for ts, eid, v_e2 in zip(pdf["ts"], pdf["event_id"], pdf["v_e2"]):
-            micros, ident, v = int(ts.value // 1000), int(eid), int(v_e2)
-            if n == 0:
-                f_us, f_id, opn = micros, ident, v
-                l_us, l_id, cls = micros, ident, v
-                hi = lo = v
-            else:
-                if (micros, ident) < (f_us, f_id):
-                    f_us, f_id, opn = micros, ident, v
-                if (micros, ident) > (l_us, l_id):
-                    l_us, l_id, cls = micros, ident, v
-                hi = max(hi, v)
-                lo = min(lo, v)
-            n += 1
-            tot += v
-    state.update((f_us, f_id, opn, hi, lo, l_us, l_id, cls, n, tot))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "open_e2": [opn],
-            "high_e2": [hi],
-            "low_e2": [lo],
-            "close_e2": [cls],
-            "n_events": [n],
-            "sum_e2": [tot],
-        }
-    )
-
-
-def running_ohlc(events: DataFrame) -> DataFrame:
-    """Per-user running OHLC of event values — the streaming twin of
-    ``user_value_ohlc`` (queries/finance.py): each micro-batch merges
-    its observations into the per-user bar state and re-emits the
-    lifetime bar (update mode). The state merge is associative and
-    commutative (operators/finance.py ohlc_bars documents the same
-    property for the batch partial aggregation), so equal inputs give
-    EQUAL outputs under ANY arrival order — a strictly stronger parity
-    guarantee than the TWAP twin's in-order replay, parity-tested with
-    an arbitrary (non-chronological) batch split. State per user is ten
-    longs."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("v_e2"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fold_ohlc,
-            outputStructType=OHLC_OUTPUT,
-            stateStructType=OHLC_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    (ts, id) guard — a late event would otherwise fabricate a
+    negative-duration segment."""
+    return _stateful(
+        _px_events(events), "user_id", _fold_twap, TWAP_OUTPUT, TWAP_STATE
     )
 
 
@@ -701,12 +599,12 @@ EWMA_OUTPUT = (
     "n_above long, n_below long"
 )
 
-#: per-user EWMA band state: the (event-time micros, id) high-water mark
-#: for the ordered-replay guard, plus the two fixed-point accumulators
-#: and the breach counters. Two longs of real state (ewma, dev) — the
-#: "unbounded per-key history" answer the batch fold's docstring names.
+#: per-user EWMA band state: the (ts, id) high-water mark, plus the two
+#: fixed-point accumulators and the breach counters. Two longs of real
+#: state (ewma, dev) — the "unbounded per-key history" answer the batch
+#: fold's docstring names.
 EWMA_STATE = (
-    "last_micros long, last_id long, ewma_e2 long, dev_e2 long, "
+    "last_us long, last_id long, ewma_e2 long, dev_e2 long, "
     "n_events long, n_above long, n_below long"
 )
 
@@ -719,65 +617,45 @@ def _tdiv(a: int, b: int) -> int:
     return -q if a < 0 else q
 
 
-def _fold_ewma_band(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: order this batch's slice by (ts, event_id),
-    drop late arrivals at or before the persisted high-water mark (the
-    recurrence is order-DEPENDENT, so the ordered-replay contract is
-    the TWAP twin's, not the commutative OHLC one), then advance the
-    integer fixed-point recurrences exactly as the batch fold does:
-    breach counters read the old (ewma, dev), then both advance with
-    truncating division (operators/finance.py constants)."""
-    from financial_data_engineering_spark.operators.finance import (
-        BAND_K,
-        EWMA_ALPHA_DEN,
-        EWMA_ALPHA_NUM,
-    )
-
-    rest = EWMA_ALPHA_DEN - EWMA_ALPHA_NUM
-    half = EWMA_ALPHA_DEN // 2
-    if state.exists:
-        last_us, last_id, ewma, dev, n, na, nb = state.get
+def _step_ewma_band(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """Advance the integer fixed-point recurrences exactly as the batch
+    fold does: breach counters read the old (ewma, dev), then both
+    advance with truncating division (operators/finance.py constants)."""
+    x = int(ev.px)
+    if s.n_events == 0:
+        s.ewma_e2, s.dev_e2 = x, 0
     else:
-        last_us = last_id = ewma = dev = None
-        n = na = nb = 0
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
+        ewma, dev = s.ewma_e2, s.dev_e2
+        rest = EWMA_ALPHA_DEN - EWMA_ALPHA_NUM
+        half = EWMA_ALPHA_DEN // 2
+        s.n_above += 1 if x > ewma + BAND_K * dev else 0
+        s.n_below += 1 if x < ewma - BAND_K * dev else 0
+        s.ewma_e2 = _tdiv(
+            EWMA_ALPHA_NUM * x + rest * ewma + half, EWMA_ALPHA_DEN
         )
-        for ts, eid, px in zip(batch["ts"], batch["event_id"], batch["px"]):
-            micros, ident, x = int(ts.value // 1000), int(eid), int(px)
-            if last_us is not None and (micros, ident) <= (last_us, last_id):
-                continue  # late vs state: drop, never replay backwards
-            if n == 0:
-                ewma, dev = x, 0
-            else:
-                na += 1 if x > ewma + BAND_K * dev else 0
-                nb += 1 if x < ewma - BAND_K * dev else 0
-                new_ewma = _tdiv(
-                    EWMA_ALPHA_NUM * x + rest * ewma + half, EWMA_ALPHA_DEN
-                )
-                new_dev = _tdiv(
-                    abs(x - ewma) + rest * dev + half, EWMA_ALPHA_DEN
-                )
-                ewma, dev = new_ewma, new_dev
-            n += 1
-            last_us, last_id = micros, ident
-    state.update((last_us, last_id, ewma, dev, n, na, nb))
-    yield pd.DataFrame(
+        s.dev_e2 = _tdiv(abs(x - ewma) + rest * dev + half, EWMA_ALPHA_DEN)
+    s.n_events += 1
+
+
+def _emit_ewma_band(user: Any, s: SimpleNamespace, out: list) -> pd.DataFrame:
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "ewma_e2": [ewma],
-            "dev_e2": [dev],
-            "n_above": [na],
-            "n_below": [nb],
+            "user_id": [user],
+            "n_events": [s.n_events],
+            "ewma_e2": [s.ewma_e2],
+            "dev_e2": [s.dev_e2],
+            "n_above": [s.n_above],
+            "n_below": [s.n_below],
         }
     )
+
+
+_fold_ewma_band = _ordered_replay(
+    EWMA_STATE,
+    (None, None, None, None, 0, 0, 0),
+    _step_ewma_band,
+    _emit_ewma_band,
+)
 
 
 def running_ewma_band(events: DataFrame) -> DataFrame:
@@ -787,26 +665,10 @@ def running_ewma_band(events: DataFrame) -> DataFrame:
     integer fixed-point recurrence and re-emits the user's lifetime
     (ewma, dev, breach counters) in update mode. Equal inputs delivered
     in event-time order across any batch split give EQUAL outputs
-    (parity-tested); out-of-order arrivals across batches drop at the
-    high-water-mark guard, the event_transitions/running_twap
-    contract."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("px"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fold_ewma_band,
-            outputStructType=EWMA_OUTPUT,
-            stateStructType=EWMA_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    (parity-tested); the recurrence is order-DEPENDENT, so out-of-order
+    arrivals across batches drop at the high-water-mark guard."""
+    return _stateful(
+        _px_events(events), "user_id", _fold_ewma_band, EWMA_OUTPUT, EWMA_STATE
     )
 
 
@@ -814,53 +676,38 @@ DRAWDOWN_OUTPUT = (
     "user_id long, n_events long, peak_e2 long, max_drawdown_e2 long"
 )
 
-#: per-user drawdown state: the (ts, id) high-water mark for ordered
-#: replay plus peak and max-drawdown — the O(1)-state property that
-#: makes drawdown streamable at all (the full cummax series never
-#: needs to exist).
+#: per-user drawdown state: the (ts, id) high-water mark plus peak and
+#: max-drawdown — the O(1)-state property that makes drawdown streamable
+#: at all (the full cummax series never needs to exist).
 DRAWDOWN_STATE = (
-    "last_micros long, last_id long, peak_e2 long, "
+    "last_us long, last_id long, peak_e2 long, "
     "max_drawdown_e2 long, n_events long"
 )
 
 
-def _fold_drawdown(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: replay this batch's slice in (ts, event_id)
-    order past the high-water mark; each observation lifts the running
-    peak, then measures its own drawdown against it — identical
-    arithmetic to the batch cummax window, two integer updates per
-    event."""
-    if state.exists:
-        last_us, last_id, peak, max_dd, n = state.get
-    else:
-        last_us = last_id = peak = None
-        max_dd, n = 0, 0
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, px in zip(batch["ts"], batch["event_id"], batch["px"]):
-            micros, ident, x = int(ts.value // 1000), int(eid), int(px)
-            if last_us is not None and (micros, ident) <= (last_us, last_id):
-                continue  # late vs state: drop (cummax is order-dependent)
-            peak = x if peak is None else max(peak, x)
-            max_dd = max(max_dd, peak - x)
-            n += 1
-            last_us, last_id = micros, ident
-    state.update((last_us, last_id, peak, max_dd, n))
-    yield pd.DataFrame(
+def _step_drawdown(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """Lift the running peak, then measure this observation's drawdown
+    against it — the batch cummax window's arithmetic."""
+    x = int(ev.px)
+    s.peak_e2 = x if s.peak_e2 is None else max(s.peak_e2, x)
+    s.max_drawdown_e2 = max(s.max_drawdown_e2, s.peak_e2 - x)
+    s.n_events += 1
+
+
+def _emit_drawdown(user: Any, s: SimpleNamespace, out: list) -> pd.DataFrame:
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "peak_e2": [peak],
-            "max_drawdown_e2": [max_dd if n else None],
+            "user_id": [user],
+            "n_events": [s.n_events],
+            "peak_e2": [s.peak_e2],
+            "max_drawdown_e2": [s.max_drawdown_e2 if s.n_events else None],
         }
     )
+
+
+_fold_drawdown = _ordered_replay(
+    DRAWDOWN_STATE, (None, None, None, 0, 0), _step_drawdown, _emit_drawdown
+)
 
 
 def running_drawdown(events: DataFrame) -> DataFrame:
@@ -871,23 +718,12 @@ def running_drawdown(events: DataFrame) -> DataFrame:
     batch split give EQUAL outputs (parity-tested). Late arrivals drop
     at the (ts, id) guard — a late trough BELOW the then-peak would
     otherwise be measured against a peak it never traded under."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("px"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fold_drawdown,
-            outputStructType=DRAWDOWN_OUTPUT,
-            stateStructType=DRAWDOWN_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful(
+        _px_events(events),
+        "user_id",
+        _fold_drawdown,
+        DRAWDOWN_OUTPUT,
+        DRAWDOWN_STATE,
     )
 
 
@@ -895,84 +731,53 @@ UNDERWATER_OUTPUT = (
     "user_id long, n_runs long, max_run_ticks long, max_run_dur_us long"
 )
 
-#: per-user underwater-run state: the (ts, id) high-water mark for
-#: ordered replay, the running peak, the OPEN run (start micros + tick
-#: count; run_start < 0 = no open run), and the run census maxima.
-#: O(1) regardless of history length — run-length drawdown analytics
-#: never need the tick series.
+#: per-user underwater-run state: the (ts, id) high-water mark, the
+#: running peak, the OPEN run (start micros + tick count; run_start < 0 =
+#: no open run), and the run census maxima. O(1) regardless of history
+#: length — run-length drawdown analytics never need the tick series.
 UNDERWATER_STATE = (
-    "last_micros long, last_id long, peak_e2 long, "
+    "last_us long, last_id long, peak_e2 long, "
     "run_start_us long, run_ticks long, "
     "n_runs long, max_run_ticks long, max_run_dur_us long"
 )
 
 
-def _fold_underwater(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: replay in (ts, event_id) order past the
-    high-water mark. A value strictly below the PRIOR peak is
-    underwater (matching the batch query's cummax-including-current
-    formulation: a fresh high is never underwater); an underwater tick
-    opens or extends the current run, updating the tick/duration maxima
-    in place, and a non-underwater tick closes it. Late arrivals drop
-    at the guard — run composition is order-dependent."""
-    if state.exists:
-        (
-            last_us,
-            last_id,
-            peak,
-            run_start,
-            run_ticks,
-            n_runs,
-            max_ticks,
-            max_dur,
-        ) = state.get
+def _step_underwater(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """A value strictly below the PRIOR peak is underwater (matching the
+    batch query's cummax-including-current formulation: a fresh high is
+    never underwater); an underwater tick opens or extends the current
+    run, updating the tick/duration maxima in place, and a
+    non-underwater tick closes it."""
+    x = int(ev.px)
+    if s.peak_e2 is not None and x < s.peak_e2:
+        if s.run_start_us < 0:
+            s.n_runs += 1
+            s.run_start_us, s.run_ticks = us, 0
+        s.run_ticks += 1
+        s.max_run_ticks = max(s.max_run_ticks, s.run_ticks)
+        s.max_run_dur_us = max(s.max_run_dur_us, us - s.run_start_us)
     else:
-        last_us = last_id = peak = None
-        run_start, run_ticks, n_runs, max_ticks, max_dur = -1, 0, 0, 0, 0
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, px in zip(batch["ts"], batch["event_id"], batch["px"]):
-            micros, ident, x = int(ts.value // 1000), int(eid), int(px)
-            if last_us is not None and (micros, ident) <= (last_us, last_id):
-                continue  # late vs state: drop
-            if peak is not None and x < peak:
-                if run_start < 0:
-                    n_runs += 1
-                    run_start, run_ticks = micros, 0
-                run_ticks += 1
-                max_ticks = max(max_ticks, run_ticks)
-                max_dur = max(max_dur, micros - run_start)
-            else:
-                run_start, run_ticks = -1, 0
-            peak = x if peak is None else max(peak, x)
-            last_us, last_id = micros, ident
-    state.update(
-        (
-            last_us,
-            last_id,
-            peak,
-            run_start,
-            run_ticks,
-            n_runs,
-            max_ticks,
-            max_dur,
-        )
-    )
-    yield pd.DataFrame(
+        s.run_start_us, s.run_ticks = -1, 0
+    s.peak_e2 = x if s.peak_e2 is None else max(s.peak_e2, x)
+
+
+def _emit_underwater(user: Any, s: SimpleNamespace, out: list) -> pd.DataFrame:
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
-            "n_runs": [n_runs],
-            "max_run_ticks": [max_ticks],
-            "max_run_dur_us": [max_dur],
+            "user_id": [user],
+            "n_runs": [s.n_runs],
+            "max_run_ticks": [s.max_run_ticks],
+            "max_run_dur_us": [s.max_run_dur_us],
         }
     )
+
+
+_fold_underwater = _ordered_replay(
+    UNDERWATER_STATE,
+    (None, None, None, -1, 0, 0, 0, 0),
+    _step_underwater,
+    _emit_underwater,
+)
 
 
 def running_underwater(events: DataFrame) -> DataFrame:
@@ -984,24 +789,14 @@ def running_underwater(events: DataFrame) -> DataFrame:
     Equal inputs in event-time order across any batch split give EQUAL
     outputs for every user with at least one run (parity-tested; the
     batch query omits never-underwater users, the stream reports them
-    with n_runs=0). Late arrivals drop at the (ts, id) guard."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("px"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fold_underwater,
-            outputStructType=UNDERWATER_OUTPUT,
-            stateStructType=UNDERWATER_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    with n_runs=0). Late arrivals drop at the (ts, id) guard — run
+    composition is order-dependent."""
+    return _stateful(
+        _px_events(events),
+        "user_id",
+        _fold_underwater,
+        UNDERWATER_OUTPUT,
+        UNDERWATER_STATE,
     )
 
 
@@ -1016,115 +811,67 @@ MONTHLY_BARS_OUTPUT = (
 #: regardless of history — bar construction is the canonical streaming
 #: finance workload precisely because it folds to this.
 MONTHLY_BARS_STATE = (
-    "last_micros long, last_id long, n_events long, cur_month long, "
+    "last_us long, last_id long, n_events long, cur_month long, "
     "cur_close long, prev_close long, n_bars_closed long, n_diffs long, "
     "sum_d long, min_d long, max_d long, n_up long, n_down long"
 )
 
 
-def _fold_monthly_bars(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: replay in (ts, event_id) order past the
-    high-water mark; ordered replay makes the month sequence
-    non-decreasing, so a month change CLOSES the open bar — committing
-    its close-to-close diff against the previous close — and opens the
-    next. The emission adds the OPEN bar provisionally (its close-so-far
+def _commit_diff(s: SimpleNamespace, d: int) -> None:
+    """Add one close-to-close diff to the accumulators."""
+    s.n_diffs += 1
+    s.sum_d += d
+    s.min_d = d if s.min_d is None else min(s.min_d, d)
+    s.max_d = d if s.max_d is None else max(s.max_d, d)
+    s.n_up += 1 if d > 0 else 0
+    s.n_down += 1 if d < 0 else 0
+
+
+def _step_monthly_bar(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """Ordered replay makes the month sequence non-decreasing, so a
+    month change CLOSES the open bar — committing its close-to-close
+    diff against the previous close — and opens the next."""
+    month = ev.ts.year * 12 + ev.ts.month
+    if s.cur_month is not None and month != s.cur_month:
+        if s.prev_close is not None:
+            _commit_diff(s, s.cur_close - s.prev_close)
+        s.prev_close = s.cur_close
+        s.n_bars_closed += 1
+    s.cur_month, s.cur_close = month, int(ev.px)
+    s.n_events += 1
+
+
+def _emit_monthly_bars(
+    user: Any, s: SimpleNamespace, out: list
+) -> pd.DataFrame:
+    """Closed-bar stats plus the OPEN bar provisionally: its close so far
     is exactly what the batch query's last() would see if the stream
-    ended now), so every snapshot equals the batch query on the same
+    ended now, so every snapshot equals the batch query on the same
     prefix."""
-    if state.exists:
-        (
-            last_us,
-            last_id,
-            n_events,
-            cur_month,
-            cur_close,
-            prev_close,
-            n_closed,
-            n_diffs,
-            sum_d,
-            min_d,
-            max_d,
-            n_up,
-            n_down,
-        ) = state.get
-    else:
-        last_us = last_id = cur_month = cur_close = prev_close = None
-        n_events = n_closed = n_diffs = sum_d = n_up = n_down = 0
-        min_d = max_d = None
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, px in zip(batch["ts"], batch["event_id"], batch["px"]):
-            micros, ident, x = int(ts.value // 1000), int(eid), int(px)
-            if last_us is not None and (micros, ident) <= (last_us, last_id):
-                continue  # late vs state: drop (bar membership is final)
-            month = ts.year * 12 + ts.month
-            if cur_month is None:
-                cur_month, cur_close = month, x
-            elif month == cur_month:
-                cur_close = x
-            else:  # rollover: commit the closed bar's diff
-                if prev_close is not None:
-                    d = cur_close - prev_close
-                    n_diffs += 1
-                    sum_d += d
-                    min_d = d if min_d is None else min(min_d, d)
-                    max_d = d if max_d is None else max(max_d, d)
-                    n_up += 1 if d > 0 else 0
-                    n_down += 1 if d < 0 else 0
-                prev_close = cur_close
-                n_closed += 1
-                cur_month, cur_close = month, x
-            n_events += 1
-            last_us, last_id = micros, ident
-    state.update(
-        (
-            last_us,
-            last_id,
-            n_events,
-            cur_month,
-            cur_close,
-            prev_close,
-            n_closed,
-            n_diffs,
-            sum_d,
-            min_d,
-            max_d,
-            n_up,
-            n_down,
-        )
-    )
-    # snapshot: closed-bar stats + the open bar's provisional diff
-    s_bars = n_closed + (1 if cur_month is not None else 0)
-    s_diffs, s_sum = n_diffs, sum_d
-    s_min, s_max, s_up, s_down = min_d, max_d, n_up, n_down
-    if cur_month is not None and prev_close is not None:
-        d = cur_close - prev_close
-        s_diffs += 1
-        s_sum += d
-        s_min = d if s_min is None else min(s_min, d)
-        s_max = d if s_max is None else max(s_max, d)
-        s_up += 1 if d > 0 else 0
-        s_down += 1 if d < 0 else 0
-    yield pd.DataFrame(
+    snap = SimpleNamespace(**vars(s))
+    if s.cur_month is not None and s.prev_close is not None:
+        _commit_diff(snap, s.cur_close - s.prev_close)
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
-            "n_events": [n_events],
-            "n_bars": [s_bars],
-            "n_diffs": [s_diffs],
-            "sum_d_e2": [s_sum if s_diffs else None],
-            "min_d_e2": [s_min],
-            "max_d_e2": [s_max],
-            "n_up": [s_up],
-            "n_down": [s_down],
+            "user_id": [user],
+            "n_events": [s.n_events],
+            "n_bars": [s.n_bars_closed + (s.cur_month is not None)],
+            "n_diffs": [snap.n_diffs],
+            "sum_d_e2": [snap.sum_d if snap.n_diffs else None],
+            "min_d_e2": [snap.min_d],
+            "max_d_e2": [snap.max_d],
+            "n_up": [snap.n_up],
+            "n_down": [snap.n_down],
         }
     )
+
+
+_fold_monthly_bars = _ordered_replay(
+    MONTHLY_BARS_STATE,
+    (None, None, 0, None, None, None, 0, 0, 0, None, None, 0, 0),
+    _step_monthly_bar,
+    _emit_monthly_bars,
+)
 
 
 def running_monthly_bars(events: DataFrame) -> DataFrame:
@@ -1139,23 +886,12 @@ def running_monthly_bars(events: DataFrame) -> DataFrame:
     parity-tested across a batch split that lands mid-month. Late
     arrivals drop at the (ts, id) guard — a late tick could otherwise
     reopen a closed bar."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("px"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fold_monthly_bars,
-            outputStructType=MONTHLY_BARS_OUTPUT,
-            stateStructType=MONTHLY_BARS_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful(
+        _px_events(events),
+        "user_id",
+        _fold_monthly_bars,
+        MONTHLY_BARS_OUTPUT,
+        MONTHLY_BARS_STATE,
     )
 
 
@@ -1163,160 +899,111 @@ ROLLBAND_OUTPUT = (
     "user_id long, n_events long, n_eval long, n_above long, n_below long"
 )
 
-#: per-user rolling-band state: the last ROLL_N observations (parallel
-#: (micros, id, px) arrays — the ROWS window IS the state, so streaming
-#: this metric needs exactly ROLL_N tuples per key) plus the counters.
+#: per-user rolling-band state: the (ts, id) high-water mark, the last
+#: ROLL_N px values (the ROWS window IS the state, so streaming this
+#: metric needs exactly ROLL_N values per key) and the counters.
 ROLLBAND_STATE = (
-    "w_us array<long>, w_id array<long>, w_px array<long>, "
+    "last_us long, last_id long, w_px array<long>, "
     "n_events long, n_eval long, n_above long, n_below long"
 )
 
 
-def _fold_rolling_band(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: replay this batch's slice in (ts, event_id)
-    order past the high-water mark (the window's tail), evaluating each
-    observation against the previous <= ROLL_N with the batch query's
-    exact integer squared-inequality, then sliding the window. Python
-    ints make the arithmetic arbitrary-precision, which is fine: the
-    batch side is proven in-int64 by its headroom bound, so both
-    compute the same values."""
-    from financial_data_engineering_spark.operators.finance import BAND_K
-    from financial_data_engineering_spark.queries.finance import (
-        ROLL_MIN,
-        ROLL_N,
-    )
+def _step_rolling_band(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """Evaluate the observation against the previous <= ROLL_N with the
+    batch query's exact integer squared-inequality, then slide the
+    window. Python ints make the arithmetic arbitrary-precision, which
+    is fine: the batch side is proven in-int64 by its headroom bound, so
+    both compute the same values."""
+    x, w = int(ev.px), s.w_px
+    n = len(w)
+    if n >= ROLL_MIN:
+        s.n_eval += 1
+        sm = sum(w)
+        ss = sum(v * v for v in w)
+        diff = n * x - sm
+        if diff * diff > BAND_K * BAND_K * (n * ss - sm * sm):
+            s.n_above += 1 if diff > 0 else 0
+            s.n_below += 1 if diff < 0 else 0
+    s.w_px = [*w, x][-ROLL_N:]
+    s.n_events += 1
 
-    if state.exists:
-        w_us, w_id, w_px, n_ev, n_eval, na, nb = state.get
-        w_us, w_id, w_px = list(w_us), list(w_id), list(w_px)
-    else:
-        w_us, w_id, w_px = [], [], []
-        n_ev = n_eval = na = nb = 0
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, px in zip(batch["ts"], batch["event_id"], batch["px"]):
-            micros, ident, x = int(ts.value // 1000), int(eid), int(px)
-            if w_us and (micros, ident) <= (w_us[-1], w_id[-1]):
-                continue  # late vs state: the window is order-dependent
-            n = len(w_px)
-            if n >= ROLL_MIN:
-                n_eval += 1
-                s = sum(w_px)
-                ss = sum(v * v for v in w_px)
-                diff = n * x - s
-                if diff * diff > BAND_K * BAND_K * (n * ss - s * s):
-                    if diff > 0:
-                        na += 1
-                    elif diff < 0:
-                        nb += 1
-            w_us.append(micros)
-            w_id.append(ident)
-            w_px.append(x)
-            if len(w_px) > ROLL_N:
-                w_us.pop(0)
-                w_id.pop(0)
-                w_px.pop(0)
-            n_ev += 1
-    state.update((w_us, w_id, w_px, n_ev, n_eval, na, nb))
-    yield pd.DataFrame(
+
+def _emit_rolling_band(
+    user: Any, s: SimpleNamespace, out: list
+) -> pd.DataFrame:
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
-            "n_events": [n_ev],
-            "n_eval": [n_eval],
-            "n_above": [na],
-            "n_below": [nb],
+            "user_id": [user],
+            "n_events": [s.n_events],
+            "n_eval": [s.n_eval],
+            "n_above": [s.n_above],
+            "n_below": [s.n_below],
         }
     )
+
+
+_fold_rolling_band = _ordered_replay(
+    ROLLBAND_STATE,
+    (None, None, [], 0, 0, 0, 0),
+    _step_rolling_band,
+    _emit_rolling_band,
+)
 
 
 def running_rolling_band(events: DataFrame) -> DataFrame:
     """Per-user running rolling-band breach counters — the streaming
     twin of ``user_value_rolling_band`` (queries/finance.py). The ROWS
-    window is the state: exactly the last ROLL_N (ts, id, px) tuples
-    per user cross each batch boundary, so boundary-spanning windows
-    evaluate with identical integer arithmetic (parity-tested).
-    Out-of-order arrivals across batches drop at the window-tail guard,
-    the ordered-replay contract of the TWAP/EWMA twins."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("px"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fold_rolling_band,
-            outputStructType=ROLLBAND_OUTPUT,
-            stateStructType=ROLLBAND_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    window is the state: exactly the last ROLL_N px values per user
+    cross each batch boundary, so boundary-spanning windows evaluate
+    with identical integer arithmetic (parity-tested). The window is
+    order-dependent, so out-of-order arrivals across batches drop at the
+    (ts, id) high-water-mark guard."""
+    return _stateful(
+        _px_events(events),
+        "user_id",
+        _fold_rolling_band,
+        ROLLBAND_OUTPUT,
+        ROLLBAND_STATE,
     )
 
 
 CDC_OUTPUT = "user_id long, n_changes long, present boolean, val_e2 long"
 
-#: per-key CDC state: (ts, id) high-water mark for ordered replay, row
-#: presence after the latest change, its value, and a change counter
-#: (the monotone column final-snapshot consumers pick the last update
-#: by). O(1) per key — a CDC snapshot never needs the change history.
+#: per-key CDC state: (ts, id) high-water mark, row presence after the
+#: latest change, its value, and a change counter (the monotone column
+#: final-snapshot consumers pick the last update by). O(1) per key — a
+#: CDC snapshot never needs the change history.
 CDC_STATE = (
-    "last_micros long, last_id long, present boolean, val_e2 long, "
+    "last_us long, last_id long, present boolean, val_e2 long, "
     "n_changes long"
 )
 
 
-def _fold_cdc_snapshot(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: replay this batch's changes in (ts, event_id)
-    order past the high-water mark; op 'D' marks the row absent, any
-    other op upserts the payload — the same last-writer-wins rule as
-    the batch operator (operators/cdc.py), advanced one change at a
-    time."""
-    if state.exists:
-        last_us, last_id, present, val, n = state.get
+def _step_cdc(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """op 'D' marks the row absent, any other op upserts the payload —
+    the batch operator's last-writer-wins rule (operators/cdc.py),
+    advanced one change at a time."""
+    if ev.op == "D":
+        s.present, s.val_e2 = False, None
     else:
-        last_us = last_id = val = None
-        present, n = False, 0
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, op, v in zip(
-            batch["ts"], batch["event_id"], batch["op"], batch["val_e2"]
-        ):
-            micros, ident = int(ts.value // 1000), int(eid)
-            if last_us is not None and (micros, ident) <= (last_us, last_id):
-                continue  # late vs state: last-writer-wins is order-bound
-            if op == "D":
-                present, val = False, None
-            else:
-                present, val = True, int(v)
-            n += 1
-            last_us, last_id = micros, ident
-    state.update((last_us, last_id, present, val, n))
-    yield pd.DataFrame(
+        s.present, s.val_e2 = True, int(ev.val_e2)
+    s.n_changes += 1
+
+
+def _emit_cdc(user: Any, s: SimpleNamespace, out: list) -> pd.DataFrame:
+    return pd.DataFrame(
         {
-            "user_id": [key[0]],
-            "n_changes": [n],
-            "present": [present],
-            "val_e2": [val],
+            "user_id": [user],
+            "n_changes": [s.n_changes],
+            "present": [s.present],
+            "val_e2": [s.val_e2],
         }
     )
+
+
+_fold_cdc_snapshot = _ordered_replay(
+    CDC_STATE, (None, None, False, None, 0), _step_cdc, _emit_cdc
+)
 
 
 def running_cdc_snapshot(changes: DataFrame) -> DataFrame:
@@ -1328,13 +1015,12 @@ def running_cdc_snapshot(changes: DataFrame) -> DataFrame:
     deletes keep the key in state (present=false) so a later change
     resurrects it with the same arithmetic as the batch full-outer
     merge (parity-tested against apply_changelog over the same
-    changelog in tests/test_streaming.py)."""
-    return changes.groupBy("user_id").applyInPandasWithState(
-        _fold_cdc_snapshot,
-        outputStructType=CDC_OUTPUT,
-        stateStructType=CDC_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    changelog in tests/test_streaming.py). Ordering contract: changes
+    arrive in non-decreasing (ts, event_id) order per key across
+    micro-batches; a late change drops at the (ts, id) guard, since
+    last-writer-wins is order-bound."""
+    return _stateful(
+        changes, "user_id", _fold_cdc_snapshot, CDC_OUTPUT, CDC_STATE
     )
 
 
@@ -1344,78 +1030,60 @@ SCD2_OUTPUT = (
     "n_total long"
 )
 
-#: per-key SCD2 state: the FULL version history as parallel arrays
-#: (value, open-micros, observation count per version) plus the (ts, id)
-#: high-water mark and a monotone total-observation counter. The history
-#: is bounded by |distinct consecutive attribute values|, not |events| —
-#: a dimension's version chain is short by construction (a key that
+#: per-key SCD2 state: the (ts, id) high-water mark, the FULL version
+#: history as parallel arrays (value, open-micros, observation count per
+#: version) and a monotone total-observation counter. The history is
+#: bounded by |distinct consecutive attribute values|, not |events| — a
+#: dimension's version chain is short by construction (a key that
 #: changes attributes per-event is a fact, not a dimension), so holding
 #: it in the state store is the same O(|dim versions|) a batch build
 #: materializes. valid_to/is_current are DERIVED at emission (next
 #: version's open edge), never stored — so they can never drift from
 #: the chain.
 SCD2_STATE = (
-    "vals array<long>, froms array<long>, nobs array<long>, "
-    "last_us long, last_id long, n_total long"
+    "last_us long, last_id long, vals array<long>, froms array<long>, "
+    "nobs array<long>, n_total long"
 )
 
 
-def _fold_scd2_history(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """State transition: replay this batch's observations in (ts, id)
-    order past the high-water mark; an observation whose attribute
-    equals the OPEN version's merges into it (n_observations += 1),
-    anything else closes the open version and opens a new one — the
-    same NULL-safe consecutive-collapse rule as the batch operator
-    (transform/scd.py scd2_from_observations), advanced one observation
-    at a time. Emits the key's full updated history (short by the
-    dimension contract above); final-snapshot consumers pick the rows
-    of the max-``n_total`` emission per key."""
-    if state.exists:
-        vals, froms, nobs, last_us, last_id, n_total = state.get
-        vals, froms, nobs = list(vals), list(froms), list(nobs)
+def _step_scd2(s: SimpleNamespace, us: int, ev: Any) -> None:
+    """An observation whose attribute equals the OPEN version's merges
+    into it (n_observations += 1), anything else closes the open version
+    and opens a new one — the NULL-safe consecutive-collapse rule of the
+    batch operator (transform/scd.py scd2_from_observations)."""
+    val = None if pd.isna(ev.val_e2) else int(ev.val_e2)
+    if not s.vals or s.vals[-1] != val:  # NULL-safe: None != x, None == None
+        s.vals, s.froms, s.nobs = [*s.vals, val], [*s.froms, us], [*s.nobs, 1]
     else:
-        vals, froms, nobs = [], [], []
-        last_us = last_id = None
-        n_total = 0
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if frames:
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for ts, eid, v in zip(batch["ts"], batch["event_id"], batch["val_e2"]):
-            micros, ident = int(ts.value // 1000), int(eid)
-            if last_us is not None and (micros, ident) <= (last_us, last_id):
-                continue  # replayed duplicate / late vs state: order-bound
-            val = None if pd.isna(v) else int(v)
-            if not vals or vals[-1] != val:  # NULL-safe: None != x, None == None
-                vals.append(val)
-                froms.append(micros)
-                nobs.append(1)
-            else:
-                nobs[-1] += 1
-            n_total += 1
-            last_us, last_id = micros, ident
-    state.update((vals, froms, nobs, last_us, last_id, n_total))
-    n = len(vals)
-    yield pd.DataFrame(
+        s.nobs = [*s.nobs[:-1], s.nobs[-1] + 1]
+    s.n_total += 1
+
+
+def _emit_scd2(user: Any, s: SimpleNamespace, out: list) -> pd.DataFrame:
+    """The key's full updated history (short by the dimension contract
+    above); final-snapshot consumers pick the rows of the max-``n_total``
+    emission per key."""
+    n = len(s.vals)
+    return pd.DataFrame(
         {
-            "user_id": [key[0]] * n,
+            "user_id": [user] * n,
             "version": list(range(1, n + 1)),
-            "val_e2": vals,
-            "valid_from": [pd.Timestamp(us, unit="us") for us in froms],
+            "val_e2": list(s.vals),
+            "valid_from": [pd.Timestamp(us, unit="us") for us in s.froms],
             "valid_to": [
-                pd.Timestamp(froms[i + 1], unit="us") if i + 1 < n else None
+                pd.Timestamp(s.froms[i + 1], unit="us") if i + 1 < n else None
                 for i in range(n)
             ],
             "is_current": [0] * (n - 1) + [1] if n else [],
-            "n_observations": nobs,
-            "n_total": [n_total] * n,
+            "n_observations": list(s.nobs),
+            "n_total": [s.n_total] * n,
         }
     )
+
+
+_fold_scd2_history = _ordered_replay(
+    SCD2_STATE, (None, None, [], [], [], 0), _step_scd2, _emit_scd2
+)
 
 
 def running_scd2_history(observations: DataFrame) -> DataFrame:
@@ -1439,10 +1107,10 @@ def running_scd2_history(observations: DataFrame) -> DataFrame:
     (RocksDB on a real deployment); per batch each touched key costs
     O(|batch slice| + |version chain|) — the chain is short by the
     dimension contract documented on SCD2_STATE."""
-    return observations.groupBy("user_id").applyInPandasWithState(
+    return _stateful(
+        observations,
+        "user_id",
         _fold_scd2_history,
-        outputStructType=SCD2_OUTPUT,
-        stateStructType=SCD2_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        SCD2_OUTPUT,
+        SCD2_STATE,
     )

@@ -132,11 +132,16 @@ SHUFFLE_BUDGET = {
     # applyInPandas) + pair/size aggs + small left join + sort; the
     # k-means/assignment jobs run at operator build, outside this plan
     "dedup_semantic_clusters": 5,
-    "dedup_simhash": 0,
-    "dedup_simhash_pairs": 0,
-    # pair plan + symmetrized union, one per-doc rank window exchange,
-    # presentation sort
-    "dedup_simhash_topk": 3,
+    # the exchanges inside the persisted fingerprint/band relations count
+    # too: spread repartition before the token explode + presentation sort
+    "dedup_simhash": 2,
+    # spread repartition + band-bucket exchange (persisted) + pair dedup
+    # + presentation sort
+    "dedup_simhash_pairs": 4,
+    # the pair plan's spread, band and pair exchanges + a second pair
+    # exchange for the symmetrized union, one per-doc rank window
+    # exchange, presentation sort
+    "dedup_simhash_topk": 6,
     # salted probe shuffle + segment agg; the replicated build side
     # auto-broadcasts at bench scale
     "customer_order_stats_salted": 2,
@@ -208,9 +213,10 @@ SHUFFLE_BUDGET = {
     # rank window + sort
     # two-phase salted top-3 over the (nation, part) aggregate
     "top_parts_per_nation": 4,
-    # distinct-name collapse is persisted by the block-size guard's
-    # materialization; post-cache plan is tiny aggs + broadcast joins
-    "part_fuzzy_name_blocks": 3,
+    # distinct-name collapse, persisted by the block-size guard's
+    # materialization (its exchange counts too); post-cache plan is two
+    # tiny noun aggs + broadcast joins + sort
+    "part_fuzzy_name_blocks": 4,
     # orders->nation distinct-count agg (expand, 2 phases) + 1-row divisor
     # agg attached as a broadcast EQUI-join + sort
     "nations_full_priority_coverage": 5,

@@ -34,6 +34,42 @@ def test_pricing_summary_pushes_date_filter_and_prunes_columns(spark):
     }
 
 
+def test_plan_facts_survive_an_aqe_action(spark, tmp_path):
+    """After an action under AQE the formatted plan also carries the
+    initial plan and its node details; the counts must read the final
+    plan alone, the same before and after the action."""
+    df = (
+        spark.range(1000)
+        .groupBy((F.col("id") % 7).alias("k"))
+        .count()
+        .orderBy("k")
+    )
+    assert plans.shuffle_count(df) == 2
+    df.collect()
+    assert plans.shuffle_count(df) == 2
+
+    # an executed cached relation nests its own final and initial plans
+    cached = spark.range(1000).repartition(3).cache()
+    cached.count()
+    nested = cached.groupBy((F.col("id") % 7).alias("k")).count()
+    assert plans.shuffle_count(nested) == 2
+    nested.collect()
+    assert plans.shuffle_count(nested) == 2
+    cached.unpersist()
+
+    spark.range(100).write.parquet(str(tmp_path / "p"))
+    scanned = (
+        spark.read.parquet(str(tmp_path / "p"))
+        .filter("id > 10")
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count()
+    )
+    assert len(plans.scans(scanned)) == 1
+    scanned.collect()
+    assert len(plans.scans(scanned)) == 1
+    assert plans.uses_pushed_filter(scanned, "id")
+
+
 def test_dimension_joins_broadcast_not_shuffle(spark):
     """customer/nation are dims: the optimizer must broadcast them, and
     the whole 3-table join should cost at most one data shuffle."""

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from financial_data_engineering_spark import queries as q
 from financial_data_engineering_spark import streaming as st
+from financial_data_engineering_spark.operators.hll import HLL_M
 from tests.conftest import SF_SMALL
 
 
@@ -31,6 +32,19 @@ def _drain(spark, stream, name, mode="complete"):
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _state_rows(query):
+    """Rows held in the state store of the query's one stateful operator
+    after its last micro-batch."""
+    (op,) = query.lastProgress["stateOperators"]
+    return op["numRowsTotal"]
+
+
+def _n_users(spark):
+    from financial_data_engineering_spark.tables import load
+
+    return load(spark, "events", SF_SMALL).select("user_id").distinct().count()
 
 
 def test_stream_matches_batch_schema_and_rows(spark, events_dir):
@@ -114,7 +128,8 @@ def test_stateful_running_user_stats_accumulates_across_batches(
     stream = running_user_stats(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "user_stats", output_mode="update")
+    query = st.run_to_memory_sink(stream, "user_stats", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = spark.sql(
         """SELECT user_id, n_events, total_value, max_value, last_ts FROM (
                SELECT *, row_number() OVER (
@@ -285,8 +300,12 @@ def test_stateful_transitions_match_batch_counts(spark, events_dir, tmp_path):
     stream = st.event_transitions(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
+    query = st.run_to_memory_sink(
+        stream, "stream_transitions", output_mode="append"
+    )
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = (
-        _drain(spark, stream, "stream_transitions", mode="append")
+        spark.sql("SELECT * FROM stream_transitions")
         .groupBy("prev_type", "next_type")
         .agg(F.count(F.lit(1)).alias("n_transitions"))
     )
@@ -313,28 +332,75 @@ class _StubState:
         self._value = tuple(value)
 
 
-def test_emit_transitions_drops_late_cross_batch_events():
+#: the nine ordered twins' folds, all built by ``_ordered_replay``
+ORDERED_FOLDS = [
+    "_emit_transitions",
+    "_fold_twap",
+    "_fold_ewma_band",
+    "_fold_drawdown",
+    "_fold_underwater",
+    "_fold_monthly_bars",
+    "_fold_rolling_band",
+    "_fold_cdc_snapshot",
+    "_fold_scd2_history",
+]
+
+
+def _ordered_events(days, ids, px):
+    """Events frame carrying every column any ordered fold reads."""
     import pandas as pd
 
-    from financial_data_engineering_spark.streaming.stateful import (
-        _emit_transitions,
-    )
-
-    t = pd.Timestamp("2024-01-01 10:00:00")
-    state = _StubState((int(t.value // 1000), 7, "view"))
-    late_then_fresh = pd.DataFrame(
+    t = pd.Timestamp("2024-01-20 10:00:00")
+    return pd.DataFrame(
         {
-            "ts": [t - pd.Timedelta(minutes=5), t + pd.Timedelta(minutes=1)],
-            "event_id": [3, 9],
-            "event_type": ["click", "purchase"],
+            "ts": [t + pd.Timedelta(days=d) for d in days],
+            "event_id": ids,
+            "event_type": [("view", "click", "purchase")[i % 3] for i in ids],
+            "px": px,
+            "op": ["D" if i % 4 == 3 else "U" for i in ids],
+            "val_e2": [v % 3 for v in px],
         }
     )
-    (out,) = _emit_transitions((1,), iter([late_then_fresh]), state)
-    # the late click is dropped; only view -> purchase is emitted
-    assert list(zip(out["prev_type"], out["next_type"])) == [
-        ("view", "purchase")
-    ]
-    assert state.get[2] == "purchase"
+
+
+@pytest.mark.parametrize("fold_name", ORDERED_FOLDS)
+def test_ordered_folds_drop_late_cross_batch_events(fold_name):
+    """The replay guard every ordered twin shares: after a first batch,
+    events at or below the (ts, id) high-water mark change neither the
+    state nor the emission — a late-only batch acts as an empty one, and
+    late events mixed with fresh ones act as the fresh ones alone."""
+    import pandas as pd
+
+    from financial_data_engineering_spark.streaming import stateful
+
+    fold = getattr(stateful, fold_name)
+    # eight events over ten weeks: month rollovers, a breach-capable
+    # rolling window (ROLL_MIN = 5), deletes, repeated SCD2 values
+    first = _ordered_events(
+        range(0, 80, 10), range(1, 9), [100, 120, 90, 95, 130, 80, 85, 140]
+    )
+    state = _StubState()
+    for _ in fold((1,), iter([first]), state):
+        pass
+    mark = state.get
+    assert mark[:2] == (int(first["ts"].iloc[-1].value // 1000), 8)
+
+    # at the mark itself, same ts with a lower id, and an earlier event
+    late = _ordered_events([70, 70, 30], [8, 5, 9], [1, 500, 7])
+    fresh = _ordered_events([75, 90], [10, 11], [60, 150])
+
+    def replay(*batches):
+        after = _StubState(mark)
+        (out,) = fold((1,), iter(batches), after)
+        return after.get, out
+
+    assert replay(fresh)[0] != mark
+    for got, want in (
+        (replay(late), replay()),
+        (replay(late, fresh), replay(fresh)),
+    ):
+        assert got[0] == want[0]
+        pd.testing.assert_frame_equal(got[1], want[1])
 
 
 def test_emit_transitions_tolerates_empty_iterator():
@@ -377,7 +443,8 @@ def test_running_heavy_hitters_keeps_mg_guarantee(spark, events_dir, tmp_path):
         k=k,
         n_shards=4,
     )
-    st.run_to_memory_sink(stream, "hh_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "hh_updates", output_mode="update")
+    assert _state_rows(query) <= 4  # n_shards
     # update-mode memory sink appends every emission; the latest snapshot
     # per shard is the max-`seen` one (seen is monotone per shard).
     latest = spark.sql(
@@ -433,7 +500,8 @@ def test_running_quantile_sketch_keeps_rank_bound(spark, events_dir, tmp_path):
         k=32,
         n_shards=4,
     )
-    st.run_to_memory_sink(stream, "qsk_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "qsk_updates", output_mode="update")
+    assert _state_rows(query) <= 4  # n_shards
     latest = spark.sql(
         """SELECT value, weight FROM (
                SELECT *, max(seen) OVER (PARTITION BY shard) AS mx
@@ -489,7 +557,8 @@ def test_running_kmv_distinct_matches_batch_estimate(spark, events_dir, tmp_path
         k=k,
         n_shards=4,
     )
-    st.run_to_memory_sink(stream, "kmv_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "kmv_updates", output_mode="update")
+    assert _state_rows(query) <= 4  # n_shards
     latest = spark.sql(
         """SELECT DISTINCT h FROM (
                SELECT *, max(seen) OVER (PARTITION BY shard) AS mx
@@ -538,7 +607,8 @@ def test_running_twap_matches_batch_query(spark, events_dir, tmp_path):
     stream = running_twap(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "twap_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "twap_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = spark.sql(
         """SELECT user_id, n_segments, span_us, twap_e2 FROM (
                SELECT *, row_number() OVER (
@@ -582,7 +652,8 @@ def test_running_ohlc_matches_batch_any_order(spark, events_dir, tmp_path):
     stream = running_ohlc(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "ohlc_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "ohlc_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = spark.sql(
         """SELECT user_id, open_e2, high_e2, low_e2, close_e2,
                   n_events, sum_e2 FROM (
@@ -630,7 +701,8 @@ def test_running_ewma_band_matches_batch_query(spark, events_dir, tmp_path):
     stream = running_ewma_band(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "ewma_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "ewma_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = spark.sql(
         """SELECT user_id, n_events, ewma_e2, dev_e2, n_above, n_below
            FROM (
@@ -674,7 +746,8 @@ def test_running_drawdown_matches_batch_query(spark, events_dir, tmp_path):
     stream = running_drawdown(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "dd_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "dd_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = spark.sql(
         """SELECT user_id, n_events, peak_e2, max_drawdown_e2 FROM (
                SELECT *, row_number() OVER (
@@ -718,7 +791,8 @@ def test_running_underwater_matches_batch_query(spark, events_dir, tmp_path):
     stream = running_underwater(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "uw_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "uw_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     # latest snapshot per user: maxima are monotone, so order by them
     got = spark.sql(
         """SELECT user_id, n_runs, max_run_ticks, max_run_dur_us FROM (
@@ -766,7 +840,8 @@ def test_running_monthly_bars_matches_batch_query(spark, events_dir, tmp_path):
     stream = running_monthly_bars(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "mb_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "mb_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = spark.sql(
         """SELECT user_id, n_bars, n_diffs, sum_d_e2, min_d_e2,
                   max_d_e2, n_up, n_down FROM (
@@ -814,7 +889,8 @@ def test_running_rolling_band_matches_batch_query(spark, events_dir, tmp_path):
     stream = running_rolling_band(
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
     )
-    st.run_to_memory_sink(stream, "rb_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "rb_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     got = spark.sql(
         """SELECT user_id, n_events, n_eval, n_above, n_below FROM (
                SELECT *, row_number() OVER (
@@ -874,7 +950,8 @@ def test_running_cdc_snapshot_matches_batch_merge(spark, events_dir, tmp_path):
             st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
         )
     )
-    st.run_to_memory_sink(stream, "cdc_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "cdc_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     final = spark.sql(
         """SELECT user_id, present, val_e2 FROM (
                SELECT *, row_number() OVER (
@@ -932,7 +1009,8 @@ def test_running_hll_registers_match_batch_sketch(spark, events_dir, tmp_path):
         st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1),
         "user_id",
     )
-    st.run_to_memory_sink(stream, "hll_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "hll_updates", output_mode="update")
+    assert _state_rows(query) <= HLL_M  # one register per bucket
     # registers are monotone, so max(reg) per bucket IS the final state
     latest = spark.sql(
         "SELECT bucket, max(reg) AS reg FROM hll_updates GROUP BY bucket"
@@ -1004,7 +1082,8 @@ def test_running_scd2_history_matches_batch_build(spark, events_dir, tmp_path):
             st.read_event_stream(spark, str(replay_dir), max_files_per_trigger=1)
         )
     )
-    st.run_to_memory_sink(stream, "scd2_updates", output_mode="update")
+    query = st.run_to_memory_sink(stream, "scd2_updates", output_mode="update")
+    assert _state_rows(query) == _n_users(spark)  # one row per user
     final = spark.sql(
         """SELECT * FROM (
                SELECT *, max(n_total) OVER (PARTITION BY user_id) AS mx
