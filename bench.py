@@ -1,6 +1,8 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1), writes the FULL per-query record to
-``reports/bench/latest.json`` (and appends to ``reports/bench/history.jsonl``),
+(default /root/testdata/sf0.1), writes the FULL per-query record (wall
+times, and the exception class and first message line of each failed
+query) to ``reports/bench/latest.json`` (and appends to
+``reports/bench/history.jsonl``),
 then prints ONE short JSON summary line as the absolute last stdout:
 {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
  "n_queries": N, "queries": {<10 slowest only>}, "detail": "reports/..."}
@@ -139,13 +141,18 @@ def main() -> None:
                 pass
             spark.catalog.clearCache()
 
+    # why a query failed, by name (the last failing pass wins); a failed
+    # query still times as -1.0, and this map says what the -1.0 means
+    errors: dict[str, str] = {}
+
     def time_one(name: str) -> float:
         start = time.perf_counter()
         try:
             registry[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-        except Exception:  # noqa: BLE001
+        except Exception as exc:  # noqa: BLE001 — recorded in ``errors``
+            errors[name] = _describe_failure(exc)
             return -1.0
         finally:
             # Some operators persist intermediates (e.g. dedup inverted
@@ -307,6 +314,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "errors": errors,
         "aux": aux,
         "runs": runs,
         "pass_totals": pass_totals,
@@ -373,6 +381,13 @@ def main() -> None:
     spark.stop()
     sys.stdout.flush()
     print(line, flush=True)
+
+
+def _describe_failure(exc: BaseException) -> str:
+    """``ExceptionClass: first line of the message`` (Spark error messages
+    run to dozens of lines of JVM stack)."""
+    first = next(iter(str(exc).strip().splitlines()), "")
+    return f"{type(exc).__name__}: {first}"
 
 
 def _loadavg1() -> float | None:

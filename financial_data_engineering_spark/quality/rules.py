@@ -5,7 +5,8 @@ src/quality/rules.py:40-260 — six rule types returning ``RuleResult`` and
 composing via ``RuleSet``), but the execution model is inverted for scale:
 instead of one eager full-table pandas pass per rule, every fusable rule
 contributes named aggregate Columns and ``RuleSet.evaluate`` runs them all
-in ONE ``df.agg(...)`` job (a single scan regardless of rule count).
+in ONE ``df.agg(...)`` job (a single scan regardless of rule count), which
+also counts the frame's rows for every rule and report that needs them.
 Key-based uniqueness rules need a groupBy, so each distinct key set costs
 one extra aggregation job — still fully distributed, never collected.
 
@@ -45,6 +46,15 @@ class RuleResult:
         return "PASS" if self.passed else "FAIL"
 
 
+#: Name of the row count that every fused aggregate carries.
+_ROWS = "__rows"
+
+
+def _fused_row(df: DataFrame, exprs: list[Column]) -> dict[str, Any]:
+    """Run ``exprs`` and the frame's row count as ONE aggregate."""
+    return df.agg(*exprs, F.count(F.lit(1)).alias(_ROWS)).collect()[0].asDict()
+
+
 def _is_float(df: DataFrame, col: str) -> bool:
     return isinstance(df.schema[col].dataType, (T.DoubleType, T.FloatType))
 
@@ -76,14 +86,14 @@ class Rule(ABC):
             return compiled.immediate
         if compiled.standalone is not None:
             return compiled.standalone()
-        row = df.agg(*compiled.exprs).collect()[0].asDict()
-        return compiled.finalize(row)
+        return compiled.finalize(_fused_row(df, compiled.exprs))
 
 
 @dataclass
 class CompiledRule:
     """A rule bound to a frame: either a ready result, aggregate exprs +
-    finalizer (fusable), or a self-contained job (group-by rules)."""
+    finalizer (fusable; the finalizer's row also carries the row count
+    under ``_ROWS``), or a self-contained job (group-by rules)."""
 
     rule: Rule
     exprs: list[Column] = field(default_factory=list)
@@ -106,13 +116,14 @@ class CompletenessRule(Rule):
 
     def compile(self, df: DataFrame) -> CompiledRule:
         tag = f"__{id(self):x}"
-        exprs = [F.count(F.lit(1)).alias(f"{tag}_total")]
-        present = [c for c in self.columns if c in df.columns]
-        for col in present:
-            exprs.append(F.count(_notna(df, col)).alias(f"{tag}_nn_{col}"))
+        exprs = [
+            F.count(_notna(df, col)).alias(f"{tag}_nn_{col}")
+            for col in self.columns
+            if col in df.columns
+        ]
 
         def finalize(row: dict[str, Any]) -> RuleResult:
-            total = row[f"{tag}_total"]
+            total = row[_ROWS]
             failures: dict[str, Any] = {}
             for col in self.columns:
                 if col not in df.columns:
@@ -394,9 +405,11 @@ class CustomRule(Rule):
 
 class RuleSet:
     """Named, ordered rule collection. ``evaluate`` fuses every
-    expression-compilable rule into a single aggregation job (one table
-    scan total), then runs group-by and custom rules as their own jobs.
-    Result order matches registration order."""
+    expression-compilable rule, plus the frame's row count, into a single
+    aggregation job (one table scan total), then runs group-by and custom
+    rules as their own jobs. Result order matches registration order.
+    ``evaluate_counted`` also returns that row count, so a caller needs
+    no ``count()`` job of its own."""
 
     def __init__(self, name: str = "default"):
         self.name = name
@@ -407,22 +420,21 @@ class RuleSet:
         return self
 
     def evaluate(self, df: DataFrame) -> list[RuleResult]:
+        return self.evaluate_counted(df)[0]
+
+    def evaluate_counted(self, df: DataFrame) -> tuple[list[RuleResult], int]:
         compiled = [rule.compile(df) for rule in self.rules]
-        fused = [c for c in compiled if c.exprs]
-        fused_row: dict[str, Any] = {}
-        if fused:
-            all_exprs = [e for c in fused for e in c.exprs]
-            fused_row = df.agg(*all_exprs).collect()[0].asDict()
+        fused_row = _fused_row(df, [e for c in compiled for e in c.exprs])
 
         results: list[RuleResult] = []
         for c in compiled:
             if c.immediate is not None:
                 results.append(c.immediate)
-            elif c.exprs:
-                results.append(c.finalize(fused_row))
-            else:
+            elif c.standalone is not None:
                 results.append(c.standalone())
-        return results
+            else:
+                results.append(c.finalize(fused_row))
+        return results, fused_row[_ROWS]
 
     def __len__(self) -> int:
         return len(self.rules)

@@ -2,17 +2,16 @@
 
 Same public API as the reference validator (src/quality/validator.py:16-67)
 over Spark frames. ``validate`` triggers one fused aggregation job for all
-expression rules, one job per key-uniqueness rule, and a ``count()`` for
-frame stats (metadata-only on parquet scans).
+expression rules, which also counts the rows for the report, and one job
+per key-uniqueness or custom rule; there is no separate ``count()``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from financial_data_engineering_spark.quality.report import ValidationReport
-from financial_data_engineering_spark.quality.rules import Rule, RuleResult, RuleSet
+from financial_data_engineering_spark.quality.rules import Rule, RuleSet
 
 
 class DataValidator:
@@ -45,10 +44,10 @@ class DataValidator:
 
     def validate(self, df: DataFrame) -> ValidationReport:
         """Run all rules; returns pass/fail status per rule plus frame stats."""
-        results: list[RuleResult] = self._ruleset.evaluate(df)
+        results, row_count = self._ruleset.evaluate_counted(df)
         return ValidationReport(
             name=self.name,
             results=results,
-            row_count=df.count(),
+            row_count=row_count,
             column_count=len(df.columns),
         )

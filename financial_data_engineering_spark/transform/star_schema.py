@@ -1,5 +1,6 @@
 """Star-schema builder (SURVEY.md §2.J4-J6): fluent dimension/fact
-registration, dims-before-facts build, referential-integrity anti-joins.
+registration, dims-before-facts build, one referential-integrity
+aggregate per fact.
 
 Same modelling surface as the reference builder (star_schema.py:60-156)
 with the execution model redesigned for a cluster:
@@ -7,10 +8,17 @@ with the execution model redesigned for a cluster:
 - dimensions and facts are lazy DataFrames until the final parquet write;
 - facts may be hive-partitioned (typically by ``date_key``) so time-range
   queries prune partitions at the file level;
-- referential integrity is a LEFT ANTI join per declared FK (the dim side
-  broadcasts when small) instead of two driver-side Python sets — the probe
-  runs where the data lives and returns only a count;
-- row counts come from the writes' own actions, no extra full scans.
+- a table costs its write and nothing more: the row count is observed on
+  the write itself, and the table is read back under its declared schema,
+  which needs no schema-inference job (and works for an empty
+  partitioned table, which leaves no file to infer from);
+- referential integrity runs every FK probe of a fact in ONE aggregate,
+  ``count_if(NOT coalesce(key IN (SELECT key FROM dim), false))`` per
+  probe, instead of two driver-side Python sets. Spark plans each
+  ``IN`` subquery as an existence join (broadcast when the dim is small):
+  no ``distinct`` exchange, no row fan-out from duplicate dim keys, and
+  the same orphans as ``operators.anti_join_orphans``: a null or missing
+  FK is an orphan, a null dim key matches nothing.
 """
 
 from __future__ import annotations
@@ -18,9 +26,10 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from financial_data_engineering_spark.operators import anti_join_orphans
 from financial_data_engineering_spark.schemas import SchemaDefinition
 from financial_data_engineering_spark.transform.base_transformer import (
     TransformationResult,
@@ -95,8 +104,10 @@ class StarSchemaBuilder:
 
     def build(self, data: dict[str, DataFrame]) -> TransformationResult:
         """Write dimensions first, then facts (facts reference dim keys).
-        Each write is the table's one action; counts are read back from
-        the written files (metadata-only)."""
+        Each write is the table's one action: its row count is observed on
+        the write, and the returned frame reads the files back under the
+        declared schema (hive layout: data columns, then the partition
+        columns), which submits no job."""
         start = time.perf_counter()
         rows_by_table: dict[str, int] = {}
         output_paths: dict[str, str] = {}
@@ -106,14 +117,16 @@ class StarSchemaBuilder:
                     raise KeyError(f"no data provided for table {defn.name!r}")
                 df = data[defn.name]
                 path = os.path.join(self.output_dir, defn.name)
-                writer = df.write.mode("overwrite")
-                partition = self._partition_by.get(defn.name)
-                if partition:
-                    writer = writer.partitionBy(*partition)
-                writer.parquet(path)
-                written = df.sparkSession.read.parquet(path)
-                self._built[defn.name] = written
-                rows_by_table[defn.name] = written.count()
+                partition = self._partition_by.get(defn.name, [])
+                obs = Observation()
+                counted = df.observe(obs, F.count(F.lit(1)).alias("n"))
+                counted.write.mode("overwrite").partitionBy(*partition).parquet(path)
+                layout = [f for f in df.schema if f.name not in partition]
+                layout += [df.schema[c] for c in partition]
+                self._built[defn.name] = df.sparkSession.read.schema(
+                    T.StructType(layout)
+                ).parquet(path)
+                rows_by_table[defn.name] = obs.get["n"]
                 output_paths[defn.name] = path
         except Exception as exc:  # noqa: BLE001
             return TransformationResult(
@@ -135,20 +148,25 @@ class StarSchemaBuilder:
     def validate_referential_integrity(self) -> dict[str, int]:
         """Orphan count per (fact, dimension_key): fact rows whose FK has no
         matching dim row (reference probe: star_schema.py:140-156, minus its
-        dead ``replace`` line — SURVEY §2.J6). Every built table carrying the
-        key column is probed, matching the reference's behavior."""
+        dead ``replace`` line — SURVEY §2.J6). Every built dimension carrying
+        the key column is probed, matching the reference's behavior. All
+        probes of one fact run as one aggregate over the fact (see the
+        module docstring)."""
         orphans: dict[str, int] = {}
         for fact in self.facts:
             fact_df = self._built.get(fact.name)
             if fact_df is None:
                 continue
-            for key in fact.dimension_keys:
-                if key not in fact_df.columns:
-                    continue
-                for dim in self.dimensions:
-                    dim_df = self._built.get(dim.name)
-                    if dim_df is None or key not in dim_df.columns:
-                        continue
-                    count = anti_join_orphans(fact_df, dim_df, key, key).count()
-                    orphans[f"{fact.name}.{key}->{dim.name}"] = count
+            probes = [
+                F.count_if(
+                    ~F.coalesce(F.col(key).isin(dim_df.select(key)), F.lit(False))
+                ).alias(f"{fact.name}.{key}->{dim.name}")
+                for key in fact.dimension_keys
+                if key in fact_df.columns
+                for dim in self.dimensions
+                if (dim_df := self._built.get(dim.name)) is not None
+                and key in dim_df.columns
+            ]
+            if probes:
+                orphans.update(fact_df.agg(*probes).first().asDict())
         return orphans

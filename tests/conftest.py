@@ -6,6 +6,7 @@ Spark DataFrames.
 from __future__ import annotations
 
 import contextlib
+import threading
 import types
 import uuid
 
@@ -43,6 +44,28 @@ def count_jobs(spark):
         sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         counted.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def run_within(fn, seconds=120):
+    """``fn()`` on a daemon thread, failing if it has not returned after
+    ``seconds``: a row count observed on a job that never ran would block
+    ``Observation.get`` forever, and this turns that hang into a failure.
+    Returns ``fn``'s result and re-raises its exception."""
+    box = {}
+
+    def run():
+        try:
+            box["result"] = fn()
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            box["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still blocked after {seconds} s"
+    if "error" in box:
+        raise box["error"]
+    return box["result"]
 
 
 @pytest.fixture()

@@ -56,3 +56,9 @@ def test_parse_only_names_and_file(tmp_path):
     f.write_text("q_one\nq_two\n\n  q_three \n")
     keep = bench._parse_only(f"q_zero, @{f}, q_four")
     assert keep == {"q_zero", "q_one", "q_two", "q_three", "q_four"}
+
+
+def test_failure_description_keeps_class_and_first_line():
+    exc = ValueError("[UNABLE_TO_INFER_SCHEMA] no schema\n\tat org.apache.spark...")
+    assert bench._describe_failure(exc) == "ValueError: [UNABLE_TO_INFER_SCHEMA] no schema"
+    assert bench._describe_failure(KeyError()) == "KeyError: "

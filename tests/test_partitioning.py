@@ -12,7 +12,6 @@ guard keeps bare ``localCheckpoint`` from creeping back in.
 from __future__ import annotations
 
 import pathlib
-import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,7 +22,7 @@ from financial_data_engineering_spark.partitioning import (
     materialize_counted,
     remove_scratch_dir,
 )
-from tests.conftest import count_jobs
+from tests.conftest import count_jobs, run_within
 
 SRC = pathlib.Path(__file__).resolve().parents[1] / (
     "financial_data_engineering_spark"
@@ -62,25 +61,8 @@ def test_materialize_reliable_without_ckpt_dir_uses_replicated_persist(
         spark.conf.set("spark.fdes.materialize.mode", "auto")
 
 
-def _materialize_counted_within(df, seconds=120):
-    """materialize_counted on a daemon thread: a count observed on a job
-    that never ran would block ``Observation.get`` forever, and this
-    turns that hang into a failure."""
-    box = {}
-
-    def run():
-        try:
-            box["result"] = materialize_counted(df)
-        except BaseException as exc:  # noqa: BLE001 — re-raised below
-            box["error"] = exc
-
-    t = threading.Thread(target=run, daemon=True)
-    t.start()
-    t.join(seconds)
-    assert not t.is_alive(), f"materialize_counted still blocked after {seconds} s"
-    if "error" in box:
-        raise box["error"]
-    return box["result"]
+def _materialize_counted_within(df):
+    return run_within(lambda: materialize_counted(df))
 
 
 @pytest.mark.parametrize(

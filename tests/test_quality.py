@@ -15,6 +15,7 @@ from financial_data_engineering_spark.quality import (
     RuleSet,
     UniquenessRule,
 )
+from tests.conftest import count_jobs
 
 
 def test_completeness_passes_on_clean(spark, clean_df):
@@ -151,6 +152,37 @@ def test_validator_report_rollup(spark, messy_df):
     assert d["summary"]["rows_checked"] == 5
     assert len(d["results"]) == 3
     assert len(report.failures) == 1
+
+
+def test_validator_row_count_rides_on_the_fused_aggregate(spark):
+    """With expression rules only, ``validate`` submits the fused
+    aggregate's jobs and nothing else: the report's row count comes from
+    that aggregate, not from a ``count()`` of its own."""
+    df = spark.range(0, 1000, 1, 4).select(
+        F.col("id").alias("id"), (F.col("id") * 0.5).alias("price")
+    )
+    with count_jobs(spark) as agg:
+        df.agg(F.count(F.lit(1))).collect()
+    v = (
+        DataValidator("expr_only")
+        .add_rule(CompletenessRule(["id", "price"]))
+        .add_rule(RangeRule("price", min_val=0, max_val=400))
+        .add_rule(PatternRule("id", r"[0-9]+"))
+    )
+    with count_jobs(spark) as jobs:
+        report = v.validate(df)
+    assert report.row_count == 1000
+    assert [r.passed for r in report.results] == [True, False, True]
+    assert report.results[1].details["violations"] == 199
+    assert jobs.n == agg.n
+
+
+def test_ruleset_counts_rows_without_fusable_rules(spark, messy_df):
+    """Only group-by and custom rules: the row count still comes back."""
+    rs = RuleSet("no_fused").add(UniquenessRule(["id"]))
+    results, rows = rs.evaluate_counted(messy_df)
+    assert rows == 5
+    assert [r.rule_name for r in results] == ["uniqueness_id"]
 
 
 class TestFreshnessRule:

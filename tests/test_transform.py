@@ -2,15 +2,19 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from financial_data_engineering_spark.functions.keys import date_key, surrogate_key
+from financial_data_engineering_spark.operators import anti_join_orphans
 from financial_data_engineering_spark.tables import load
 from financial_data_engineering_spark.transform import (
     StarSchemaBuilder,
     build_date_dimension,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, count_jobs, run_within
 
 
 def test_surrogate_key_matches_reference_scheme(spark):
@@ -90,6 +94,126 @@ def test_star_schema_build_missing_table_is_error_result(spark, tmp_path):
     result = builder.build({})
     assert not result.success
     assert "dim_missing" in result.error
+
+
+def _two_dim_star(out: str, partition_by=None) -> StarSchemaBuilder:
+    return (
+        StarSchemaBuilder("s", out)
+        .add_dimension("dim_a", natural_keys=["a_sk"])
+        .add_dimension("dim_b", natural_keys=["b_sk"])
+        .add_fact(
+            "fact",
+            measures=["v"],
+            dimension_keys=["a_sk", "b_sk"],
+            partition_by=partition_by,
+        )
+    )
+
+
+def test_star_schema_empty_partitioned_fact(spark, tmp_path):
+    """A hive-partitioned fact with no rows writes no parquet file, only
+    ``_SUCCESS``; the read-back under the declared schema still yields
+    the table (0 rows, the data columns then the partition column), where
+    a schema-inferring read fails with ``UNABLE_TO_INFER_SCHEMA``."""
+    dim_a = spark.createDataFrame([(1, "x"), (2, "y")], "a_sk int, a_name string")
+    dim_b = spark.createDataFrame([(10,)], "b_sk int")
+    fact = spark.createDataFrame([], "a_sk int, yr int, b_sk int, v double")
+    builder = _two_dim_star(str(tmp_path), partition_by=["yr"])
+
+    result = run_within(
+        lambda: builder.build({"dim_a": dim_a, "dim_b": dim_b, "fact": fact})
+    )
+    assert result.success, result.error
+    assert result.rows_by_table == {"dim_a": 2, "dim_b": 1, "fact": 0}
+    assert result.tables["fact"].columns == ["a_sk", "b_sk", "v", "yr"]
+    assert result.tables["fact"].count() == 0
+    assert run_within(builder.validate_referential_integrity) == {
+        "fact.a_sk->dim_a": 0,
+        "fact.b_sk->dim_b": 0,
+    }
+
+
+_PROBE_CONFIGS = {
+    "default": {},
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+    "one_partition": {"spark.sql.shuffle.partitions": "1"},
+}
+
+
+@pytest.mark.parametrize("config", list(_PROBE_CONFIGS))
+def test_star_schema_orphans_match_anti_join(spark, tmp_path, config):
+    """Injected orphans: an FK missing from its dim and a null FK are each
+    counted once per probe; a dim key present twice must not fan out and
+    a null dim key matches nothing. Every ``fact.key->dim`` count equals
+    ``anti_join_orphans(...).count()`` whatever the planner chooses, and
+    every observed row count equals a recount of the written files."""
+    dim_a = spark.createDataFrame(
+        [(1, "x"), (2, "y"), (2, "y again"), (None, "null key")],
+        "a_sk int, a_name string",
+    )
+    dim_b = spark.createDataFrame([(10,), (20,), (None,)], "b_sk int")
+    fact = spark.createDataFrame(
+        [
+            (1, 10, 2024, 1.0),
+            (2, 20, 2024, 2.0),  # a_sk 2 is in dim_a twice
+            (99, 20, 2025, 3.0),  # a_sk 99 is missing from dim_a
+            (None, 10, 2025, 4.0),  # null a_sk
+            (1, 77, 2025, 5.0),  # b_sk 77 is missing from dim_b
+            (2, None, 2024, 6.0),  # null b_sk
+        ],
+        "a_sk int, b_sk int, yr int, v double",
+    )
+    saved = {k: spark.conf.get(k) for k in _PROBE_CONFIGS[config]}
+    for k, v in _PROBE_CONFIGS[config].items():
+        spark.conf.set(k, v)
+    try:
+        builder = _two_dim_star(str(tmp_path), partition_by=["yr"])
+        result = builder.build({"dim_a": dim_a, "dim_b": dim_b, "fact": fact})
+        assert result.success, result.error
+        orphans = builder.validate_referential_integrity()
+        built = result.tables
+        expected = {
+            f"fact.{key}->{dim}": anti_join_orphans(
+                built["fact"], built[dim], key, key
+            ).count()
+            for key, dim in (("a_sk", "dim_a"), ("b_sk", "dim_b"))
+        }
+        recount = {
+            name: spark.read.parquet(path).count()
+            for name, path in result.output_paths.items()
+        }
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert orphans == expected == {"fact.a_sk->dim_a": 2, "fact.b_sk->dim_b": 2}
+    assert result.rows_by_table == recount == {"dim_a": 4, "dim_b": 3, "fact": 6}
+
+
+def test_star_schema_build_is_one_job_per_map_only_table(spark, tmp_path):
+    """Each map-only table costs exactly its write: the row count is
+    observed on the write and the read-back infers no schema."""
+    tables = {
+        "dim_a": spark.range(50).select(F.col("id").cast("int").alias("a_sk")),
+        "dim_b": spark.range(20).select(F.col("id").cast("int").alias("b_sk")),
+        "fact": spark.range(300).select(
+            (F.col("id") % 50).cast("int").alias("a_sk"),
+            (F.col("id") % 20).cast("int").alias("b_sk"),
+            F.col("id").cast("double").alias("v"),
+        ),
+    }
+    builder = _two_dim_star(str(tmp_path))
+    with count_jobs(spark) as jobs:
+        result = builder.build(tables)
+    assert result.success, result.error
+    assert result.rows_by_table == {"dim_a": 50, "dim_b": 20, "fact": 300}
+    assert jobs.n == len(tables)
+
+    with count_jobs(spark) as jobs:
+        orphans = builder.validate_referential_integrity()
+    assert orphans == {"fact.a_sk->dim_a": 0, "fact.b_sk->dim_b": 0}
+    assert jobs.n <= 4
+    assert sorted(os.listdir(tmp_path)) == sorted(tables)
 
 
 def test_scd2_versions_intervals_and_current_flag(spark):
