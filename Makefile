@@ -11,10 +11,10 @@ test:
 # bytecode compile sweep when ruff isn't on the path (this container).
 lint:
 	@if command -v ruff >/dev/null 2>&1; then \
-		ruff check financial_data_engineering_spark/ tests/ --select F --ignore F401; \
+		ruff check financial_data_engineering_spark/ tests/ tools/ bench.py --select F --ignore F401; \
 	else \
 		echo "ruff not installed; running compileall syntax sweep"; \
-		python -m compileall -q financial_data_engineering_spark tests examples bench.py __spark_entry__.py; \
+		python -m compileall -q financial_data_engineering_spark tests examples tools bench.py __spark_entry__.py; \
 	fi
 
 docker-test:

@@ -1,29 +1,39 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1), writes the FULL per-query record (wall
-times, and the exception class and first message line of each failed
-query) to ``reports/bench/latest.json`` (and appends to
-``reports/bench/history.jsonl``),
-then prints ONE short JSON summary line as the absolute last stdout:
+times, counters and failure causes, below) to ``reports/bench/latest.json``
+(and appends to ``reports/bench/history.jsonl``), then prints ONE short
+JSON summary line as the absolute last stdout:
 {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
- "n_queries": N, "queries": {<10 slowest only>}, "detail": "reports/..."}
+ "n_queries": N, "jobs_total": J, "master": ..., "defaultParallelism": P,
+ "spark.sql.shuffle.partitions": S, "queries": {<10 slowest only>},
+ "detail": "reports/..."}
 
 The round-4 and round-5 official artifacts were truncated at the HEAD by the
 driver's bounded tail capture once the full 95-query timing map outgrew the
-buffer; the summary line is bounded (~600 bytes) by construction, and the
+buffer; the summary line is bounded (~700 bytes) by construction, and the
 full map lives in the committed detail file instead.
 
 Each query is executed as a full action (noop-format write of the
 materialized result) after session/page-cache/codegen warm-up; per-query
-wall time is reported.
+wall time is reported. Per query, the detail record also carries the
+counters read after its write from Spark's status stores
+(``perfbench/sparkstate.py``'s ``StatusReader``, UI off): ``plan_s`` (time
+in the query function before the write starts), jobs, stages, tasks,
+``executor_cpu_s``, ``shuffle_write_mb``, ``spill_mb`` and ``python_s``;
+the exception class and first message line of each failed query
+(``errors``, and ``warmup_errors`` for the sf0.001 warm-up); and the
+queries whose job count differed between passes (``jobs_unstable``).
+``SPARK_GRAFT_BENCH_ONLY=q1,q2 python bench.py`` gives the same numbers
+for a few queries (reports/bench/restricted_<sf>.json).
 
 Variance note: single-query timings on a shared host can spike 2-8x
 run-to-run from contention alone, and whole-suite totals at one HEAD swing
 +-10% (history.jsonl round 8: 131.3/145.7/136.6 s within 80 minutes). The
 suite therefore runs SPARK_GRAFT_BENCH_RUNS full passes (default 3) and
-records the per-query MEDIAN; the per-pass totals and their max/min spread
-are kept in the artifact so the noise is visible instead of hidden, and
-noise_vs_prev compares medians to medians. The artifact reflects the plan,
-not the noisy neighbor.
+records the per-query MEDIAN of the wall time and of every counter; the
+per-pass totals and their max/min spread are kept in the artifact so the
+noise is visible instead of hidden, and noise_vs_prev compares medians to
+medians. The artifact reflects the plan, not the noisy neighbor.
 """
 
 from __future__ import annotations
@@ -40,6 +50,7 @@ from financial_data_engineering_spark import queries as q
 from financial_data_engineering_spark.llm.caching import release_intermediates
 from financial_data_engineering_spark.queries.graph import release_shared_edges
 from financial_data_engineering_spark.session import get_spark
+from perfbench.sparkstate import StatusReader
 
 HEADLINE = [
     "pricing_summary",
@@ -50,6 +61,8 @@ HEADLINE = [
     "lineitem_global_stats",
     "event_type_counts",
 ]
+
+_MB = 1024 * 1024
 
 
 def _parse_only(spec: str) -> set[str]:
@@ -64,6 +77,48 @@ def _parse_only(spec: str) -> set[str]:
         elif tok:
             keep.add(tok)
     return keep
+
+
+def time_one(
+    spark, reader: StatusReader, query, sf_dir: str
+) -> tuple[float, dict[str, float], str | None]:
+    """Run ``query(spark, sf_dir)`` as a noop-sink write. Returns its wall
+    seconds (-1.0 if it raised), its counters (the jobs that finished
+    since ``reader``'s previous call) and its failure line (None if it
+    succeeded). Never raises for a failing query."""
+    error = None
+    start = time.perf_counter()
+    planned = None
+    try:
+        df = query(spark, sf_dir)
+        planned = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+    except Exception as exc:  # noqa: BLE001 — returned as the failure line
+        error = _describe_failure(exc)
+    finally:
+        # Some operators persist intermediates (e.g. dedup inverted
+        # indexes); release the tracked handles FIRST (also empties the
+        # tracking list, so the suite doesn't accumulate driver
+        # references/executor storage across queries), and the graph
+        # family's session-shared edge frame, then clear whatever else
+        # was cached.
+        release_intermediates()
+        release_shared_edges()
+        spark.catalog.clearCache()
+    end = time.perf_counter()
+    jobs = reader.new_jobs(sql_metrics=True)
+    counters = {
+        "plan_s": round((end if planned is None else planned) - start, 3),
+        "jobs": len(jobs),
+        "stages": len({sid for j in jobs for sid in j.stage_ids}),
+        "tasks": sum(j.tasks for j in jobs),
+        "executor_cpu_s": round(sum(j.cpu_s for j in jobs), 3),
+        "shuffle_write_mb": round(sum(j.shuffle_write for j in jobs) / _MB, 4),
+        "spill_mb": round(sum(j.spill for j in jobs) / _MB, 4),
+        "python_s": round(sum(j.python_s for j in jobs), 3),
+    }
+    wall = -1.0 if error else round(end - start, 3)
+    return wall, counters, error
 
 
 def main() -> None:
@@ -84,6 +139,7 @@ def main() -> None:
     # silently polluting the round-over-round series.
     load_start, hot_host = _wait_for_idle_host()
     spark = get_spark("bench")
+    reader = StatusReader(spark)
 
     registry = q.all_queries()
     names = [n for n in HEADLINE if n in registry]
@@ -130,43 +186,14 @@ def main() -> None:
     # is the number that matters at 100 TB, where compile time is noise.
     # sf0.001 keeps the warmup pass cheap and its data cannot pollute the
     # sf0.1 page cache (different files; sf0.1 is warmed separately above).
+    warmup_errors: dict[str, str] = {}
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
         for name in names:
-            try:
-                registry[name](spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001
-                pass
-            spark.catalog.clearCache()
-
-    # why a query failed, by name (the last failing pass wins); a failed
-    # query still times as -1.0, and this map says what the -1.0 means
-    errors: dict[str, str] = {}
-
-    def time_one(name: str) -> float:
-        start = time.perf_counter()
-        try:
-            registry[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:  # noqa: BLE001 — recorded in ``errors``
-            errors[name] = _describe_failure(exc)
-            return -1.0
-        finally:
-            # Some operators persist intermediates (e.g. dedup inverted
-            # indexes); release the tracked handles FIRST (also empties
-            # the tracking list, so 110 queries don't accumulate driver
-            # references/executor storage across the suite — one plausible
-            # contributor to late-run slowdown in the r6 driver pass),
-            # then clear whatever else was cached.
-            release_intermediates()
-            # the graph family's session-shared edge frame must not
-            # leak across measurement boundaries either
-            release_shared_edges()
-            spark.catalog.clearCache()
-        return round(time.perf_counter() - start, 3)
+            _, _, error = time_one(spark, reader, registry[name], warm_dir)
+            if error:
+                warmup_errors[name] = error
+    reader.skip()
 
     # Prior-round record, loaded BEFORE this run overwrites it: the basis
     # for the median-vs-median noise_vs_prev estimate below.
@@ -199,15 +226,34 @@ def main() -> None:
     # clean) and the pass-level drift a one-shot run cannot see; the
     # recorded pass totals expose the spread instead of hiding it.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    passes: list[dict[str, float]] = [
-        {name: time_one(name) for name in names} for _ in range(runs)
+    passes = [
+        {name: time_one(spark, reader, registry[name], sf_dir) for name in names}
+        for _ in range(runs)
     ]
     timings: dict[str, float] = {}
+    counters: dict[str, dict[str, float]] = {}
+    # why a query failed, by name (the last failing pass wins); a failed
+    # query still times as -1.0, and this map says what the -1.0 means
+    errors: dict[str, str] = {}
+    # a query's job count is set by its plan and should repeat between
+    # passes; one whose passes disagree is listed with the counts seen
+    jobs_unstable: dict[str, list[int]] = {}
     for name in names:
-        vals = [p[name] for p in passes if p[name] >= 0]
-        timings[name] = statistics.median(vals) if vals else -1.0
+        results = [p[name] for p in passes]
+        errors.update((name, e) for _, _, e in results if e)
+        ok = [r for r in results if r[0] >= 0]
+        timings[name] = (
+            round(statistics.median(r[0] for r in ok), 4) if ok else -1.0
+        )
+        counters[name] = {
+            k: round(statistics.median(r[1][k] for r in ok or results), 4)
+            for k in results[0][1]
+        }
+        seen = sorted({r[1]["jobs"] for r in results})
+        if len(seen) > 1:
+            jobs_unstable[name] = seen
     pass_totals = [
-        round(sum(t for t in p.values() if t >= 0), 3) for p in passes
+        round(sum(r[0] for r in p.values() if r[0] >= 0), 3) for p in passes
     ]
     spread = (
         round(max(pass_totals) / min(pass_totals), 3)
@@ -230,92 +276,26 @@ def main() -> None:
         round(statistics.median(ratios), 3) if ratios else None
     )
 
-    # ann_ivf_from_index gates the full build+persist+serve round-trip,
-    # which reads as "serving is slower than brute IVF" when serving is
-    # the cheap half. Time the halves separately for the detail record
-    # (not counted in the total — the registered query already is).
-    aux: dict[str, float] = {}
-    try:
-        import shutil
-        import tempfile
-
-        from financial_data_engineering_spark.llm.index import (
-            build_ivf_index,
-            ivf_topk_from_index,
-        )
-        from financial_data_engineering_spark.queries.similarity import (
-            _N_ITERS,
-            _N_QUERIES,
-            _TOP_K,
-            EMB_DIM,
-            IVF_N_CENTROIDS,
-            IVF_NPROBE,
-        )
-        from financial_data_engineering_spark.tables import load as _load
-        from pyspark.sql import functions as F
-
-        emb = _load(spark, "embeddings", sf_dir)
-        ivf_dir = tempfile.mkdtemp(prefix="fdes_bench_ivf_")
-        t0 = time.perf_counter()
-        build_ivf_index(
-            emb, ivf_dir, n_centroids=IVF_N_CENTROIDS, n_iters=_N_ITERS, dim=EMB_DIM
-        )
-        aux["ann_ivf_index_build"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        ivf_topk_from_index(
-            spark,
-            emb.filter(F.col("vec_id") < _N_QUERIES),
-            ivf_dir,
-            k=_TOP_K,
-            nprobe=IVF_NPROBE,
-            dim=EMB_DIM,
-        ).write.format("noop").mode("overwrite").save()
-        aux["ann_ivf_index_serve"] = round(time.perf_counter() - t0, 3)
-        shutil.rmtree(ivf_dir, ignore_errors=True)
-        release_intermediates()
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001 — aux timings must never fail the bench
-        pass
-
-    # Same split for the PQ cascade: codebook training (the build half,
-    # amortized over a corpus lifetime) vs encode+ADC scan+rerank (the
-    # per-query-batch serve half the registered query charges in full).
-    try:
-        from financial_data_engineering_spark.llm import pq as _pq
-        from financial_data_engineering_spark.queries.similarity import (
-            RERANK_POOL,
-        )
-        from financial_data_engineering_spark.llm.caching import (
-            persist_tracked as _pt,
-        )
-
-        proj = _pt(emb.select("vec_id", "embedding"))
-        t0 = time.perf_counter()
-        books = _pq.pq_codebooks(proj, dim=EMB_DIM)
-        aux["ann_pq_train"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        _pq.pq_serve_from_books(
-            emb.filter(F.col("vec_id") < _N_QUERIES),
-            proj,
-            books,
-            k=_TOP_K,
-            pool=RERANK_POOL,
-            dim=EMB_DIM,
-        ).write.format("noop").mode("overwrite").save()
-        aux["ann_pq_serve"] = round(time.perf_counter() - t0, 3)
-        release_intermediates()
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001 — aux timings must never fail the bench
-        pass
-
     total = round(sum(t for t in timings.values() if t >= 0), 3)
+    sc = spark.sparkContext
+    applied = {
+        "jobs_total": sum(c["jobs"] for c in counters.values()),
+        "master": sc.master,
+        "defaultParallelism": sc.defaultParallelism,
+        "spark.sql.shuffle.partitions": spark.conf.get(
+            "spark.sql.shuffle.partitions"
+        ),
+    }
     full = {
         "metric": "total_query_wall_seconds",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "counters": counters,
         "errors": errors,
-        "aux": aux,
+        "warmup_errors": warmup_errors,
+        "jobs_unstable": jobs_unstable,
+        **applied,
         "runs": runs,
         "pass_totals": pass_totals,
         "spread": spread,
@@ -368,6 +348,7 @@ def main() -> None:
         "sf": sf,
         "n_queries": len(timings),
         "n_failed": sum(1 for t in timings.values() if t < 0),
+        **applied,
         "noise_vs_prev": noise_vs_prev,
         "queries": slowest,
         "detail": detail_rel,

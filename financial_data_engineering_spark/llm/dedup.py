@@ -110,6 +110,27 @@ def shingle_rows(
 MINHASH_P = 4294967311
 
 
+def hash_words(col: Column) -> tuple[Column, Column]:
+    """One md5 digest -> the (a, b) 32-bit words of the affine family."""
+    hh = F.md5(col)
+    a = F.conv(F.substring(hh, 1, 8), 16, 10).cast("long")
+    b = F.conv(F.substring(hh, 9, 8), 16, 10).cast("long")
+    return a, b
+
+
+def affine_hash(a: Column, b: Column, i: int) -> Column:
+    """Member i of the affine family: (a + i·b) mod P."""
+    return (a + F.lit(i) * b) % F.lit(MINHASH_P)
+
+
+def affine_slot(a: Column, b: Column, i: int, size: int) -> Column:
+    """Slot of hash i in a table of ``size`` (a Bloom bit, a Count-Min
+    column): ((a + (i+1)·b) mod P) mod size. (i+1), not i, so slot 0 is
+    not just ``a mod size`` for every item — h_0 stays a full member of
+    the 2-universal family."""
+    return affine_hash(a, b, i + 1) % F.lit(size)
+
+
 def minhash_signatures(
     inv: DataFrame, id_col: str = "id", shingle_col: str = "g", k: int = 16
 ) -> DataFrame:
@@ -122,16 +143,12 @@ def minhash_signatures(
     row was the measured hot spot of the LSH pass). All k minima come from
     ONE groupBy(id) pass with map-side partial aggregation, every h_i a
     flat codegen'd long expression."""
-    hh = F.md5(F.col(shingle_col))
-    a = F.conv(F.substring(hh, 1, 8), 16, 10).cast("long")
-    b = F.conv(F.substring(hh, 9, 8), 16, 10).cast("long")
+    a, b = hash_words(F.col(shingle_col))
     pre = inv.select(
         F.col(id_col).alias("id"), a.alias("ha"), b.alias("hb")
     )
     aggs = [
-        F.min((F.col("ha") + F.lit(i) * F.col("hb")) % F.lit(MINHASH_P)).alias(
-            f"m{i}"
-        )
+        F.min(affine_hash(F.col("ha"), F.col("hb"), i)).alias(f"m{i}")
         for i in range(k)
     ]
     return pre.groupBy("id").agg(*aggs)

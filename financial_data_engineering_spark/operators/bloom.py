@@ -34,27 +34,12 @@ read.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from financial_data_engineering_spark.llm.dedup import MINHASH_P
+from financial_data_engineering_spark.llm.dedup import affine_slot, hash_words
 
 BITS_PER_WORD = 32
-
-
-def _hash_words(col: Column) -> tuple[Column, Column]:
-    """One md5 digest -> the (a, b) 32-bit words of the affine family."""
-    hh = F.md5(col)
-    a = F.conv(F.substring(hh, 1, 8), 16, 10).cast("long")
-    b = F.conv(F.substring(hh, 9, 8), 16, 10).cast("long")
-    return a, b
-
-
-def _position(a: Column, b: Column, i: int, m_bits: int) -> Column:
-    """Bit position of hash i: ((a + (i+1)·b) mod P) mod m_bits.
-    (i+1), not i, so position 0 is not just ``a mod m`` for every item —
-    h_0 stays a full member of the 2-universal family."""
-    return ((a + F.lit(i + 1) * b) % F.lit(MINHASH_P)) % F.lit(m_bits)
 
 
 def bloom_build(
@@ -76,9 +61,9 @@ def bloom_build(
     items = df.select(
         F.col(item_col).cast("string").alias("item")
     ).filter(F.col("item").isNotNull())
-    a, b = _hash_words(F.col("item"))
+    a, b = hash_words(F.col("item"))
     pos = F.explode(
-        F.array(*[_position(a, b, i, m_bits) for i in range(k_hashes)])
+        F.array(*[affine_slot(a, b, i, m_bits) for i in range(k_hashes)])
     ).alias("pos")
     return (
         items.select(pos)
@@ -148,10 +133,10 @@ def bloom_screen(
                 "screen sizing must match the build sizing"
             )
         dense[w] = int(r["bits"])
-    a, b = _hash_words(F.col(item_col).cast("string"))
+    a, b = hash_words(F.col(item_col).cast("string"))
     out = batch.withColumn("_bloom_words", F.lit(dense))
     for i in range(k_hashes):
-        out = out.withColumn(f"_p{i}", _position(a, b, i, m_bits))
+        out = out.withColumn(f"_p{i}", affine_slot(a, b, i, m_bits))
     # SQL-text expressions because the Python shift functions take only
     # literal shift amounts; element_at is 1-based.
     hits = [

@@ -30,22 +30,10 @@ joins, zero shuffles on the probe side.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from financial_data_engineering_spark.llm.dedup import MINHASH_P
-
-
-def _hash_words(col: Column) -> tuple[Column, Column]:
-    hh = F.md5(col)
-    a = F.conv(F.substring(hh, 1, 8), 16, 10).cast("long")
-    b = F.conv(F.substring(hh, 9, 8), 16, 10).cast("long")
-    return a, b
-
-
-def _col_ix(a: Column, b: Column, i: int, width: int) -> Column:
-    """Row i's column for the item: ((a + (i+1)·b) mod P) mod width."""
-    return ((a + F.lit(i + 1) * b) % F.lit(MINHASH_P)) % F.lit(width)
+from financial_data_engineering_spark.llm.dedup import affine_slot, hash_words
 
 
 def count_min_build(
@@ -66,13 +54,13 @@ def count_min_build(
     items = df.select(
         F.col(item_col).cast("string").alias("item")
     ).filter(F.col("item").isNotNull())
-    a, b = _hash_words(F.col("item"))
+    a, b = hash_words(F.col("item"))
     cell = F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("row"),
-                    _col_ix(a, b, i, width).alias("col"),
+                    affine_slot(a, b, i, width).alias("col"),
                 )
                 for i in range(depth)
             ]
@@ -120,12 +108,12 @@ def count_min_estimate(
                 "estimate sizing must match the build sizing"
             )
         dense[row * width + col] = int(r["cnt"])
-    a, b = _hash_words(F.col(item_col).cast("string"))
+    a, b = hash_words(F.col(item_col).cast("string"))
     flat = F.lit(dense)
     probes = [
         F.element_at(
             flat,
-            (F.lit(i * width) + _col_ix(a, b, i, width)).cast("int") + 1,
+            (F.lit(i * width) + affine_slot(a, b, i, width)).cast("int") + 1,
         )
         for i in range(depth)
     ]

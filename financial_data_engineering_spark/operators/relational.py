@@ -65,9 +65,10 @@ def anti_join_orphans(
     """Rows of ``fact`` whose key has no match in ``dim`` — the reference's
     referential-integrity probe ``set(fact[k]) - set(dim[k])``
     (star_schema.py:151) as a distributed anti-join (dim side broadcast
-    when small)."""
+    when small). No ``distinct`` on the dim key: an anti join neither
+    fans out on duplicate build keys nor needs them unique."""
     return fact.join(
-        dim.select(F.col(dim_key).alias(fact_key)).distinct(),
+        dim.select(F.col(dim_key).alias(fact_key)),
         on=fact_key,
         how="left_anti",
     )

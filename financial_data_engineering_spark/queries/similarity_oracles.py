@@ -12,8 +12,8 @@ _N_QUERIES = 5
 _TOP_K = 5
 _N_PLANES = 4
 #: Embedding dimensionality of the synthetic embeddings table — shared
-#: by queries, oracles (interpolated below, never hardcoded), and
-#: bench aux, so a knob change cannot desynchronize them.
+#: by the queries and their oracles (interpolated below, never
+#: hardcoded), so a knob change cannot desynchronize them.
 EMB_DIM = 64
 
 _BRUTE_ORACLE = f"""
@@ -233,9 +233,9 @@ ORDER BY query_id, rank
 
 _N_ITERS = 2
 
-#: The IVF configuration, shared by the queries, their oracles, and
-#: bench.py's build/serve aux timings — one source so a knob change
-#: cannot silently leave the aux numbers measuring a different setup.
+#: The IVF configuration, shared by the queries and their oracles — one
+#: source so a knob change cannot leave an oracle replaying a different
+#: setup from the query it checks.
 IVF_N_CENTROIDS = 8
 IVF_NPROBE = 2
 _KM_SCALE = 1_000_000

@@ -104,7 +104,11 @@ def near_dup_screen(
     explode→broadcast-join→count plan, pinned against the batch operator
     in tests.
     """
-    from financial_data_engineering_spark.llm.dedup import MINHASH_P, shingles
+    from financial_data_engineering_spark.llm.dedup import (
+        affine_hash,
+        hash_words,
+        shingles,
+    )
 
     rows = k // bands
     sh = shingles(F.col(text_col), n)
@@ -117,15 +121,7 @@ def near_dup_screen(
         # two 32-bit halves of md5(x) — hash-identical to the relational
         # batch pipeline; HOF cost lands only on the micro-batch.
         return F.array_min(
-            F.transform(
-                F.col("sh"),
-                lambda x: (
-                    F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("long")
-                    + F.lit(i)
-                    * F.conv(F.substring(F.md5(x), 9, 8), 16, 10).cast("long")
-                )
-                % F.lit(MINHASH_P),
-            )
+            F.transform(F.col("sh"), lambda x: affine_hash(*hash_words(x), i))
         )
 
     sigs = docs.select(

@@ -47,7 +47,10 @@ SHUFFLE_BUDGET = {
     "customer_overlapping_orders": 3,
     "customer_padded_keys": 0,
     "customer_priority_scd2": 2,
-    "customers_without_orders": 2,
+    # broadcast left-anti join against the order keys (no distinct on
+    # the build side: an anti join neither fans out on nor needs unique
+    # keys); the one exchange is the presentation sort
+    "customers_without_orders": 1,
     "date_dimension": 2,
     "dedup_component_groups": 2,
     # K rounds run against materialized (lineage-cut) inputs, so the

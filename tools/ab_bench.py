@@ -19,7 +19,11 @@ Usage:
 
 Each leg is one ``bench.py`` invocation with SPARK_GRAFT_BENCH_ONLY set
 and SPARK_GRAFT_BENCH_RUNS=1 (the leg-level interleave replaces the
-in-process pass loop); per-query medians are taken across a side's legs.
+in-process pass loop); per-query medians are taken across a side's legs,
+for the wall time and for the job count and shuffle bytes bench.py
+records per query (``counters``), and each query's line prints the
+target-minus-base deltas. A base commit whose bench.py predates the
+counters leaves those medians empty.
 Restricted runs write ``reports/bench/restricted_<sf>.json`` and never
 touch latest.json/history.jsonl — that firewall is bench.py's, reused
 here unchanged.
@@ -38,6 +42,19 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+# the per-query counters of bench.py's record whose medians and deltas
+# the artifact carries next to the wall medians
+COUNTS = ("jobs", "shuffle_write_mb")
+
+
+def _pair(medians: dict[str, dict[str, float]], name: str) -> str:
+    """``base -> target (+delta)`` for one query, ``?`` for a missing side."""
+    b, t = medians["base"].get(name), medians["target"].get(name)
+    if b is None or t is None:
+        return f"{b if b is not None else '?'} -> {t if t is not None else '?'}"
+    return f"{b:g} -> {t:g} ({t - b:+.4g})"
 
 
 def _git(*args: str, cwd: str = REPO) -> str:
@@ -108,6 +125,7 @@ def main() -> None:
                         "loadavg_start": rec.get("loadavg_start"),
                         "total": rec.get("value"),
                         "queries": rec.get("queries", {}),
+                        "counters": rec.get("counters", {}),
                         "leg_wall_sec": rec.get("leg_wall_sec"),
                     }
                 )
@@ -124,15 +142,17 @@ def main() -> None:
         {n for leg in legs for n in leg["queries"] if leg["queries"][n] >= 0}
     )
     medians: dict[str, dict[str, float]] = {"base": {}, "target": {}}
+    counts = {key: {"base": {}, "target": {}} for key in COUNTS}
     for side in ("base", "target"):
+        mine = [leg for leg in legs if leg["side"] == side]
         for n in names:
-            vals = [
-                leg["queries"][n]
-                for leg in legs
-                if leg["side"] == side and leg["queries"].get(n, -1) >= 0
-            ]
+            vals = [leg["queries"][n] for leg in mine if leg["queries"].get(n, -1) >= 0]
             if vals:
                 medians[side][n] = statistics.median(vals)
+            for key in COUNTS:
+                vals = [leg["counters"][n][key] for leg in mine if n in leg["counters"]]
+                if vals:
+                    counts[key][side][n] = statistics.median(vals)
     speedup = {
         n: round(medians["base"][n] / medians["target"][n], 3)
         for n in names
@@ -156,6 +176,7 @@ def main() -> None:
         "runs_per_leg": args.runs,
         "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "medians": medians,
+        **{f"{key}_medians": counts[key] for key in COUNTS},
         "speedup_base_over_target": speedup,
         "geomean_speedup": geomean,
         "legs": legs,
@@ -165,6 +186,10 @@ def main() -> None:
     with open(out, "w") as f:
         json.dump(artifact, f, indent=1, sort_keys=True)
         f.write("\n")
+    for n in names:
+        line = [f"{n}: wall {_pair(medians, n)}"]
+        line += [f"{key} {_pair(counts[key], n)}" for key in COUNTS]
+        print("  ".join(line))
     print(json.dumps({"artifact": out, "geomean_speedup": geomean,
                       "speedup": speedup}, indent=1))
 
