@@ -15,7 +15,9 @@ and queries arrive continuously. This module splits the lifecycle:
   serving cost scales with nprobe/n_centroids of the index, not its
   full size. The scoring path and tie-breaks are byte-identical to
   ``ivf_topk``'s (same ``_pair_cos``, same rank window), which the
-  round-trip test pins.
+  round-trip test pins. Each (query, neighbor) pair is scored once —
+  a vector sits in one list and a query's probes are distinct lists —
+  so the rank window is the serving plan's only shuffle.
 
 Serving submits no Spark job before the caller's action: the centroids
 are read with pyarrow (mirroring the pyarrow write), ``lists/`` is read
@@ -149,12 +151,14 @@ def ivf_topk_from_index(
         ]
     )
     lists = spark.read.schema(lists_schema).parquet(os.path.join(path, "lists"))
+    # No pair dedupe: a corpus vector sits in exactly one list and a
+    # query's nprobe probes are distinct lists, so with unique ids each
+    # (query_id, neighbor_id) pair is scored once.
     scored = (
         F.broadcast(probes)
         .join(lists, ["cluster"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos"), F.asc("neighbor_id")

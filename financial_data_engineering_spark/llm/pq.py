@@ -36,16 +36,23 @@ bit-for-bit — the same contracts llm/similarity.py pins):
 Scale shape: training is one map-only Arrow pass per iteration for
 all ``m`` subspaces (and, in IVF-PQ, the coarse quantizer too),
 emitting ~(partitions × m × k) partial rows (the corpus never moves);
-encode is one map-only pass; scoring is a broadcast LUT join against
-the exploded code table (map-side) whose groupBy collapses the m-way
-blow-up in the partial aggregate, so the one shuffle carries
-≈ |queries|·|corpus| ADC rows; the rerank joins float vectors for
+encode is one map-only pass that emits a vector's ``m`` codes as one
+array (and, in IVF-PQ, its inverted list). The lookup table is an
+expression over the query row with the codebooks as an array literal
+(``_adc_lut``), so no codebook frame is shipped. Flat PQ joins the
+posexploded table, broadcast, against the posexploded codes (map-side)
+and its groupBy collapses the m-way blow-up in the partial aggregate,
+so the one shuffle carries ≈ |queries|·|corpus| ADC rows. IVF-PQ
+broadcasts one query-side frame (probed lists, vector, lookup table)
+and sums each candidate's score inline on the joined row: nothing
+shuffles before the pool window, whose map side keeps ≤ ``pool`` rows
+per query and partition. The rerank joins float vectors for
 |queries|·pool rows only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -55,6 +62,7 @@ from financial_data_engineering_spark.llm.caching import persist_tracked
 from financial_data_engineering_spark.llm.similarity import (
     Quantizer,
     _assign_codes,
+    _nearest_cosine,
     _pair_cos,
     coarse_quantizer,
     ivf_assignments,
@@ -99,31 +107,31 @@ def pq_codebooks(
     )
 
 
-def pq_code_rows(
+def pq_codes(
     corpus: DataFrame,
     books,
     *,
+    centroids=None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
-    """(vec_id, m, code) exploded PQ code table — the compressed corpus
-    representation (``m`` bytes per vector on disk; exploded here so the
-    ADC scorer is a plain broadcast equi-join). Map-only Arrow pass; the
+    """(vec_id, codes) PQ codes: ``codes[i]`` is the vector's code in
+    subspace ``i`` (``m`` longs — ``m`` bytes per vector on disk). With
+    coarse ``centroids`` (ids 0..n-1, in order) the same pass also emits
+    ``cluster``, the vector's IVF list (``_nearest_cosine``, the rule of
+    ``ivf_assignments`` at nprobe=1). One map-only Arrow pass; the code
     assignment rule is byte-identical to training's."""
     import numpy as np
 
     bmats = [np.asarray(b, dtype="float64") for b in books]
-    m = len(bmats)
-    sub = dim // m
+    sub = dim // len(bmats)
+    cmat = None if centroids is None else vec_matrix(centroids)
     id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", id_field.dataType),
-            T.StructField("m", T.LongType()),
-            T.StructField("code", T.LongType()),
-        ]
-    )
+    fields = [T.StructField("vec_id", id_field.dataType)]
+    if cmat is not None:
+        fields.append(T.StructField("cluster", T.LongType()))
+    fields.append(T.StructField("codes", T.ArrayType(T.LongType())))
 
     def gen(batches):
         import pandas as pd
@@ -132,89 +140,86 @@ def pq_code_rows(
             if not len(pdf):
                 continue
             mat = vec_matrix(pdf[vec_col])
-            codes = np.column_stack(
-                [
-                    _assign_codes(np, mat[:, mi * sub : (mi + 1) * sub], cmat)
-                    for mi, cmat in enumerate(bmats)
-                ]
+            out = {"vec_id": pdf[id_col].to_numpy()}
+            if cmat is not None:
+                out["cluster"] = _nearest_cosine(np, mat, cmat)
+            out["codes"] = list(
+                np.column_stack(
+                    [
+                        _assign_codes(np, mat[:, mi * sub : (mi + 1) * sub], cmat_)
+                        for mi, cmat_ in enumerate(bmats)
+                    ]
+                ).astype("int64")
             )
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy().repeat(m),
-                    "m": np.tile(np.arange(m, dtype="int64"), n),
-                    "code": codes.ravel(),
-                }
-            )
+            yield pd.DataFrame(out)
 
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema=schema)
+    return corpus.select(id_col, vec_col).mapInPandas(
+        gen, schema=T.StructType(fields)
+    )
 
 
-def _adc_lut(
-    queries: DataFrame,
+def pq_code_rows(
+    corpus: DataFrame,
     books,
     *,
-    id_col: str,
-    vec_col: str,
-    dim: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = 64,
 ) -> DataFrame:
-    """(query_id, m, code, contrib_e6) ADC lookup table: the query's m-th
-    subvector dotted with every codebook centroid, rounded to 9 decimals
-    and fixed to integer micro-units (floor(v·10⁶ + 0.5) — true-value
-    floor, engine-identical). |queries|·m·k rows — broadcast fodder.
+    """(vec_id, m, code) exploded PQ code table — :func:`pq_codes`
+    posexploded, so the flat-PQ scorer is a plain equi-join."""
+    return pq_codes(corpus, books, id_col=id_col, vec_col=vec_col, dim=dim).select(
+        "vec_id", F.posexplode("codes").alias("m", "code")
+    )
 
-    The dot runs as a JVM-side zip_with/aggregate fold (left-to-right,
-    DuckDB list_dot_product's association); interpreted evaluation is
-    irrelevant at this cardinality and keeps the expression dim-generic.
 
-    The m·k codebook rows are handed over as a pandas frame: Arrow turns
-    it into a local relation on the driver, where a list of tuples
-    becomes a Python RDD whose broadcast runs a job of Python workers
-    just to unpickle the rows."""
-    import pandas as pd
+def _adc_lut(vec_col: str, books, dim: int) -> Column:
+    """array<long> ADC lookup table of the vector in ``vec_col``: entry
+    ``i·k + c`` is its ``i``-th subvector dotted with centroid ``c`` of
+    codebook ``i``, rounded to 9 decimals and fixed to integer
+    micro-units (floor(v·10⁶ + 0.5) — true-value floor, engine-identical).
 
-    m = len(books)
-    sub = dim // m
-    spark = queries.sparkSession
-    cent = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "m": [mi for mi, book in enumerate(books) for _ in book],
-                "code": [ci for book in books for ci in range(len(book))],
-                "cv": [[float(x) for x in cv] for book in books for cv in book],
-            }
-        ),
-        schema="m long, code long, cv array<double>",
-    )
-    qsub = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col(vec_col).cast("array<double>"), mi * sub + 1, sub)
-                    for mi in range(m)
-                ]
-            )
-        ).alias("m", "qsv"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qsv", "cv", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return qsub.join(F.broadcast(cent), "m").select(
-        "query_id",
-        "m",
-        "code",
-        F.floor(F.round(dot, 9) * 1_000_000 + F.lit(0.5))
-        .cast("long")
-        .alias("contrib_e6"),
-    )
+    The codebooks enter the plan as array literals, so the table is a
+    JVM expression over the query row: no codebook frame to ship and no
+    join. The dot is a zip_with/aggregate left fold (DuckDB
+    list_dot_product's association); interpreted evaluation is
+    irrelevant at |queries|·m·k entries and keeps it dim-generic.
+
+    The expression is parsed from one SQL string: built from Column
+    calls, each literal element and lambda costs a JVM round trip
+    (seconds for m·k centroids). ``repr`` of a float round-trips
+    exactly, and the ``D`` suffix parses it as a DOUBLE, not a
+    DECIMAL."""
+    sub = dim // len(books)
+    v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    parts = []
+    for mi, book in enumerate(books):
+        cents = ", ".join(
+            "array(" + ", ".join(f"{float(x)!r}D" for x in cv) + ")" for cv in book
+        )
+        dot = (
+            f"aggregate(zip_with(slice({v}, {mi * sub + 1}, {sub}), cv,"
+            " (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+        )
+        parts.append(
+            f"transform(array({cents}),"
+            f" cv -> CAST(floor(round({dot}, 9) * 1000000 + 0.5D) AS BIGINT))"
+        )
+    return F.expr(f"flatten(array({', '.join(parts)}))")
+
+
+def _adc_score(m: int, k: int) -> Column:
+    """Exact BIGINT ADC score of a (lut, codes) row: the sum of
+    ``lut[i·k + codes[i]]`` over the ``m`` subspaces, unrolled."""
+    total = None
+    for i in range(m):
+        term = F.col("lut")[F.lit(i * k) + F.col("codes")[i]]
+        total = term if total is None else total + term
+    return total
 
 
 def _pool_and_rerank(
     adc: DataFrame,
-    queries: DataFrame,
     corpus: DataFrame,
     *,
     id_col: str,
@@ -223,32 +228,30 @@ def _pool_and_rerank(
     pool: int,
     dim: int,
 ) -> DataFrame:
-    """Shared cascade tail: cut the per-query ADC ranking to ``pool``
-    candidates, rerank the shortlist with full-precision cosine
-    (byte-identical to brute_force_topk's scorer), keep ``k``. Float
-    vectors load for |queries|·pool rows only."""
+    """Shared cascade tail over (query_id, neighbor_id, adc_e6, qv) rows:
+    cut the per-query ADC ranking to ``pool`` candidates, rerank the
+    shortlist with full-precision cosine (byte-identical to
+    brute_force_topk's scorer), keep ``k``. Corpus float vectors load for
+    |queries|·pool rows only; the query vector rides along the candidate
+    rows (the pool window's map side keeps ``pool`` rows per query)."""
     wp = Window.partitionBy("query_id").orderBy(
         F.desc("adc_e6"), F.asc("neighbor_id")
     )
     short = (
         adc.withColumn("prank", F.row_number().over(wp))
         .filter(F.col("prank") <= pool)
-        .select("query_id", "neighbor_id", "adc_e6")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm_fixed(vec_col, dim).alias("qn"),
+        .select(
+            "query_id", "neighbor_id", "adc_e6", "qv",
+            l2_norm_fixed("qv", dim).alias("qn"),
+        )
     )
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         l2_norm_fixed(vec_col, dim).alias("cn"),
     )
-    rer = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", "adc_e6", _pair_cos(dim).alias("cos"))
+    rer = short.join(cv, "neighbor_id").select(
+        "query_id", "neighbor_id", "adc_e6", _pair_cos(dim).alias("cos")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -275,20 +278,35 @@ def pq_serve_from_books(
     lifetime amortizes one training over many query batches): encode (or
     take ``encoded`` (vec_id, m, code) rows — the persisted-index shape),
     ADC-scan via the broadcast lookup table, pool-cut, cosine-rerank."""
+    n_codes = len(books[0])
     codes = (
         encoded
         if encoded is not None
         else pq_code_rows(corpus, books, id_col=id_col, vec_col=vec_col, dim=dim)
-    ).withColumnRenamed("vec_id", "neighbor_id")
-    lut = _adc_lut(queries, books, id_col=id_col, vec_col=vec_col, dim=dim)
+    ).select(
+        F.col("vec_id").alias("neighbor_id"),
+        (F.col("m") * n_codes + F.col("code")).alias("pos"),
+    )
+    lut = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.posexplode(_adc_lut(vec_col, books, dim)).alias("pos", "contrib_e6"),
+    )
     adc = (
-        codes.join(F.broadcast(lut), ["m", "code"])
+        codes.join(F.broadcast(lut), "pos")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("contrib_e6").alias("adc_e6"))
+        .join(
+            F.broadcast(
+                queries.select(
+                    F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+                )
+            ),
+            "query_id",
+        )
     )
     return _pool_and_rerank(
-        adc, queries, corpus,
+        adc, corpus,
         id_col=id_col, vec_col=vec_col, k=k, pool=pool, dim=dim,
     )
 
@@ -312,10 +330,11 @@ def pq_adc_rerank_topk(
     candidates per query; stage 2 reranks only that shortlist with
     full-precision cosine, byte-identical to brute_force_topk's scorer.
 
-    Plan: codes explode map-side → broadcast-LUT equi-join on (m, code) →
-    groupBy (query, neighbor) whose map-side partial collapses the m-way
-    blow-up before the one shuffle; pool/rank windows partition by
-    query_id; float vectors join for |queries|·pool rows only."""
+    Plan: codes explode map-side → broadcast-LUT equi-join on the table
+    position m·k + code → groupBy (query, neighbor) whose map-side
+    partial collapses the m-way blow-up before the one shuffle; pool and
+    rank windows partition by query_id; float vectors join for
+    |queries|·pool rows only."""
     proj = persist_tracked(corpus.select(id_col, vec_col))
     books = pq_codebooks(
         proj,
@@ -371,31 +390,33 @@ def ivfpq_adc_rerank_topk(
         id_col=id_col,
         vec_col=vec_col,
     )
-    cents = list(enumerate(coarse))
-    corpus_lists = ivf_assignments(
-        proj, cents, id_col=id_col, vec_col=vec_col, dim=dim, nprobe=1
-    ).select(F.col("id").alias("neighbor_id"), "cluster")
-    query_probes = ivf_assignments(
-        queries, cents, id_col=id_col, vec_col=vec_col, dim=dim, nprobe=nprobe
-    ).select(F.col("id").alias("query_id"), "cluster")
-    cand = (
-        F.broadcast(query_probes)
-        .join(corpus_lists, ["cluster"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates()
+    # One query-side broadcast: each query's nprobe probed lists, its
+    # vector (for the rerank) and its ADC lookup table. One corpus-side
+    # Arrow pass: each vector's list and PQ codes. The ADC score is then
+    # an inline sum over the joined row, with no code table to explode,
+    # and no pair dedupe is needed: a vector sits in one list and a
+    # query's probes are distinct lists.
+    probes = ivf_assignments(
+        queries, list(enumerate(coarse)),
+        id_col=id_col, vec_col=vec_col, dim=dim, nprobe=nprobe,
+    ).select(
+        F.col("id").alias("query_id"),
+        "cluster",
+        F.col("v").alias("qv"),
+        _adc_lut("v", books, dim).alias("lut"),
     )
-    codes = pq_code_rows(
-        proj, books, id_col=id_col, vec_col=vec_col, dim=dim
+    lists = pq_codes(
+        proj, books, centroids=coarse, id_col=id_col, vec_col=vec_col, dim=dim
     ).withColumnRenamed("vec_id", "neighbor_id")
-    lut = _adc_lut(queries, books, id_col=id_col, vec_col=vec_col, dim=dim)
     adc = (
-        cand.join(codes, "neighbor_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("contrib_e6").alias("adc_e6"))
+        F.broadcast(probes)
+        .join(lists, "cluster")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id", "neighbor_id", _adc_score(m, n_codes).alias("adc_e6"), "qv"
+        )
     )
     return _pool_and_rerank(
-        adc, queries, corpus,
+        adc, corpus,
         id_col=id_col, vec_col=vec_col, k=k, pool=pool, dim=dim,
     )

@@ -687,8 +687,8 @@ def ivf_topk(
     projection is persisted once and shared by every training pass and the
     final inverted-list assignment, so the source is scanned a single
     time; scoring reuses the map-side-norm _pair_cos path (norms computed
-    once per row, not per pair); the only shuffle is the inverted-list
-    equi-join on cluster id."""
+    once per row, not per pair); the broadcast query probes join the
+    inverted lists map-side, so the only shuffle is the rank window."""
     proj = persist_tracked(corpus.select(id_col, vec_col))
     centroids = kmeans_centroids(
         proj,
@@ -714,12 +714,14 @@ def ivf_topk(
         "cluster",
         l2_norm_fixed("v", dim).alias("qn"),
     )
+    # No pair dedupe: a corpus vector sits in exactly one list and a
+    # query's nprobe probes are distinct lists, so with unique ids each
+    # (query_id, neighbor_id) pair is scored once.
     scored = (
         F.broadcast(query_probes)
         .join(corpus_lists, ["cluster"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (

@@ -410,6 +410,38 @@ def _semi_both_ends(e: DataFrame, keep: DataFrame) -> DataFrame:
     )
 
 
+def _peel(
+    e: DataFrame, k: int, bound: int | None
+) -> tuple[DataFrame, int]:
+    """One peeling round over the materialized edge set ``e``: its edges
+    whose both ends have degree ≥ ``k`` in ``e``, left lazy, and the
+    survivor bound for the rounds after it.
+
+    Survivors only shrink: a round's survivors are ``src`` nodes of the
+    previous round's edges, which are all previous survivors. The first
+    round (``bound`` None) therefore materializes its survivor list and
+    observes the count on that job (``materialize_counted``), and every
+    later round reuses that count as an upper bound for its broadcast
+    decision instead of measuring its own list. A later round's list
+    stays lazy: the broadcast job runs the degree aggregate's final
+    stage itself, with no materialize job in front of it.
+
+    The broadcast survivor list makes both semi joins map-side over the
+    edge blocks, one broadcast shared through ``_semi_both_ends``
+    (checkpointed edges scan without stats, so the unhinted plan
+    sort-merges both semis, shuffling ``e`` by src AND by dst). A list
+    too big to broadcast falls back to exactly that sort-merge shape."""
+    keep = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .filter(F.col("deg") >= k)
+        .select("src")
+    )
+    if bound is None:
+        keep, bound = materialize_counted(keep)
+    return _semi_both_ends(e, broadcast_if_small(keep, bound, row_bytes=8)), bound
+
+
 def kcore_bounded(
     edges: DataFrame,
     *,
@@ -436,35 +468,23 @@ def kcore_bounded(
 
     Scale shape: per round one groupBy(src) count over the current edge
     set plus two LEFT SEMI joins (src side, dst side) against the
-    survivor list — cost proportional to the shrinking |E_r|, state is
-    only the edge set itself (no |V|-row table to carry). Rounds
-    materialize through ``materialize()`` so the plan stays flat; the
-    symmetric edge list means out-degree IS undirected degree, so no
-    union-of-directions pass is needed."""
+    survivor list (``_peel``) — cost proportional to the shrinking
+    |E_r|, state is only the edge set itself (no |V|-row table to
+    carry). Rounds materialize through ``materialize()`` so the plan
+    stays flat; the symmetric edge list means out-degree IS undirected
+    degree, so no union-of-directions pass is needed."""
     e = materialize(edges.select("src", "dst"))
+    bound = None
     for _ in range(rounds):
-        # survivor list materialized (tiny: one row per surviving node)
-        # so (a) its count is measured for the broadcast decision — by
-        # the SAME job that materializes it (materialize_counted) — and
-        # (b) both semi joins consume the same blocks instead of each
-        # re-running the degree aggregate. Broadcast semis run map-side
-        # over the edge blocks — no per-round |E| shuffle (the
-        # checkpointed edge frame has no stats, so the unhinted plan
-        # sort-merged BOTH semi joins, shuffling e by src AND by dst
-        # every round). Both semis join aliases of the one survivor
-        # frame (_semi_both_ends), so the list is broadcast ONCE and the
-        # exchange reused: four jobs per round (degree aggregate's
-        # shuffle map and materialize, one broadcast, the edge
-        # materialize). A survivor list too big to broadcast falls back
-        # to exactly that sort-merge shape.
-        keep, keep_count = materialize_counted(
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("src")
-        )
-        k_b = broadcast_if_small(keep, keep_count, row_bytes=8)
-        e = materialize(_semi_both_ends(e, k_b))
+        # Jobs per round: the first pays 4 (degree aggregate's shuffle
+        # map, survivor materialize, broadcast, edge materialize), later
+        # ones 3 (no survivor materialize, see _peel). The last round's
+        # edges are materialized too: left lazy, they would save a job
+        # but put that round's aggregate and broadcast into the
+        # returned plan, which then holds more than the final degree
+        # aggregate.
+        e, bound = _peel(e, k, bound)
+        e = materialize(e)
     return e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias(degree_alias)
     )
@@ -497,30 +517,22 @@ def kcore_exact(
     Convergence test is free: the edge set only ever shrinks, so
     ``new_count == e_count`` alone proves the fixpoint — no exceptAll
     witness scan needed (unlike components, whose rewrite can move
-    edges). Per-round cost and state are identical to the bounded
-    variant: one count aggregate + two LEFT SEMI joins over the
+    edges). Per-round cost and state are the bounded variant's (the
+    same ``_peel``): one count aggregate + two LEFT SEMI joins over the
     shrinking edge set, no |V|-row carry."""
     e, e_count = materialize_counted(edges.select("src", "dst"))
     converged = e_count == 0
     rounds = 0
+    bound = None
     for _ in range(max_iters):
         if converged:
             break
         rounds += 1
-        # same observed-count materialize and single survivor broadcast
-        # as kcore_bounded (see its in-loop comment): map-side semis when
-        # the survivor list fits, unchanged sort-merge shape when it
-        # doesn't. The convergence count is observed on new_e's
-        # materializing job too, so a peeling round costs the same four
-        # jobs as a bounded round.
-        keep, keep_count = materialize_counted(
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("src")
-        )
-        k_b = broadcast_if_small(keep, keep_count, row_bytes=8)
-        new_e, new_count = materialize_counted(_semi_both_ends(e, k_b))
+        # The same round as kcore_bounded's; the convergence count is
+        # observed on the edge materialize, so a round costs 4 jobs the
+        # first time and 3 after.
+        new_e, bound = _peel(e, k, bound)
+        new_e, new_count = materialize_counted(new_e)
         # Monotone shrink: the new set is a filter of the old, so an
         # unchanged count IS the fixpoint (every node already ≥ k).
         converged = new_count == e_count

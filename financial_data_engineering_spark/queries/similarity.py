@@ -112,8 +112,9 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd, 2 iterations — the oracle replays training bit-exactly via
     scaled-integer means); queries probe their 2 nearest lists (nprobe=2)
     and rank only those candidates. The probe knob trades candidates for
-    recall — the complement to the LSH variant's bit-count knob. The one
-    data shuffle is the inverted-list equi-join on cluster id."""
+    recall — the complement to the LSH variant's bit-count knob. The
+    query probes are broadcast, so the one data shuffle is the rank
+    window."""
     emb = load(spark, "embeddings", sf_dir)
     out = sim.ivf_topk(
         emb.filter(F.col("vec_id") < _N_QUERIES),

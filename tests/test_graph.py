@@ -432,15 +432,7 @@ def test_kcore_random_graph_matches_reference(spark):
         _run_kcore(spark, undirected, k=k)
 
 
-def test_kcore_bounded_job_ceiling(spark):
-    """A peeling round submits at most four Spark jobs: the degree
-    aggregate's shuffle map stage, its materialize (the survivor count is
-    observed on that job), ONE survivor broadcast that both semi joins
-    share, and the edge materialize. A second broadcast, or a separate
-    count after a materialize, breaks the ceiling."""
-    from financial_data_engineering_spark.operators.graph import kcore_bounded
-    from tests.conftest import count_jobs
-
+def _kcore_test_graph(spark):
     rng = random.Random(5)
     undirected = {
         (min(a, b), max(a, b))
@@ -448,11 +440,42 @@ def test_kcore_bounded_job_ceiling(spark):
         if a != b
     }
     sym = [(a, b) for a, b in undirected] + [(b, a) for a, b in undirected]
-    edf = spark.createDataFrame(sym, "src long, dst long")
+    return spark.createDataFrame(sym, "src long, dst long")
+
+
+def test_kcore_bounded_job_ceiling(spark):
+    """The first peeling round submits at most four Spark jobs: the degree
+    aggregate's shuffle map stage, its materialize (the survivor count is
+    observed on that job), ONE survivor broadcast that both semi joins
+    share, and the edge materialize. Later rounds submit at most three:
+    the first round's count bounds their survivor lists, so the broadcast
+    job runs the aggregate's final stage with no materialize in front. A
+    second broadcast, or a count or survivor materialize in a later
+    round, breaks the ceiling."""
+    from financial_data_engineering_spark.operators.graph import kcore_bounded
+    from tests.conftest import count_jobs
+
+    edf = _kcore_test_graph(spark)
     for rounds in (1, 3):
         with count_jobs(spark) as jobs:
             kcore_bounded(edf, k=6, rounds=rounds)
-        assert jobs.n <= 4 * rounds + 1, (rounds, jobs.n)
+        assert jobs.n <= 3 * rounds + 1, (rounds, jobs.n)
+
+
+def test_kcore_exact_job_ceiling(spark):
+    """kcore_exact runs the same rounds as kcore_bounded (the convergence
+    count is observed on each round's edge materialize), plus the input
+    count: a count over an input that is already materialized, two jobs
+    (shuffle map and result)."""
+    from financial_data_engineering_spark.operators.graph import kcore_exact
+    from tests.conftest import count_jobs
+
+    edf = _kcore_test_graph(spark)
+    with count_jobs(spark) as jobs:
+        kcore_exact(edf, k=6)
+    rounds = kcore_exact._last_rounds
+    assert rounds >= 2
+    assert jobs.n <= 3 * rounds + 1 + 2, (rounds, jobs.n)
 
 
 def test_kcore_query_docstring_constants_in_sync():

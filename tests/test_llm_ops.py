@@ -689,6 +689,59 @@ def test_ivf_index_roundtrip_matches_direct(spark, tmp_path):
     assert 0 < read_local < 8
 
 
+def test_ivf_pairs_unique_before_rank_window(spark, tmp_path):
+    """Both IVF paths score each (query_id, neighbor_id) pair once with no
+    dedupe: a corpus vector sits in exactly one inverted list and a
+    query's nprobe probes are distinct lists. ``k`` covers the corpus, so
+    the rank filter keeps every scored pair and a pair scored twice would
+    come back as two rows."""
+    from financial_data_engineering_spark.llm.index import (
+        build_ivf_index,
+        ivf_topk_from_index,
+    )
+    from financial_data_engineering_spark.tables import load
+    from tests.conftest import SF_SMALL
+
+    emb = load(spark, "embeddings", SF_SMALL)
+    queries = emb.filter(F.col("vec_id") < 5)
+    n = emb.count()
+    idx = str(tmp_path / "ivf_index")
+    build_ivf_index(emb, idx, n_centroids=8, n_iters=2, dim=64)
+    for out in (
+        sim.ivf_topk(queries, emb, k=n, n_centroids=8, nprobe=3, dim=64),
+        ivf_topk_from_index(spark, queries, idx, k=n, nprobe=3, dim=64),
+    ):
+        pairs = [(r["query_id"], r["neighbor_id"]) for r in out.collect()]
+        assert {qid for qid, _ in pairs} == set(range(5))
+        assert len(pairs) == len(set(pairs))
+
+
+def test_ivf_serving_job_ceilings(spark):
+    """Noop writes of the two IVF queries the benchmark runs submit at
+    most these many Spark jobs at sf0.001. ann_ivf_from_index: three
+    training collects, the lists write (its repartition's shuffle map and
+    the write), the probe broadcast, the rank window's shuffle map and
+    the presentation sort's two. ann_ivfpq_rerank: three training
+    collects, ONE query-side broadcast (probes, vector and ADC lookup
+    table together), the pool window's shuffle map and the rerank, rank
+    and sort stages. A reintroduced pair dedupe, a second query-side
+    broadcast or a separate code table breaks the ceiling."""
+    from financial_data_engineering_spark import queries as q
+    from financial_data_engineering_spark.llm.caching import (
+        release_intermediates,
+    )
+    from tests.conftest import SF_SMALL, count_jobs
+
+    for name, ceiling in (("ann_ivf_from_index", 10), ("ann_ivfpq_rerank", 9)):
+        release_intermediates()
+        with count_jobs(spark) as jobs:
+            q.all_queries()[name](spark, SF_SMALL).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        assert jobs.n <= ceiling, (name, jobs.n)
+    release_intermediates()
+
+
 def test_ivf_from_index_dir_removed_at_exit_once(spark, monkeypatch):
     """ann_ivf_from_index keeps one index directory per application and
     registers its removal at driver exit exactly once, however often the

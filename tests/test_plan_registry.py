@@ -36,12 +36,15 @@ from tests.conftest import SF_MEDIUM, SF_SMALL
 # budget is a deliberate act that belongs in the same commit as the plan
 # change that needs it, with the why in the commit message.
 SHUFFLE_BUDGET = {
-    "ann_ivf_cosine": 3,
-    # serve-from-index plan: dedup + rank window + presentation sort; the
-    # index build's own jobs run at build time, outside this plan, and
-    # the lists scan is pruned by the broadcast probes (dynamic
-    # partition pruning reuses that exchange, so it adds no shuffle)
-    "ann_ivf_from_index": 3,
+    # rank window + presentation sort: the broadcast probes join the
+    # inverted lists map-side, and each (query, neighbor) pair is scored
+    # once, so no pair dedupe shuffles
+    "ann_ivf_cosine": 2,
+    # serve-from-index plan: rank window + presentation sort; the index
+    # build's own jobs run at build time, outside this plan, and the
+    # lists scan is pruned by the broadcast probes (dynamic partition
+    # pruning reuses that exchange, so it adds no shuffle)
+    "ann_ivf_from_index": 2,
     "ann_lsh_cosine": 2,
     "ann_lsh_multiprobe": 2,
     "customer_overlapping_orders": 3,
@@ -306,12 +309,15 @@ SHUFFLE_BUDGET = {
     # + rerank equi-joins + presentation sort
     "ann_quantized_rerank": 4,
     # ADC agg collapsing the broadcast-LUT join's m-way fan-out + pool
-    # window + rerank neighbor join (both sides) + rank window +
-    # presentation sort; code/LUT builds are map-only Arrow passes
-    "ann_pq_rerank": 6,
+    # window + presentation sort; the code build is a map-only Arrow
+    # pass, the LUT an expression on the query row, and the rank window
+    # reuses the pool window's query_id partitioning
+    "ann_pq_rerank": 3,
     # same cascade with the candidate set cut to the probed inverted
-    # lists first (broadcast probe join + code equi-join, map-side)
-    "ann_ivfpq_rerank": 6,
+    # lists: one broadcast query-side frame (probes + LUT) joins the
+    # encoded lists map-side and the ADC score is an inline sum, so
+    # only the pool window and the presentation sort shuffle
+    "ann_ivfpq_rerank": 2,
     # distinct-word collapse + doc agg (encoded vocab broadcasts at test
     # scale; word-keyed shuffle join at corpus scale) + sort
     "doc_bpe_encoding": 2,
