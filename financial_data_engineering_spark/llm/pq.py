@@ -39,15 +39,14 @@ emitting ~(partitions × m × k) partial rows (the corpus never moves);
 encode is one map-only pass that emits a vector's ``m`` codes as one
 array (and, in IVF-PQ, its inverted list). The lookup table is an
 expression over the query row with the codebooks as an array literal
-(``_adc_lut``), so no codebook frame is shipped. Flat PQ joins the
-posexploded table, broadcast, against the posexploded codes (map-side)
-and its groupBy collapses the m-way blow-up in the partial aggregate,
-so the one shuffle carries ≈ |queries|·|corpus| ADC rows. IVF-PQ
-broadcasts one query-side frame (probed lists, vector, lookup table)
-and sums each candidate's score inline on the joined row: nothing
-shuffles before the pool window, whose map side keeps ≤ ``pool`` rows
-per query and partition. The rerank joins float vectors for
-|queries|·pool rows only.
+(``_adc_lut``), so no codebook frame is shipped. Both cascades
+broadcast one query-side frame (vector, lookup table and, in IVF-PQ,
+the probed lists) and sum each candidate's score inline on the joined
+row (``_adc_scan``): flat PQ pairs it with every encoded vector,
+IVF-PQ with the vectors of the probed lists. Nothing shuffles before
+the pool window, whose map side keeps ≤ ``pool`` rows per query and
+partition. The rerank joins float vectors for |queries|·pool rows
+only.
 """
 
 from __future__ import annotations
@@ -158,21 +157,6 @@ def pq_codes(
     )
 
 
-def pq_code_rows(
-    corpus: DataFrame,
-    books,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """(vec_id, m, code) exploded PQ code table — :func:`pq_codes`
-    posexploded, so the flat-PQ scorer is a plain equi-join."""
-    return pq_codes(corpus, books, id_col=id_col, vec_col=vec_col, dim=dim).select(
-        "vec_id", F.posexplode("codes").alias("m", "code")
-    )
-
-
 def _adc_lut(vec_col: str, books, dim: int) -> Column:
     """array<long> ADC lookup table of the vector in ``vec_col``: entry
     ``i·k + c`` is its ``i``-th subvector dotted with centroid ``c`` of
@@ -208,14 +192,28 @@ def _adc_lut(vec_col: str, books, dim: int) -> Column:
     return F.expr(f"flatten(array({', '.join(parts)}))")
 
 
-def _adc_score(m: int, k: int) -> Column:
-    """Exact BIGINT ADC score of a (lut, codes) row: the sum of
-    ``lut[i·k + codes[i]]`` over the ``m`` subspaces, unrolled."""
-    total = None
-    for i in range(m):
+def _adc_scan(
+    probe: DataFrame, codes: DataFrame, books, on: str | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id, adc_e6, qv) candidate rows: the query-side
+    ``probe`` frame (query_id, qv, lut, and ``on`` if given), broadcast,
+    joined to the encoded corpus ``codes`` (neighbor_id, codes, and
+    ``on``) on ``on``, or to every encoded vector without it. ``adc_e6``
+    is the exact BIGINT sum of ``lut[i·k + codes[i]]`` over the ``m``
+    subspaces, unrolled; ``k`` is the books' own size, the stride
+    ``_adc_lut`` builds (a corpus smaller than the requested code count
+    trains that many centroids per book)."""
+    k = len(books[0])
+    score = None
+    for i in range(len(books)):
         term = F.col("lut")[F.lit(i * k) + F.col("codes")[i]]
-        total = term if total is None else total + term
-    return total
+        score = term if score is None else score + term
+    return (
+        F.broadcast(probe)
+        .join(codes, on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", score.alias("adc_e6"), "qv")
+    )
 
 
 def _pool_and_rerank(
@@ -271,40 +269,20 @@ def pq_serve_from_books(
     k: int = 5,
     pool: int = 20,
     dim: int = 64,
-    encoded: DataFrame | None = None,
 ) -> DataFrame:
     """The SERVE half of the flat-PQ cascade against already-trained
     codebooks (the build/serve split the IVF index draws — a corpus
-    lifetime amortizes one training over many query batches): encode (or
-    take ``encoded`` (vec_id, m, code) rows — the persisted-index shape),
+    lifetime amortizes one training over many query batches): encode,
     ADC-scan via the broadcast lookup table, pool-cut, cosine-rerank."""
-    n_codes = len(books[0])
-    codes = (
-        encoded
-        if encoded is not None
-        else pq_code_rows(corpus, books, id_col=id_col, vec_col=vec_col, dim=dim)
-    ).select(
-        F.col("vec_id").alias("neighbor_id"),
-        (F.col("m") * n_codes + F.col("code")).alias("pos"),
-    )
-    lut = queries.select(
+    codes = pq_codes(
+        corpus, books, id_col=id_col, vec_col=vec_col, dim=dim
+    ).withColumnRenamed("vec_id", "neighbor_id")
+    probe = queries.select(
         F.col(id_col).alias("query_id"),
-        F.posexplode(_adc_lut(vec_col, books, dim)).alias("pos", "contrib_e6"),
+        F.col(vec_col).alias("qv"),
+        _adc_lut(vec_col, books, dim).alias("lut"),
     )
-    adc = (
-        codes.join(F.broadcast(lut), "pos")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("contrib_e6").alias("adc_e6"))
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-                )
-            ),
-            "query_id",
-        )
-    )
+    adc = _adc_scan(probe, codes, books)
     return _pool_and_rerank(
         adc, corpus,
         id_col=id_col, vec_col=vec_col, k=k, pool=pool, dim=dim,
@@ -330,11 +308,12 @@ def pq_adc_rerank_topk(
     candidates per query; stage 2 reranks only that shortlist with
     full-precision cosine, byte-identical to brute_force_topk's scorer.
 
-    Plan: codes explode map-side → broadcast-LUT equi-join on the table
-    position m·k + code → groupBy (query, neighbor) whose map-side
-    partial collapses the m-way blow-up before the one shuffle; pool and
-    rank windows partition by query_id; float vectors join for
-    |queries|·pool rows only."""
+    Plan: one map-only Arrow pass encodes the corpus → the broadcast
+    query frame (vector + lookup table) pairs with every code row, the
+    brute-force broadcast-NLJ shape (``queries`` must be small), and the
+    score is an inline sum (``_adc_scan``), so nothing shuffles before
+    the pool window; pool and rank windows partition by query_id; float
+    vectors join for |queries|·pool rows only."""
     proj = persist_tracked(corpus.select(id_col, vec_col))
     books = pq_codebooks(
         proj,
@@ -408,14 +387,7 @@ def ivfpq_adc_rerank_topk(
     lists = pq_codes(
         proj, books, centroids=coarse, id_col=id_col, vec_col=vec_col, dim=dim
     ).withColumnRenamed("vec_id", "neighbor_id")
-    adc = (
-        F.broadcast(probes)
-        .join(lists, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id", _adc_score(m, n_codes).alias("adc_e6"), "qv"
-        )
-    )
+    adc = _adc_scan(probes, lists, books, "cluster")
     return _pool_and_rerank(
         adc, corpus,
         id_col=id_col, vec_col=vec_col, k=k, pool=pool, dim=dim,

@@ -420,11 +420,12 @@ def _peel(
     Survivors only shrink: a round's survivors are ``src`` nodes of the
     previous round's edges, which are all previous survivors. The first
     round (``bound`` None) therefore materializes its survivor list and
-    observes the count on that job (``materialize_counted``), and every
-    later round reuses that count as an upper bound for its broadcast
-    decision instead of measuring its own list. A later round's list
-    stays lazy: the broadcast job runs the degree aggregate's final
-    stage itself, with no materialize job in front of it.
+    observes the count on that job (``materialize_counted``); a later
+    round whose bound already fits the broadcast threshold leaves its
+    list lazy, and the broadcast job runs the degree aggregate's final
+    stage itself, with no materialize job in front of it. A bound too
+    big to broadcast is measured again, as in the first round, so a
+    list that has shrunk under the threshold is still broadcast.
 
     The broadcast survivor list makes both semi joins map-side over the
     edge blocks, one broadcast shared through ``_semi_both_ends``
@@ -437,9 +438,13 @@ def _peel(
         .filter(F.col("deg") >= k)
         .select("src")
     )
-    if bound is None:
+    keep_b = None
+    if bound is not None:
+        keep_b = broadcast_if_small(keep, bound, row_bytes=8)
+    if keep_b is None or keep_b is keep:
         keep, bound = materialize_counted(keep)
-    return _semi_both_ends(e, broadcast_if_small(keep, bound, row_bytes=8)), bound
+        keep_b = broadcast_if_small(keep, bound, row_bytes=8)
+    return _semi_both_ends(e, keep_b), bound
 
 
 def kcore_bounded(
@@ -478,7 +483,8 @@ def kcore_bounded(
     for _ in range(rounds):
         # Jobs per round: the first pays 4 (degree aggregate's shuffle
         # map, survivor materialize, broadcast, edge materialize), later
-        # ones 3 (no survivor materialize, see _peel). The last round's
+        # ones 3 while the survivor bound fits the broadcast threshold
+        # (no survivor materialize, see _peel). The last round's
         # edges are materialized too: left lazy, they would save a job
         # but put that round's aggregate and broadcast into the
         # returned plan, which then holds more than the final degree
@@ -530,7 +536,8 @@ def kcore_exact(
         rounds += 1
         # The same round as kcore_bounded's; the convergence count is
         # observed on the edge materialize, so a round costs 4 jobs the
-        # first time and 3 after.
+        # first time and 3 after while the bound fits the broadcast
+        # threshold.
         new_e, bound = _peel(e, k, bound)
         new_e, new_count = materialize_counted(new_e)
         # Monotone shrink: the new set is a filter of the old, so an

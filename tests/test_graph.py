@@ -478,6 +478,30 @@ def test_kcore_exact_job_ceiling(spark):
     assert jobs.n <= 3 * rounds + 1 + 2, (rounds, jobs.n)
 
 
+
+def test_kcore_peel_measures_a_bound_too_big_to_broadcast(spark):
+    """A later peeling round whose survivor bound is over the broadcast
+    threshold measures its own survivor list, as the first round does,
+    and broadcasts it once that count fits: a list that has shrunk under
+    the threshold is not sort-merged."""
+    from financial_data_engineering_spark.operators.graph import _peel
+    from financial_data_engineering_spark.partitioning import materialize
+
+    e = materialize(_kcore_test_graph(spark))
+    deg = {}
+    for r in e.collect():
+        deg[r["src"]] = deg.get(r["src"], 0) + 1
+    survivors = sum(1 for d in deg.values() if d >= 6)
+    thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    out, bound = _peel(e, 6, thr // 8 + 1)
+    assert bound == survivors
+    assert "ResolvedHint" in out._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(tuple, out.collect())) == sorted(
+        (r["src"], r["dst"])
+        for r in e.collect()
+        if deg[r["src"]] >= 6 and deg[r["dst"]] >= 6
+    )
+
 def test_kcore_query_docstring_constants_in_sync():
     """queries/graph.py inlines KCORE_ROUNDS/KCORE_K as literals in the
     query docstring (a plain string cannot interpolate them); this pin

@@ -716,14 +716,15 @@ def test_ivf_pairs_unique_before_rank_window(spark, tmp_path):
         assert len(pairs) == len(set(pairs))
 
 
-def test_ivf_serving_job_ceilings(spark):
-    """Noop writes of the two IVF queries the benchmark runs submit at
-    most these many Spark jobs at sf0.001. ann_ivf_from_index: three
-    training collects, the lists write (its repartition's shuffle map and
-    the write), the probe broadcast, the rank window's shuffle map and
-    the presentation sort's two. ann_ivfpq_rerank: three training
-    collects, ONE query-side broadcast (probes, vector and ADC lookup
-    table together), the pool window's shuffle map and the rerank, rank
+def test_ann_serving_job_ceilings(spark):
+    """Noop writes of the ANN queries whose serving plans broadcast one
+    query-side frame submit at most these many Spark jobs at sf0.001.
+    ann_ivf_from_index: three training collects, the lists write (its
+    repartition's shuffle map and the write), the probe broadcast, the
+    rank window's shuffle map and the presentation sort's two.
+    ann_ivfpq_rerank and ann_pq_rerank: three training collects, ONE
+    query-side broadcast (vector and ADC lookup table, with the probed
+    lists in IVF-PQ), the pool window's shuffle map and the rerank, rank
     and sort stages. A reintroduced pair dedupe, a second query-side
     broadcast or a separate code table breaks the ceiling."""
     from financial_data_engineering_spark import queries as q
@@ -732,7 +733,11 @@ def test_ivf_serving_job_ceilings(spark):
     )
     from tests.conftest import SF_SMALL, count_jobs
 
-    for name, ceiling in (("ann_ivf_from_index", 10), ("ann_ivfpq_rerank", 9)):
+    for name, ceiling in (
+        ("ann_ivf_from_index", 10),
+        ("ann_ivfpq_rerank", 9),
+        ("ann_pq_rerank", 9),
+    ):
         release_intermediates()
         with count_jobs(spark) as jobs:
             q.all_queries()[name](spark, SF_SMALL).write.format("noop").mode(
@@ -812,13 +817,12 @@ def test_pq_codes_cover_corpus_in_range(spark):
 
     emb = _pq_corpus(spark)
     books = pq.pq_codebooks(emb, m=4, k=4, n_iters=1, dim=8)
-    rows = pq.pq_code_rows(emb, books, dim=8).collect()
-    # one code per (vector, subspace); every code addresses its book
-    assert len(rows) == 40 * 4
-    assert {(r["vec_id"], r["m"]) for r in rows} == {
-        (i, mi) for i in range(40) for mi in range(4)
-    }
-    assert all(0 <= r["code"] < 4 for r in rows)
+    rows = pq.pq_codes(emb, books, dim=8).collect()
+    # one row per vector holding one code per subspace; every code
+    # addresses its book
+    assert sorted(r["vec_id"] for r in rows) == list(range(40))
+    assert all(len(r["codes"]) == 4 for r in rows)
+    assert all(0 <= c < 4 for r in rows for c in r["codes"])
 
 
 def test_pq_rerank_cosines_match_brute_force_scorer(spark):
@@ -886,6 +890,25 @@ def test_ivfpq_rerank_scores_match_brute_force(spark):
         ranks = sorted(r["rank"] for r in out if r["query_id"] == qid)
         assert ranks == list(range(1, len(ranks) + 1))
 
+
+
+def test_ivfpq_corpus_smaller_than_code_count_matches_flat_pq(spark):
+    """A corpus of fewer vectors than ``n_codes`` trains books of
+    |corpus| centroids, and the lookup table's stride is that size, not
+    the requested one. With every inverted list probed, IVF-PQ scores
+    the same candidates as flat PQ from bit-identical codebooks (the
+    joint training), so the two cascades return the same rows."""
+    from financial_data_engineering_spark.llm import pq
+
+    emb = _pq_corpus(spark, n=10)
+    queries = emb.filter(F.col("vec_id") < 3)
+    knobs = dict(k=3, pool=4, m=2, n_codes=16, n_iters=1, dim=8)
+    flat = pq.pq_adc_rerank_topk(queries, emb, **knobs).collect()
+    ivf = pq.ivfpq_adc_rerank_topk(
+        queries, emb, n_centroids=2, nprobe=2, coarse_iters=1, **knobs
+    ).collect()
+    assert len(flat) == 9
+    assert sorted(map(tuple, ivf)) == sorted(map(tuple, flat))
 
 def test_bigram_lm_quality_tolerates_empty_documents(spark, tmp_path):
     """Docs whose text tokenizes to zero or one token must contribute

@@ -308,11 +308,11 @@ SHUFFLE_BUDGET = {
     # corpus code build (one exchange) + query code build + pool window
     # + rerank equi-joins + presentation sort
     "ann_quantized_rerank": 4,
-    # ADC agg collapsing the broadcast-LUT join's m-way fan-out + pool
-    # window + presentation sort; the code build is a map-only Arrow
-    # pass, the LUT an expression on the query row, and the rank window
-    # reuses the pool window's query_id partitioning
-    "ann_pq_rerank": 3,
+    # pool window + presentation sort: the code build is a map-only
+    # Arrow pass, the broadcast query frame (vector + LUT expression)
+    # pairs with every code row and the ADC score is an inline sum, and
+    # the rank window reuses the pool window's query_id partitioning
+    "ann_pq_rerank": 2,
     # same cascade with the candidate set cut to the probed inverted
     # lists: one broadcast query-side frame (probes + LUT) joins the
     # encoded lists map-side and the ADC score is an inline sum, so
@@ -433,6 +433,10 @@ NLJ_WHITELIST = {
     # stage 1 of the quantized cascade: broadcast of <= _N_QUERIES code
     # rows against the corpus code scan, same contract as the kNN scorer
     "ann_quantized_rerank": 1,
+    # stage 1 of the flat-PQ cascade: broadcast of the <= _N_QUERIES
+    # query rows (vector + ADC lookup table) against the corpus code
+    # scan, same contract as the kNN scorer
+    "ann_pq_rerank": 1,
     # the 1-row max-custkey aggregate attaches to the changelog as an
     # IdentityBroadcastMode NLJ (Catalyst folds the constant-key
     # equality away) — broadcast of exactly one row, never data x data
