@@ -236,14 +236,6 @@ def sql_stopword_hits(col: str, lang: str = "en") -> str:
     )
 
 
-def sql_punct_ratio(col: str) -> str:
-    return (
-        f"CASE WHEN length({col}) = 0 THEN 0.0 "
-        f"ELSE CAST(length({col}) - length(regexp_replace({col}, '{PUNCT_CLASS}', '', 'g')) AS DOUBLE)"
-        f" / length({col}) END"
-    )
-
-
 def sql_lang_id(col: str) -> str:
     s = {lang: sql_stopword_hits(col, lang) for lang in STOPWORDS}
     return (
@@ -251,17 +243,6 @@ def sql_lang_id(col: str) -> str:
         f"AND ({s['en']}) >= ({s['es']}) THEN 'en' "
         f"WHEN ({s['de']}) >= ({s['fr']}) AND ({s['de']}) >= ({s['es']}) THEN 'de' "
         f"WHEN ({s['fr']}) >= ({s['es']}) THEN 'fr' ELSE 'es' END"
-    )
-
-
-def sql_quality_score(col: str) -> str:
-    toks = f"CAST({sql_token_count(col)} AS DOUBLE)"
-    stop = f"CAST({sql_stopword_hits(col, 'en')} AS DOUBLE)"
-    stop_ratio = f"CASE WHEN {toks} > 0 THEN {stop} / {toks} ELSE 0.0 END"
-    return (
-        f"round(0.35 * least(1.0, {toks} / 20.0) "
-        f"+ 0.35 * (1.0 - least(1.0, ({sql_punct_ratio(col)}) * 5.0)) "
-        f"+ 0.30 * least(1.0, ({stop_ratio}) * 4.0), 4)"
     )
 
 

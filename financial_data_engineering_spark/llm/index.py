@@ -13,9 +13,9 @@ and queries arrive continuously. This module splits the lifecycle:
   and reads ONLY the probed cluster partitions: the broadcast probes
   drive dynamic partition pruning of ``lists/`` on ``cluster``, so
   serving cost scales with nprobe/n_centroids of the index, not its
-  full size. The scoring path and tie-breaks are byte-identical to
-  ``ivf_topk``'s (same ``_pair_cos``, same rank window), which the
-  round-trip test pins. Each (query, neighbor) pair is scored once —
+  full size. Scoring and tie-breaks are ``ivf_topk``'s own
+  (``_cosine_topk``, the shared retrieval tail), which the round-trip
+  test pins. Each (query, neighbor) pair is scored once —
   a vector sits in one list and a query's probes are distinct lists —
   so the rank window is the serving plan's only shuffle.
 
@@ -34,12 +34,11 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from financial_data_engineering_spark.functions.vectors import l2_norm_fixed
 from financial_data_engineering_spark.llm.caching import persist_tracked
 from financial_data_engineering_spark.llm.similarity import (
-    _pair_cos,
+    _cosine_topk,
     ivf_assignments,
     kmeans_centroids,
 )
@@ -154,17 +153,4 @@ def ivf_topk_from_index(
     # No pair dedupe: a corpus vector sits in exactly one list and a
     # query's nprobe probes are distinct lists, so with unique ids each
     # (query_id, neighbor_id) pair is scored once.
-    scored = (
-        F.broadcast(probes)
-        .join(lists, ["cluster"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
-    )
+    return _cosine_topk(probes, lists, k=k, dim=dim, on="cluster")

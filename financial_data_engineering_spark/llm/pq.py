@@ -54,7 +54,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from financial_data_engineering_spark.functions.vectors import l2_norm_fixed
 from financial_data_engineering_spark.llm.caching import persist_tracked
@@ -63,10 +62,11 @@ from financial_data_engineering_spark.llm.similarity import (
     _assign_codes,
     _nearest_cosine,
     _pair_cos,
+    _top_by,
+    arrow_matrix,
     coarse_quantizer,
     ivf_assignments,
     lloyd_train,
-    vec_matrix,
 )
 
 #: Subspace count / per-subspace codebook size / Lloyd iterations for the
@@ -124,37 +124,37 @@ def pq_codes(
     import numpy as np
 
     bmats = [np.asarray(b, dtype="float64") for b in books]
-    sub = dim // len(bmats)
-    cmat = None if centroids is None else vec_matrix(centroids)
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    fields = [T.StructField("vec_id", id_field.dataType)]
+    m = len(bmats)
+    sub = dim // m
+    cmat = None if centroids is None else np.asarray(centroids, dtype="float64")
+    fields = [T.StructField("vec_id", corpus.schema[id_col].dataType)]
     if cmat is not None:
         fields.append(T.StructField("cluster", T.LongType()))
     fields.append(T.StructField("codes", T.ArrayType(T.LongType())))
+    schema = T.StructType(fields)
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            mat = vec_matrix(pdf[vec_col])
-            out = {"vec_id": pdf[id_col].to_numpy()}
+            mat = arrow_matrix(batch.column(1), dim)
+            cols = [batch.column(0)]
             if cmat is not None:
-                out["cluster"] = _nearest_cosine(np, mat, cmat)
-            out["codes"] = list(
-                np.column_stack(
-                    [
-                        _assign_codes(np, mat[:, mi * sub : (mi + 1) * sub], cmat_)
-                        for mi, cmat_ in enumerate(bmats)
-                    ]
-                ).astype("int64")
-            )
-            yield pd.DataFrame(out)
+                cols.append(pa.array(_nearest_cosine(np, mat, cmat)))
+            codes = np.column_stack(
+                [
+                    _assign_codes(np, mat[:, mi * sub : (mi + 1) * sub], cmat_)
+                    for mi, cmat_ in enumerate(bmats)
+                ]
+            ).astype("int64")
+            offsets = pa.array(np.arange(0, n * m + 1, m, dtype="int32"))
+            cols.append(pa.ListArray.from_arrays(offsets, pa.array(codes.ravel())))
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        gen, schema=T.StructType(fields)
-    )
+    return corpus.select(id_col, vec_col).mapInArrow(gen, schema)
 
 
 def _adc_lut(vec_col: str, books, dim: int) -> Column:
@@ -232,16 +232,9 @@ def _pool_and_rerank(
     brute_force_topk's scorer), keep ``k``. Corpus float vectors load for
     |queries|·pool rows only; the query vector rides along the candidate
     rows (the pool window's map side keeps ``pool`` rows per query)."""
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_e6"), F.asc("neighbor_id")
-    )
-    short = (
-        adc.withColumn("prank", F.row_number().over(wp))
-        .filter(F.col("prank") <= pool)
-        .select(
-            "query_id", "neighbor_id", "adc_e6", "qv",
-            l2_norm_fixed("qv", dim).alias("qn"),
-        )
+    short = _top_by(adc, "adc_e6", pool, "prank").select(
+        "query_id", "neighbor_id", "adc_e6", "qv",
+        l2_norm_fixed("qv", dim).alias("qn"),
     )
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -251,11 +244,8 @@ def _pool_and_rerank(
     rer = short.join(cv, "neighbor_id").select(
         "query_id", "neighbor_id", "adc_e6", _pair_cos(dim).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos", "adc_e6")
+    return _top_by(rer, "cos", k).select(
+        "query_id", "rank", "neighbor_id", "cos", "adc_e6"
     )
 
 

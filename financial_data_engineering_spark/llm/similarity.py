@@ -1,16 +1,30 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths:
+Every retriever here ends in the same tail (:func:`_cosine_topk`):
+broadcast the small query-side probe frame, join it to the candidate
+frame on a bucket key (or with no key), drop self-matches, score each
+pair with the map-side-norm cosine and keep ``k`` per query through one
+rank window (:func:`_top_by`). The paths differ only in how candidates
+are chosen:
 
-- **Brute-force top-k**: broadcast the (small) query set against the corpus,
-  score every pair with a codegen'd cosine expression, keep k per query via
-  a window. Exact; the baseline everything else is validated against. Scales
-  linearly in |corpus| × |queries| — fine when queries are few, wrong when
-  both sides are the corpus.
-- **Random-hyperplane LSH ANN**: sign-of-projection bit signatures bucket
-  the corpus; each query only scores candidates sharing its bucket. The
-  100 TB path: the expensive join shrinks from |corpus| to the bucket size,
-  at the cost of recall (tunable via signature bits / multi-probe).
+- **Brute-force top-k**: no key; every corpus vector is a candidate.
+  Exact; the baseline everything else is validated against. Linear in
+  |corpus| × |queries| — fine when queries are few.
+- **Random-hyperplane LSH** (:func:`lsh_topk`): sign-of-projection bit
+  signatures bucket the corpus; each query scores only the buckets it
+  probes (its own, plus ``n_probes - 1`` nearest complementary ones).
+- **IVF** (:func:`ivf_topk`, and llm/index.py for a persisted index):
+  deterministic seeded Lloyd k-means inverted lists; each query scores
+  its ``nprobe`` nearest lists.
+- **Quantized cascade** (:func:`quantized_rerank_topk`, and llm/pq.py
+  for product quantization): rank compressed codes first, rerank a
+  per-query shortlist in full precision.
+- **All-pairs GEMM** (:func:`pairwise_cosine_gemm`): exact pairwise
+  cosine above a threshold in block-pair tiles.
+
+Numpy kernels see vectors only as Arrow batches (``mapInArrow`` /
+``applyInArrow``) and turn a list column into a matrix through one
+helper, :func:`arrow_matrix`; no vector column crosses into pandas.
 
 The hyperplanes are pseudo-random but fully deterministic — component j of
 plane p is derived from md5(p|j) — so results are reproducible and a SQL
@@ -29,6 +43,7 @@ from pyspark.sql.window import Window
 from pyspark.sql import types as T
 
 from financial_data_engineering_spark.llm.caching import persist_tracked
+from financial_data_engineering_spark.llm.quantize import code_arrays
 
 from financial_data_engineering_spark.functions.vectors import (
     dot_product_fixed,
@@ -37,13 +52,19 @@ from financial_data_engineering_spark.functions.vectors import (
 )
 
 
-def vec_matrix(vecs):
-    """(n × dim) float64 matrix from n vectors (a pandas column of
-    arrays, or any iterable of sequences) — the one conversion every
-    numpy kernel over an embedding column uses."""
+def arrow_matrix(col, dim: int = -1):
+    """(n × dim) float64 matrix of an Arrow list column of n vectors — the
+    one conversion every numpy kernel over an embedding column uses. A
+    chunked column (a grouped kernel's table) is combined first;
+    ``flatten()`` honours a sliced array's offset, which ``.values`` does
+    not. ``dim=-1`` takes the width from the column."""
     import numpy as np
+    import pyarrow as pa
 
-    return np.stack([np.asarray(v, dtype="float64") for v in vecs])
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return np.asarray(flat, dtype="float64").reshape(len(col), dim)
 
 
 def hyperplane(plane: int, dim: int) -> list[float]:
@@ -64,21 +85,6 @@ def sql_hyperplane_component(plane: str, j: str) -> str:
     )
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Bit-signature string: bit p = 1 iff dot(vec, plane_p) >= 0. The dot
-    products are unrolled into flat sums over element_at terms — plain
-    codegen arithmetic, no higher-order functions (those run interpreted
-    and explode when optimizer inlining multiplies them)."""
-    bits = []
-    for plane in planes:
-        dot = None
-        for j, w in enumerate(plane):
-            term = F.element_at(vec, j + 1).cast("double") * F.lit(w)
-            dot = term if dot is None else dot + term
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _pair_cos(dim: int) -> Column:
     """Per-pair cosine given map-side precomputed norms qn/cn: only the
     dim-term dot product is evaluated per pair. Same left-to-right double
@@ -86,6 +92,38 @@ def _pair_cos(dim: int) -> Column:
     denom = F.col("qn") * F.col("cn")
     dot = dot_product_fixed("qv", "cv", dim)
     return F.round(F.when(denom > 0, dot / denom).otherwise(F.lit(0.0)), 4)
+
+
+def _top_by(df: DataFrame, score: str, k: int, rank: str = "rank") -> DataFrame:
+    """The rows of ``df`` whose ``rank`` within their query_id is ≤ ``k``,
+    ranked by ``score`` descending with ties → lowest neighbor_id — the
+    rank window every retriever and cascade stage ends with."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _cosine_topk(
+    probe: DataFrame,
+    candidates: DataFrame,
+    *,
+    k: int,
+    dim: int,
+    on: str | None = None,
+) -> DataFrame:
+    """(query_id, rank, neighbor_id, cos): the shared retrieval tail. The
+    ``probe`` frame (query_id, qv, qn, and ``on`` if given) is broadcast
+    — it must be small, the contract of every retriever here — and joined
+    to ``candidates`` (neighbor_id, cv, cn, and ``on``) on ``on``, or to
+    every candidate without it. Self-matches are dropped, each pair is
+    scored by :func:`_pair_cos`, and the only shuffle is the per-query
+    rank window."""
+    scored = (
+        F.broadcast(probe)
+        .join(candidates, on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
+    )
+    return _top_by(scored, "cos", k).select("query_id", "rank", "neighbor_id", "cos")
 
 
 def brute_force_topk(
@@ -97,11 +135,10 @@ def brute_force_topk(
     k: int = 5,
     dim: int = 64,
 ) -> DataFrame:
-    """Exact cosine top-k per query. ``queries`` is broadcast (it must be
-    small — that is the contract of this operator); the corpus side streams
-    through map-side scoring, and the only shuffle is the per-query window
-    for rank, partitioned on query_id so it parallelizes across queries.
-    Ties broken by neighbor id for determinism. Self-matches excluded."""
+    """Exact cosine top-k per query: the broadcast queries against every
+    corpus vector (a broadcast nested-loop join), ranked by
+    :func:`_cosine_topk`. Ties broken by neighbor id for determinism.
+    Self-matches excluded."""
     qa = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
@@ -112,65 +149,70 @@ def brute_force_topk(
         F.col(vec_col).alias("cv"),
         l2_norm_fixed(vec_col, dim).alias("cn"),
     )
-    scored = (
-        F.broadcast(qa)
-        .join(ca, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
-    )
+    return _cosine_topk(qa, ca, k=k, dim=dim)
 
 
-def _lsh_assign(
+def _lsh_probes(
     df: DataFrame,
     planes: list[list[float]],
+    n_probes: int,
     out_id: str,
     out_vec: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    id_col: str,
+    vec_col: str,
+    dim: int,
 ) -> DataFrame:
-    """(out_id, out_vec, sig) rows: sign-bit signature per vector via one
-    Arrow-batched numpy GEMM against the plane matrix — same kernel choice
-    as ivf_assignments and for the same reason (the unrolled expression
-    form pays ~10 s of codegen compilation per lineage)."""
-    pm = vec_matrix(planes)
+    """(out_id, out_vec, sig) with ``n_probes`` rows per vector, from one
+    Arrow-batched numpy GEMM against the plane matrix (the unrolled
+    expression form pays ~10 s of codegen compilation per lineage). Bit p
+    of a signature is 1 iff dot(v, plane_p) >= 0. Probe 0 is the vector's
+    own bucket; probe i (i ≥ 1) flips the single bit whose hyperplane
+    margin |dot(v, plane)| is i-th smallest — the bits most likely to have
+    landed on the wrong side of their plane, i.e. the nearest
+    complementary buckets. Margins are rounded to 9 decimals before
+    ordering (ties → lowest plane index), so probe order is deterministic
+    and an SQL oracle can replay it exactly."""
+    import numpy as np
 
-    id_field = next(f for f in df.schema.fields if f.name == id_col)
-    vec_field = next(f for f in df.schema.fields if f.name == vec_col)
+    pm = np.asarray(planes, dtype="float64")
+    n_planes = len(pm)
     schema = T.StructType(
         [
-            T.StructField(out_id, id_field.dataType),
-            T.StructField(out_vec, vec_field.dataType),
+            T.StructField(out_id, df.schema[id_col].dataType),
+            T.StructField(out_vec, df.schema[vec_col].dataType),
             T.StructField("sig", T.StringType()),
         ]
     )
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            mat = vec_matrix(pdf[vec_col])
-            bits = (mat @ pm.T) >= 0.0
-            sigs = ["".join("1" if b else "0" for b in row) for row in bits]
-            yield pd.DataFrame(
-                {
-                    out_id: pdf[id_col].to_numpy(),
-                    out_vec: pdf[vec_col],
-                    "sig": sigs,
-                }
+            dots = arrow_matrix(batch.column(1), dim) @ pm.T
+            bits = np.repeat((dots >= 0.0)[:, None, :], n_probes, axis=1)
+            if n_probes > 1:
+                margins = np.round(np.abs(dots), 9)
+                order = np.lexsort(
+                    (np.broadcast_to(np.arange(n_planes), margins.shape), margins),
+                    axis=1,
+                )
+                rows, probe = np.arange(n)[:, None], np.arange(1, n_probes)
+                flip = order[:, : n_probes - 1]
+                bits[rows, probe, flip] = ~bits[rows, probe, flip]
+            # one '0'/'1' byte per plane, read back as an n_planes-char string
+            chars = bits.reshape(n * n_probes, n_planes).astype("uint8") + ord("0")
+            sigs = chars.view(f"S{n_planes}").ravel().astype("U")
+            idx = np.repeat(np.arange(n), n_probes)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(idx), batch.column(1).take(idx), pa.array(sigs)],
+                names=schema.names,
             )
 
-    return df.select(id_col, vec_col).mapInPandas(gen, schema=schema)
+    return df.select(id_col, vec_col).mapInArrow(gen, schema)
 
 
 def lsh_topk(
@@ -181,136 +223,35 @@ def lsh_topk(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 8,
+    n_probes: int = 1,
     dim: int = 64,
 ) -> DataFrame:
     """Approximate cosine top-k: corpus and queries are bucketed by an
     ``n_planes``-bit random-hyperplane signature; scoring happens only
-    within a query's bucket (equi-join on the signature — a hash join on a
-    ~uniform key instead of a cross product). Candidates are then ranked
-    exactly as in brute force. Queries whose bucket holds fewer than k
-    candidates return fewer rows — the standard single-probe LSH tradeoff
-    (raise recall with fewer bits or multi-probe variants)."""
+    within the buckets a query probes (equi-join on the signature — a
+    hash join on a ~uniform key instead of a cross product), and
+    candidates are ranked exactly as in brute force.
+
+    With ``n_probes=1`` a query probes only its own bucket, and queries
+    whose bucket holds fewer than k candidates return fewer rows. Each
+    further probe adds the next-nearest complementary bucket (lowest
+    hyperplane margin bit flipped, :func:`_lsh_probes`), so thin buckets
+    can still fill k: recall is a superset of single-probe at
+    ~n_probes× the candidate cost, with no extra corpus-side work (the
+    corpus is still bucketed once). Each corpus vector lives in exactly
+    one bucket and probe signatures are distinct, so no candidate dedup
+    is needed."""
     planes = [hyperplane(p, dim) for p in range(n_planes)]
-    qa = _lsh_assign(
-        queries, planes, "query_id", "qv", id_col=id_col, vec_col=vec_col, dim=dim
-    ).withColumn("qn", l2_norm_fixed("qv", dim))
-    ca = _lsh_assign(
-        corpus, planes, "neighbor_id", "cv", id_col=id_col, vec_col=vec_col, dim=dim
-    ).withColumn("cn", l2_norm_fixed("cv", dim))
-    scored = (
-        F.broadcast(qa)
-        .join(ca, ["sig"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
-    )
-
-
-def _lsh_query_probes(
-    queries: DataFrame,
-    planes: list[list[float]],
-    n_probes: int,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, qv, sig) with one row per probe: probe 0 is the query's
-    own bucket; probe i (i ≥ 1) flips the single bit whose hyperplane
-    margin |dot(q, plane)| is i-th smallest — the bits most likely to have
-    landed on the wrong side of their plane, i.e. the nearest
-    complementary buckets. Margins are rounded to 9 decimals before
-    ordering (ties → lowest plane index), so probe order is deterministic
-    and an SQL oracle can replay it exactly."""
-    import numpy as np
-
-    pm = vec_matrix(planes)
-    n_planes = pm.shape[0]
     n_probes = max(1, min(n_probes, n_planes + 1))
-
-    id_field = next(f for f in queries.schema.fields if f.name == id_col)
-    vec_field = next(f for f in queries.schema.fields if f.name == vec_col)
-    schema = T.StructType(
-        [
-            T.StructField("query_id", id_field.dataType),
-            T.StructField("qv", vec_field.dataType),
-            T.StructField("sig", T.StringType()),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = vec_matrix(pdf[vec_col])
-            dots = mat @ pm.T
-            bits = dots >= 0.0
-            margins = np.round(np.abs(dots), 9)
-            order = np.lexsort(
-                (np.broadcast_to(np.arange(n_planes), margins.shape), margins),
-                axis=1,
-            )
-            ids, vecs, sigs = [], [], []
-            for i in range(len(pdf)):
-                base = bits[i]
-                ids.append(pdf[id_col].iloc[i])
-                vecs.append(pdf[vec_col].iloc[i])
-                sigs.append("".join("1" if b else "0" for b in base))
-                for probe in range(1, n_probes):
-                    flipped = base.copy()
-                    j = order[i, probe - 1]
-                    flipped[j] = not flipped[j]
-                    ids.append(pdf[id_col].iloc[i])
-                    vecs.append(pdf[vec_col].iloc[i])
-                    sigs.append("".join("1" if b else "0" for b in flipped))
-            yield pd.DataFrame({"query_id": ids, "qv": vecs, "sig": sigs})
-
-    return queries.select(id_col, vec_col).mapInPandas(gen, schema=schema)
-
-
-def lsh_topk_multiprobe(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_planes: int = 8,
-    n_probes: int = 2,
-    dim: int = 64,
-) -> DataFrame:
-    """Multi-probe LSH top-k: like :func:`lsh_topk`, but each query also
-    probes its ``n_probes - 1`` nearest complementary buckets (lowest
-    hyperplane margin bits flipped), so thin buckets can still fill k
-    candidates — recall is a strict superset of single-probe at ~n_probes×
-    the candidate cost, with no extra corpus-side work (the corpus is
-    still bucketed once). Each corpus vector lives in exactly one bucket
-    and probe signatures are distinct, so no candidate dedup is needed."""
-    planes = [hyperplane(p, dim) for p in range(n_planes)]
-    qa = _lsh_query_probes(
-        queries, planes, n_probes, id_col=id_col, vec_col=vec_col
+    qa = _lsh_probes(
+        queries, planes, n_probes, "query_id", "qv",
+        id_col=id_col, vec_col=vec_col, dim=dim,
     ).withColumn("qn", l2_norm_fixed("qv", dim))
-    ca = _lsh_assign(
-        corpus, planes, "neighbor_id", "cv", id_col=id_col, vec_col=vec_col, dim=dim
+    ca = _lsh_probes(
+        corpus, planes, 1, "neighbor_id", "cv",
+        id_col=id_col, vec_col=vec_col, dim=dim,
     ).withColumn("cn", l2_norm_fixed("cv", dim))
-    scored = (
-        F.broadcast(qa)
-        .join(ca, ["sig"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
-    )
+    return _cosine_topk(qa, ca, k=k, dim=dim, on="sig")
 
 
 def pairwise_cosine_gemm(
@@ -336,7 +277,7 @@ def pairwise_cosine_gemm(
     groups it participates in (shuffle volume B×|corpus| — the unavoidable
     cost of EXACT all-pairs, stated rather than hidden), and each
     (block_a ≤ block_b) group computes its similarity tile with one BLAS
-    GEMM inside ``applyInPandas``. Group memory is bounded by two blocks
+    GEMM inside ``applyInArrow``. Group memory is bounded by two blocks
     regardless of corpus size; parallelism is B(B+1)/2 independent tiles.
     For approximate dedup at the 100 TB tier, run this same kernel per
     LSH/IVF bucket instead (see lsh_topk / ivf_topk) so B stays small.
@@ -378,20 +319,19 @@ def pairwise_cosine_gemm(
         .select("id", "v", "blk", F.col("bp.ba").alias("ba"), F.col("bp.bb").alias("bb"))
     )
 
-    def tile(key, pdf):
-        import pandas as pd
+    def tile(key, table):
+        import pyarrow as pa
 
-        ba, bb = int(key[0]), int(key[1])
-        left = pdf[pdf["blk"] == ba]
-        right = left if ba == bb else pdf[pdf["blk"] == bb]
-        if not len(left) or not len(right):
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cos": "float64"}
-            )
-        l_ids = left["id"].to_numpy()
-        r_ids = right["id"].to_numpy()
-        l_mat = vec_matrix(left["v"])
-        r_mat = l_mat if ba == bb else vec_matrix(right["v"])
+        ba, bb = key[0].as_py(), key[1].as_py()
+        blk = table["blk"].to_numpy()
+        ids = table["id"].to_numpy().astype("int64", copy=False)
+        mat = arrow_matrix(table["v"])
+        # an empty side (block bb holds no vector) yields an empty tile
+        left = blk == ba
+        right = left if ba == bb else blk == bb
+        l_ids, r_ids = ids[left], ids[right]
+        l_mat = mat[left]
+        r_mat = l_mat if ba == bb else mat[right]
         l_norms = np.linalg.norm(l_mat, axis=1)
         r_norms = l_norms if ba == bb else np.linalg.norm(r_mat, axis=1)
         l_safe = np.where(l_norms == 0.0, 1.0, l_norms)
@@ -408,7 +348,7 @@ def pairwise_cosine_gemm(
             keep = cos >= threshold
         li, ri = np.nonzero(keep)
         ia, ib = l_ids[li], r_ids[ri]
-        return pd.DataFrame(
+        return pa.table(
             {
                 "vec_a": np.minimum(ia, ib),
                 "vec_b": np.maximum(ia, ib),
@@ -416,7 +356,7 @@ def pairwise_cosine_gemm(
             }
         )
 
-    return tagged.groupBy("ba", "bb").applyInPandas(
+    return tagged.groupBy("ba", "bb").applyInArrow(
         tile, schema="vec_a long, vec_b long, cos double"
     )
 
@@ -447,42 +387,38 @@ def ivf_assignments(
     import numpy as np
 
     cids = np.array([cid for cid, _ in centroids], dtype="int64")
-    cmat = vec_matrix(v for _, v in centroids)
-
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    vec_field = next(f for f in corpus.schema.fields if f.name == vec_col)
+    cmat = np.asarray([v for _, v in centroids], dtype="float64")
     schema = T.StructType(
         [
-            T.StructField("id", id_field.dataType),
-            T.StructField("v", vec_field.dataType),
+            T.StructField("id", corpus.schema[id_col].dataType),
+            T.StructField("v", corpus.schema[vec_col].dataType),
             T.StructField("probe_rank", T.IntegerType()),
             T.StructField("cluster", T.LongType()),
         ]
     )
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            cos = _assign_cosine(np, vec_matrix(pdf[vec_col]), cmat)
+            cos = _assign_cosine(np, arrow_matrix(batch.column(1), dim), cmat)
             # top-nprobe per row: cos desc, centroid id asc on ties
             order = np.lexsort((np.broadcast_to(cids, cos.shape), -cos), axis=1)
-            take = order[:, :nprobe]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].to_numpy().repeat(nprobe),
-                    "v": [
-                        pdf[vec_col].iloc[i] for i in range(n) for _ in range(nprobe)
-                    ],
-                    "probe_rank": np.tile(np.arange(nprobe, dtype="int32"), n),
-                    "cluster": cids[take].ravel(),
-                }
+            idx = np.repeat(np.arange(n), nprobe)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(idx),
+                    batch.column(1).take(idx),
+                    pa.array(np.tile(np.arange(nprobe, dtype="int32"), n)),
+                    pa.array(cids[order[:, :nprobe]].ravel()),
+                ],
+                names=schema.names,
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema=schema)
+    return corpus.select(id_col, vec_col).mapInArrow(gen, schema)
 
 
 def _assign_cosine(np, mat, cmat):
@@ -557,12 +493,12 @@ def _lloyd_partials(corpus: DataFrame, live, id_col: str, vec_col: str) -> DataF
     )
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            mat = vec_matrix(pdf[vec_col])
+            mat = arrow_matrix(batch.column(1))
             s = mat * KMEANS_SCALE
             # round-half-away-from-zero, matching Spark/DuckDB round(x)
             scaled = (np.floor(np.abs(s) + 0.5) * np.sign(s)).astype("int64")
@@ -575,9 +511,9 @@ def _lloyd_partials(corpus: DataFrame, live, id_col: str, vec_col: str) -> DataF
                     out["code"].append(int(c))
                     out["cnt"].append(int(mask.sum()))
                     out["sums"].append(scaled[mask, lo:hi].sum(axis=0).tolist())
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pydict(out)
 
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema=schema)
+    return corpus.select(id_col, vec_col).mapInArrow(gen, schema)
 
 
 def lloyd_train(
@@ -607,6 +543,8 @@ def lloyd_train(
     Callers doing several passes (training + final assignment) should pass
     a persisted projection of (id_col, vec_col) so each iteration scans
     the cache, not the source (see ivf_topk)."""
+    import numpy as np
+
     rows = (
         corpus.select(id_col, vec_col)
         .orderBy(id_col)
@@ -619,7 +557,7 @@ def lloyd_train(
     cents = [[v[q.lo : q.hi] for v in init[: q.k]] for q in quantizers]
     for it in range(max(q.iters for q in quantizers)):
         live = [
-            (qi, q.lo, q.hi, q.assign, vec_matrix(cents[qi]))
+            (qi, q.lo, q.hi, q.assign, np.asarray(cents[qi], dtype="float64"))
             for qi, q in enumerate(quantizers)
             if it < q.iters
         ]
@@ -717,18 +655,7 @@ def ivf_topk(
     # No pair dedupe: a corpus vector sits in exactly one list and a
     # query's nprobe probes are distinct lists, so with unique ids each
     # (query_id, neighbor_id) pair is scored once.
-    scored = (
-        F.broadcast(query_probes)
-        .join(corpus_lists, ["cluster"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pair_cos(dim).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos")
-    )
+    return _cosine_topk(query_probes, corpus_lists, k=k, dim=dim, on="cluster")
 
 
 def quantized_rerank_topk(
@@ -769,9 +696,9 @@ def quantized_rerank_topk(
     Stage 1 is the brute-force broadcast-NLJ shape (query side tiny by
     contract); stage 2's joins are equi-joins against the shortlist.
     Ranking ties break by neighbor id at both stages."""
-    ccodes = code_arrays_cached(corpus, id_col=id_col, vec_col=vec_col)
+    ccodes = code_arrays(corpus, id_col=id_col, vec_col=vec_col)
     qcodes = (
-        code_arrays_cached(queries, id_col=id_col, vec_col=vec_col)
+        code_arrays(queries, id_col=id_col, vec_col=vec_col)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("codes").alias("qc"),
@@ -801,13 +728,8 @@ def quantized_rerank_topk(
         )
         .select("query_id", "neighbor_id", dq.alias("dq_dot"))
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("dq_dot"), F.asc("neighbor_id")
-    )
-    short = (
-        sab.withColumn("prank", F.row_number().over(wp))
-        .filter(F.col("prank") <= pool)
-        .select("query_id", "neighbor_id", "dq_dot")
+    short = _top_by(sab, "dq_dot", pool, "prank").select(
+        "query_id", "neighbor_id", "dq_dot"
     )
     qv = queries.select(
         F.col(id_col).alias("query_id"),
@@ -829,20 +751,6 @@ def quantized_rerank_topk(
             _pair_cos(dim).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
+    return _top_by(rer, "cos", k).select(
+        "query_id", "rank", "neighbor_id", "cos", "dq_dot"
     )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos", "dq_dot")
-    )
-
-
-def code_arrays_cached(df, **kw):
-    """Thin import indirection so the cascade reads next to its scorer;
-    no caching beyond what the plan shares (the code build is one
-    exchange either way)."""
-    from financial_data_engineering_spark.llm.quantize import code_arrays
-
-    return code_arrays(df, **kw)

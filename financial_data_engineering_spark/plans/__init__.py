@@ -8,8 +8,8 @@ from financial_data_engineering_spark.plans.inspect import (
     has_whole_stage_codegen,
     low_card_partition_violations,
     nested_loop_join_count,
-    pandas_kernel_count,
     plan_text,
+    python_kernel_count,
     row_udf_count,
     reads_only,
     scans,
@@ -25,8 +25,8 @@ __all__ = [
     "has_whole_stage_codegen",
     "low_card_partition_violations",
     "nested_loop_join_count",
-    "pandas_kernel_count",
     "plan_text",
+    "python_kernel_count",
     "row_udf_count",
     "reads_only",
     "scans",

@@ -166,17 +166,22 @@ def row_udf_count(df: DataFrame) -> int:
     """Number of row-at-a-time Python UDF nodes (``BatchEvalPython``) —
     the per-row Python round-trip that is 10-100× slower than Arrow
     batches. Must be zero everywhere: Python kernels in this engine are
-    Arrow-batched (``ArrowEvalPython`` / mapInPandas / applyInPandas)."""
+    Arrow-batched (``ArrowEvalPython`` or a :func:`python_kernel_count`
+    node)."""
     return len(re.findall(r"\n\(\d+\) BatchEvalPython", plan_text(df)))
 
 
-def pandas_kernel_count(df: DataFrame) -> int:
+def python_kernel_count(df: DataFrame) -> int:
     """Number of Arrow-batched Python kernels (mapInPandas /
-    applyInPandas) in the plan — the assertable marker that a GEMM-style
-    operator runs distributed on executors rather than via a driver
-    collect (a toPandas collect never appears as a plan node)."""
+    applyInPandas / mapInArrow / applyInArrow) in the plan — the
+    assertable marker that a GEMM-style operator runs distributed on
+    executors rather than via a driver collect (a toPandas collect never
+    appears as a plan node)."""
     return len(
-        re.findall(r"FlatMapGroupsInPandas|MapInPandas", plan_text(df))
+        re.findall(
+            r"FlatMapGroupsInPandas|MapInPandas|FlatMapGroupsInArrow|MapInArrow",
+            plan_text(df),
+        )
     )
 
 

@@ -684,7 +684,7 @@ def dedup_simhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_component_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate GROUP resolution: the simhash pair graph collapsed
-    into connected components (min-label propagation, llm/dedup.py
+    into connected components (large-star/small-star rounds, llm/dedup.py
     connected_components) — A~B and B~C land in one group even when A~C
     was never emitted, which is what survivor selection actually needs.
     The oracle replays transitive closure with a recursive CTE, so the
@@ -774,7 +774,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: clustering turns the quadratic all-pairs step into
     |cluster|^2 per cluster — n_centroids grows with the corpus so
     cluster size stays bounded (the SemDeDup recipe) — and each cluster's
-    similarity tile is ONE numpy GEMM inside ``applyInPandas`` (the
+    similarity tile is ONE numpy GEMM inside ``applyInArrow`` (the
     blocked-kernel rule from pairwise_cosine_gemm, run per cluster as its
     docstring prescribes: the expression form compiles a 64-term dot
     product into the join's generated consume method, which overflows
@@ -784,7 +784,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     association and round-to-4 as DuckDB's list_cosine_similarity, so a
     last-ulp difference cannot flip a pair."""
     import numpy as np
-    import pandas as pd
 
     from financial_data_engineering_spark.llm.caching import persist_tracked
 
@@ -800,11 +799,13 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def tile(key, pdf):
-        ids = pdf["vec_id"].to_numpy()
+    def tile(key, table):
+        import pyarrow as pa
+
+        ids = table["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        mat = sim.vec_matrix(pdf["emb"].iloc[order])
+        mat = sim.arrow_matrix(table["emb"], 64)[order]
         norms = np.linalg.norm(mat, axis=1)
         safe = np.where(norms == 0.0, 1.0, norms)
         out_b = []
@@ -817,11 +818,11 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep = (cos >= _SEM_TAU) & (ids[lo:hi, None] < ids[None, :])
             out_b.append(ids[np.nonzero(keep)[1]])
         b_ids = np.concatenate(out_b) if out_b else np.array([], dtype="int64")
-        return pd.DataFrame(
-            {"cluster": np.full(len(b_ids), key[0]), "b_id": b_ids}
+        return pa.table(
+            {"cluster": np.full(len(b_ids), key[0].as_py()), "b_id": b_ids}
         )
 
-    pairs = assign.groupBy("cluster").applyInPandas(
+    pairs = assign.groupBy("cluster").applyInArrow(
         tile, schema="cluster long, b_id long"
     )
     sizes = assign.groupBy("cluster").agg(

@@ -79,7 +79,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly). Thin-bucket queries that single-probe LSH starves can fill
     their k; candidate cost ≈ 2× while the corpus is still bucketed once."""
     emb = load(spark, "embeddings", sf_dir)
-    out = sim.lsh_topk_multiprobe(
+    out = sim.lsh_topk(
         emb.filter(F.col("vec_id") < _N_QUERIES),
         emb,
         k=_TOP_K,

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from financial_data_engineering_spark.schemas import SCHEMAS, TPCH_TABLES
+from financial_data_engineering_spark.schemas import SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -31,13 +31,3 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
         reader = reader.schema(schema)
     return reader.parquet(path)
 
-
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every benchmark table into a dict."""
-    return {name: load(spark, name, sf_dir) for name in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view for the SQL surface."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -247,7 +247,7 @@ def test_lsh_multiprobe_recall_dominates_single_probe(spark):
     )
     queries = emb.filter(F.col("vec_id") < 3)
     single = sim.lsh_topk(queries, emb, k=5, n_planes=3, dim=4).collect()
-    multi = sim.lsh_topk_multiprobe(
+    multi = sim.lsh_topk(
         queries, emb, k=5, n_planes=3, n_probes=2, dim=4
     ).collect()
     s_by_q: dict[int, list] = {}
@@ -270,6 +270,33 @@ def test_lsh_multiprobe_recall_dominates_single_probe(spark):
         key = (r["query_id"], r["neighbor_id"])
         if key in m_pairs:
             assert m_pairs[key] == r["cos"]
+
+
+def test_arrow_matrix_reads_only_the_arrays_own_rows():
+    """A sliced list array (offset != 0, how a batch slice arrives) and a
+    ``take``n one convert to exactly np.stack of their own rows, and so
+    does a chunked column."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(7)
+    arr = pa.array(
+        rng.standard_normal((10, 4)).astype("float32").tolist(),
+        type=pa.list_(pa.float32()),
+    )
+
+    def stacked(a):
+        return np.stack([np.asarray(v, dtype="float64") for v in a.to_pylist()])
+
+    sliced = arr.slice(3, 5)
+    assert sliced.offset == 3
+    taken = arr.take(pa.array([7, 2, 2, 9]))
+    chunked = pa.chunked_array([arr.slice(0, 4), arr.slice(4)])
+    for a in (sliced, taken, chunked):
+        mat = sim.arrow_matrix(a, 4)
+        assert mat.dtype == np.float64
+        np.testing.assert_array_equal(mat, stacked(a))
+    np.testing.assert_array_equal(sim.arrow_matrix(sliced), stacked(sliced))
 
 
 def test_gemm_pairwise_matches_expression_cosine(spark):

@@ -135,7 +135,7 @@ SHUFFLE_BUDGET = {
     # control-plane), the bloom build agg runs at operator build
     "dedup_bloom_screen": 2,
     # post-persist per-cluster GEMM tile (one cluster shuffle into
-    # applyInPandas) + pair/size aggs + small left join + sort; the
+    # applyInArrow) + pair/size aggs + small left join + sort; the
     # k-means/assignment jobs run at operator build, outside this plan
     "dedup_semantic_clusters": 5,
     # the exchanges inside the persisted fingerprint/band relations count

@@ -5,12 +5,14 @@ means a silent 100×-scale cost even while results stay correct.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from financial_data_engineering_spark import plans
 from financial_data_engineering_spark import queries as q
-from tests.conftest import SF_MEDIUM
+from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
 def _df(spark, name):
@@ -145,9 +147,28 @@ def test_embedding_gemm_runs_distributed(spark):
     scan must prune to the two needed columns — the contract that replaced
     the driver-side toPandas collect."""
     df = _df(spark, "dedup_embedding_cosine")
-    assert plans.pandas_kernel_count(df) >= 1
+    assert plans.python_kernel_count(df) >= 1
     (scan,) = plans.scans(df)
     assert set(scan.read_columns) == {"vec_id", "embedding"}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_brute_force_cosine",
+        "ann_lsh_cosine",
+        "ann_ivf_cosine",
+        "ann_ivfpq_rerank",
+        "dedup_embedding_cosine",
+        "dedup_semantic_clusters",
+    ],
+)
+def test_vector_kernels_stay_on_arrow(spark, name):
+    """Numpy kernels over an embedding column take Arrow batches
+    (mapInArrow / applyInArrow); a pandas node here means vectors are
+    rebuilt row by row from a pandas object series again."""
+    text = plans.plan_text(q.all_queries()[name](spark, SF_SMALL))
+    assert not re.search(r"MapInPandas|FlatMapGroupsInPandas", text), name
 
 
 def test_asof_join_plan_stays_bounded(spark):
